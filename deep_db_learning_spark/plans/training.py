@@ -188,9 +188,27 @@ REGRESSION_BENCH_CONFIG = {"epochs": 6, "lr": 0.2}
 
 @dataclass
 class TrainResult:
+    """What a trainer returns: the loss trajectory, the per-split
+    metric, and the trained parameters.
+
+    ``train_relational_stack`` also carries the scored root frame
+    ``(node_id, label, split, pred)`` its metric was aggregated from,
+    the assembly ``meta`` (regression's de-standardization), and the
+    inputs both came from; ``predict_relational_stack`` returns that
+    frame for the same inputs instead of scoring again. The frame is
+    lineage-cut, so it pins root-sized checkpoint blocks until the
+    result is dropped. Inputs are static, the contract
+    ``profiling.analyzer._PROFILE_CACHE`` and
+    ``operators.graph._PACKED_STATS`` already hold: the table frames
+    are matched by identity, so after mutating a source, pass freshly
+    read frames."""
+
     losses: list[float]  # per-epoch TRAIN loss (mean cross-entropy)
     accuracy: dict[str, float] = field(default_factory=dict)  # split → acc
     params: dict = field(default_factory=dict)  # "emb", "W", "b" (numpy)
+    scored: DataFrame | None = field(default=None, repr=False, compare=False)
+    meta: dict | None = field(default=None, repr=False, compare=False)
+    scored_from: tuple | None = field(default=None, repr=False, compare=False)
 
 
 def assemble_training_frame(

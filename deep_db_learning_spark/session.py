@@ -14,6 +14,14 @@ so local tests, bench runs, and cluster jobs share them:
   cross-engine parity) assumes it.
 - **Arrow enabled** for pandas UDF exchange (the minhash/attention
   kernels are Arrow-batched).
+- **codegen cache of 1024 classes** (Spark's default is 100). One
+  relational op (slice, stack training and predict) generates about
+  310 distinct whole-stage classes and one crawl batch about 125, so
+  at 100 entries every warm op recompiled about 400 of them and paid
+  the compile and its JIT again. 1024 holds both working sets with
+  headroom and still bounds the cache (and the metaspace its classes
+  pin) in a long-lived session. A static conf: it takes effect only
+  when this call creates the session.
 
 The reference has no equivalent knob surface (single-process pandas);
 this is the Spark-native replacement for its ad-hoc materialization
@@ -25,6 +33,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# whole-stage codegen classes kept per JVM (see the module docstring)
+CODEGEN_CACHE_ENTRIES = "1024"
 
 
 def make_session(
@@ -57,6 +68,7 @@ def make_session(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
         # reclaim reliable checkpoint() files once their frames are
         # GC'd — without this, cut_lineage's cluster posture (a
         # configured checkpoint dir) leaks storage across the iterative

@@ -3,6 +3,8 @@ import os
 import pytest
 from pyspark.sql import SparkSession
 
+from deep_db_learning_spark.session import CODEGEN_CACHE_ENTRIES
+
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_T2 = "/root/testdata/sf0.01"
 
@@ -15,6 +17,7 @@ def spark():
         .appName("deep-db-learning-spark-tests")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
         .getOrCreate()

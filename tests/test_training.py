@@ -253,6 +253,34 @@ def test_two_layer_descending_trend(db):
         assert seq[-1] < seq[0]
 
 
+def test_child_frame_cardinality_is_distinct_count_plus_one(spark):
+    """The layer cardinality comes from the stats pass as
+    countDistinct(cat) + 1; dict_encode's code contract (NULL→0, sorted
+    non-null values→1..n) makes that max(code) + 1, with NULLs present
+    and on an all-NULL column alike."""
+    from pyspark.sql import functions as F
+
+    from deep_db_learning_spark.plans.stack import (
+        EdgeLayerSpec,
+        _assemble_child_frame,
+    )
+
+    spec = EdgeLayerSpec(
+        table="kids", fk="pid", cat_col="cat", num_cols=("x",), key="id"
+    )
+    for cats, want in (
+        (["b", None, "a", "b", None, "c", "a", None], 4),
+        ([None] * 8, 1),
+    ):
+        kids = spark.createDataFrame(
+            [(i, i % 3, c, float(i)) for i, c in enumerate(cats)],
+            "id bigint, pid bigint, cat string, x double",
+        )
+        of, card = _assemble_child_frame({"kids": kids}, spec, seed=1)
+        assert card == want
+        assert of.agg(F.max("code")).first()[0] + 1 == want
+
+
 def test_two_layer_folds_partitioning_invariant(db, spark):
     """The decimal folds behind hbar and dW are bit-identical under
     different partitionings of the layer frame — the core determinism
@@ -320,7 +348,7 @@ def test_stack_second_edge_matches_twin(db):
     hard-coded shape: the same stack trainer runs a customer←events
     layer (different child table, fk, categorical, and numeric
     feature; no nested child_agg) and the generic twin reproduces the
-    trajectory bit-for-bit."""
+    trajectory (and the per-split accuracy) bit-for-bit."""
     from deep_db_learning_spark.plans.stack import (
         EdgeLayerSpec,
         train_relational_stack,
@@ -341,13 +369,16 @@ def test_stack_second_edge_matches_twin(db):
         db.tables, db.primary_keys, db.foreign_keys,
         layers=(spec,), epochs=2, n_batches=2, seed=11, neighbor_budget=5,
     )
-    twin = _stack_losses(
+    twin, twin_acc = _stack_losses(
         "/root/testdata/sf0.001", (spec,),
-        epochs=2, n_batches=2, seed=11, neighbor_budget=5,
+        epochs=2, n_batches=2, seed=11, neighbor_budget=5, with_accuracy=True,
     )
     assert res.losses == twin
     assert len(res.losses) == 4
     assert res.losses[-1] < res.losses[0]
+    # the classification head's per-split accuracy, from the scored
+    # root frame, equals the twin's driver-side argmax loop
+    assert res.accuracy == twin_acc
 
 
 def test_stack_three_layer_matches_twin(db):
@@ -391,9 +422,8 @@ def test_stack_three_layer_matches_twin(db):
 def test_stack_scale_swaps_bit_identical(db):
     """Ask r4 #2 — the scale paths ARE the defaults and are bit-equal
     to the driver-side reference paths: broadcast semi-join batching
-    vs the isin literal, and the joined-hbar Arrow-UDF eval vs the
-    collected-root loop. Same losses, same accuracies, same
-    parameters."""
+    vs the isin literal, sharded roots vs the up-front collect. Same
+    losses, same accuracies, same parameters."""
     import numpy as np
 
     from deep_db_learning_spark.plans.stack import train_relational_stack
@@ -401,11 +431,11 @@ def test_stack_scale_swaps_bit_identical(db):
     kw = dict(epochs=2, n_batches=2, seed=42, neighbor_budget=5)
     scale = train_relational_stack(
         db.tables, db.primary_keys, db.foreign_keys,
-        _batch_mode="semi", _eval_mode="join", _root_mode="shard", **kw,
+        _batch_mode="semi", _root_mode="shard", **kw,
     )
     ref = train_relational_stack(
         db.tables, db.primary_keys, db.foreign_keys,
-        _batch_mode="isin", _eval_mode="collect", _root_mode="collect", **kw,
+        _batch_mode="isin", _root_mode="collect", **kw,
     )
     assert scale.losses == ref.losses
     assert scale.accuracy == ref.accuracy
@@ -454,7 +484,7 @@ def test_stack_regression_matches_twin(db):
     train-standardized c_acctbal label — the MSELoss branch) trains
     through the deep layers too: engine and twin agree bit-for-bit on
     every step loss AND on the decimal-folded per-split MSE, and the
-    joined-hbar eval equals the collect eval exactly."""
+    driver-side batching/root reference paths reproduce both exactly."""
     from dataclasses import replace
 
     from deep_db_learning_spark.plans.stack import (
@@ -492,7 +522,7 @@ def test_stack_regression_matches_twin(db):
     assert res.accuracy == twin_mse
     ref = train_relational_stack(
         db.tables, db.primary_keys, db.foreign_keys,
-        _batch_mode="isin", _eval_mode="collect", _root_mode="collect", **kw,
+        _batch_mode="isin", _root_mode="collect", **kw,
     )
     assert ref.losses == res.losses
     assert ref.accuracy == res.accuracy
@@ -753,6 +783,8 @@ def test_tabnet_head_trains_through_fit_fn(db):
     assert np.any(res.params["b"] != 0.0)
     assert "train" in res.accuracy and "test" in res.accuracy
     assert res.accuracy["train"] > 1.0 / k  # better than uniform guessing
+    # a fit_fn head scores its own way: no stack scored frame to reuse
+    assert res.scored is None and res.scored_from is None
 
 
 def test_tabnet_exact_mode_batch_independent(spark):
@@ -911,10 +943,25 @@ def test_frame_fold_overflow_guard():
         _require_nonnull_sums(bad, 2)
 
 
-def test_predict_relational_stack_matches_trained_accuracy(db):
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a Spark job group; return its result and the
+    number of jobs the group fired."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_predict_relational_stack_matches_trained_accuracy(db, tmp_path):
     """Batch inference (predict_relational_stack) reproduces the
-    trainer's own per-split accuracy exactly — same forward folds, same
-    Arrow head — and yields one prediction per labeled root."""
+    trainer's own per-split accuracy exactly and yields one prediction
+    per labeled root. From the TrainResult it hands back the frame the
+    trainer scored — predict plus a Parquet write is at most 2 Spark
+    jobs — and that frame equals what the params-dict path (assemble,
+    fold, score) computes."""
     from pyspark.sql import functions as F
 
     from deep_db_learning_spark.plans.stack import (
@@ -928,11 +975,20 @@ def test_predict_relational_stack_matches_trained_accuracy(db):
     res = train_relational_stack(
         db.tables, db.primary_keys, db.foreign_keys, **kw
     )
-    preds = predict_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys, res, **{
-            k: v for k, v in kw.items() if k not in ("epochs", "n_batches")
-        }
-    )
+    out_dir = str(tmp_path / "preds")
+
+    def predict_and_write():
+        p = predict_relational_stack(
+            db.tables, db.primary_keys, db.foreign_keys, res, **{
+                k: v for k, v in kw.items() if k not in ("epochs", "n_batches")
+            }
+        )
+        p.write.parquet(out_dir)
+        return p
+
+    preds, n_jobs = _jobs_in_group(db.spark, "predict-reuse", predict_and_write)
+    assert preds is res.scored
+    assert n_jobs <= 2
     rows = preds.collect()
     assert len(rows) == db.df("customer").count()
     assert all(r["pred"] is not None for r in rows)
@@ -949,9 +1005,48 @@ def test_predict_relational_stack_matches_trained_accuracy(db):
             k: v for k, v in kw.items() if k not in ("epochs", "n_batches")
         }
     )
+    assert again is not res.scored
     a = sorted((r["node_id"], r["pred"]) for r in rows)
     b = sorted((r["node_id"], r["pred"]) for r in again.collect())
     assert a == b
+    written = db.spark.read.parquet(out_dir)
+    assert sorted((r["node_id"], r["pred"]) for r in written.collect()) == a
+
+
+def test_predict_relational_stack_rebuilds_for_other_inputs(db):
+    """The carried scored frame is reused only for the inputs it came
+    from: another seed, or a re-read of the same tables (new frame
+    objects), takes the assemble-and-score path — and still scores
+    exactly what a fresh predict from the params computes."""
+    from deep_db_learning_spark.plans.stack import (
+        predict_relational_stack,
+        train_relational_stack,
+    )
+    from conftest import SF_SMOKE
+    from deep_db_learning_spark.sources import load_testdata
+
+    res = train_relational_stack(
+        db.tables, db.primary_keys, db.foreign_keys,
+        epochs=1, n_batches=2, seed=42, neighbor_budget=5,
+    )
+
+    def scored(d, result, seed):
+        out = predict_relational_stack(
+            d.tables, d.primary_keys, d.foreign_keys, result,
+            seed=seed, neighbor_budget=5,
+        )
+        rows = sorted((r["node_id"], r["split"], r["pred"]) for r in out.collect())
+        return out, rows
+
+    other_seed, rows = scored(db, res, 7)
+    assert other_seed is not res.scored
+    assert rows == scored(db, res.params, 7)[1]
+
+    reread = load_testdata(db.spark, SF_SMOKE)
+    fresh, rows = scored(reread, res, 42)
+    assert fresh is not res.scored
+    assert rows == scored(db, res, 42)[1]
+    assert rows == scored(reread, res.params, 42)[1]
 
 
 def test_predict_relational_stack_regression_denormalizes(db):
@@ -978,6 +1073,18 @@ def test_predict_relational_stack_regression_denormalizes(db):
     assert "pred_raw" in preds.columns
     # de-standardization is the affine map recorded at assembly
     assert r["pred_raw"] != r["pred"]
+    # the reused frame carries the assembly meta the rebuild path
+    # recomputes: identical pred_raw either way
+    rebuilt = predict_relational_stack(
+        db.tables, db.primary_keys, db.foreign_keys, res.params, **{
+            k: v for k, v in kw.items() if k not in ("epochs", "n_batches")
+        }
+    )
+    assert sorted(
+        (r["node_id"], r["pred"], r["pred_raw"]) for r in preds.collect()
+    ) == sorted(
+        (r["node_id"], r["pred"], r["pred_raw"]) for r in rebuilt.collect()
+    )
 
 
 def test_save_load_stack_model_round_trip(db, tmp_path):
