@@ -1340,7 +1340,7 @@ def q_bfs_per_root(spark, sf_dir):
     )
 
 
-def q_bfs_per_root_modes(spark, sf_dir):
+def q_bfs_per_root_and_global(spark, sf_dir):
     """The driver slot for the BFS family (r14 rotation): the
     per-root minibatch shape (:func:`q_bfs_per_root` — bench keeps
     timing the narrower paths so cross-round timing stays comparable)
@@ -4213,7 +4213,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "neighbor_sample": q_neighbor_sample,
         "node_split": q_node_split,
         # r14 rotation: + the global whole-frontier BFS mode
-        "bfs_per_root": q_bfs_per_root_modes,
+        "bfs_per_root": q_bfs_per_root_and_global,
         # message passing / training (N families)
         "embed_customer": q_embed_customer,
         "message_mean_conv": q_message_mean_conv,

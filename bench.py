@@ -199,7 +199,7 @@ def main() -> None:
         # contention-sensitive entry) is replaced by the production
         # LSH→exact-verify composition at the same (k=9, t=0.7); the
         # exact shape remains covered by the registry's ngram_jaccard
-        # and by tools/scaleprobe.py
+        # and by the 10×-facts scaleprobe sweeps recorded in BASELINE.md
         "lsh_verify_pairs_t07",
         "data_mixing",
         "clean_corpus",

@@ -186,8 +186,3 @@ def cast_num(c: Column, fill: float | None = None) -> Column:
     if fill is not None:
         out = F.coalesce(out, F.lit(float(fill)))
     return out
-
-
-def fillna_features(df: DataFrame, value: float = 0.0, columns: list[str] | None = None) -> DataFrame:
-    """F11: whole-frame fillna (``heterodata_builder.py:170-172``)."""
-    return df.na.fill(value, subset=columns)

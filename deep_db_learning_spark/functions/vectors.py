@@ -31,8 +31,3 @@ def norm(a: Column) -> Column:
 
 def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_normalize(a: Column) -> Column:
-    n = norm(a)
-    return F.transform(a, lambda v: v.cast("double") / n)

@@ -489,16 +489,6 @@ def sample_frames(
     return media.mapInPandas(mapper, FRAME_SCHEMA)
 
 
-def audio_features_stub(*_args, **_kw):
-    """Placeholder for compressed-audio features (mp3/ogg need
-    torchaudio/librosa/ffmpeg). PCM WAV needs no external library —
-    see :func:`audio_features`, which is REAL."""
-    raise NotImplementedError(
-        "compressed audio features require torchaudio or librosa; "
-        "for PCM WAV use audio_features()"
-    )
-
-
 def decode_wav_bytes(content: bytes):
     """Decode a PCM WAV container to (sample_rate, mono float64 signal
     in [-1, 1]) with the stdlib ``wave`` module — a real decoder, not a

@@ -131,13 +131,6 @@ def sample_neighbors_two_phase(
     )
 
 
-def sample_neighbors_all(
-    edges: dict[str, DataFrame], k: int, seed: int = 42
-) -> dict[str, DataFrame]:
-    """N27 across every edge type (the HGTLoader 50-per-type budget)."""
-    return {et: sample_neighbors(df, k, seed) for et, df in edges.items()}
-
-
 def stratified_node_split(
     nodes: DataFrame,
     strata_col: str,

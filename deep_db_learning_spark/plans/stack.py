@@ -19,7 +19,8 @@ decimal fold of dec9-quantized components — so the whole trajectory is
 bit-reproducible under any partitioning and recomputed by the
 independent twin (``plans/train_oracle.py:_stack_losses``).
 
-Scale posture (the r4/r5 swaps, now the DEFAULT paths):
+Scale posture (each capability has one path; the trajectory is
+pinned by the independent twin, not by a second engine path):
 
 - **root sharding**: the train-split root set is never collected
   whole — batch assignment is a Spark-side portable knuth hash and
@@ -27,10 +28,9 @@ Scale posture (the r4/r5 swaps, now the DEFAULT paths):
   residency; the reference analog is the batched seed nodes of
   ``HGTLoader``, ``experiments/blueprint_mlflow.py:119-133``).
 - **batching**: per-step receptive fields are pruned with broadcast
-  semi-joins on a batch-key frame (never a driver-side ``isin``
-  literal) — level 1 against the batch roots, level i against the kept
-  level-(i-1) keys — and materialized ONCE per batch (the
-  portable-hash batches never change across epochs).
+  semi-joins on a batch-key frame — level 1 against the batch roots,
+  level i against the kept level-(i-1) keys — and materialized ONCE
+  per batch (the portable-hash batches never change across epochs).
 - **gradients down the stack**: dL/dhbar flows as a JOINED frame
   ``(key, gout, deg)`` — level 1's comes from the driver head step
   (bounded by batch size), deeper levels are produced by a per-row
@@ -759,8 +759,6 @@ def train_relational_stack(
     neighbor_budget: int | None = 5,
     task: str = "classification",
     fit_fn=None,
-    _batch_mode: str = "semi",
-    _root_mode: str = "shard",
 ) -> TrainResult:
     """Minibatch SGD through a depth-(L+1) stack declared by
     ``layers`` — see the module docstring for the model, the
@@ -787,27 +785,17 @@ def train_relational_stack(
     :func:`predict_relational_stack` to reuse (see
     :class:`~.training.TrainResult`).
 
-    ``_batch_mode``/``_root_mode`` select the scale paths ("semi",
-    "shard" — the defaults) or the driver-side reference paths
-    ("isin", "collect"); both members of each pair are bit-identical
-    by construction and pinned so in tests. ``_root_mode="shard"``
-    (VERDICT r5 #1) computes the portable-hash batch assignment IN
-    SPARK and collects only the current batch's root rows per step,
-    so driver residency in the training loop is O(batch), never
-    O(roots); "collect" is the original up-front all-train-roots
-    materialization (the reference trainer's memory shape,
-    ``experiments/blueprint_mlflow.py:119-133`` seed-node batches).
+    Driver residency in the training loop is O(batch), never O(roots):
+    the portable-hash batch assignment runs in Spark and each step
+    collects only its own batch's root rows, node_id-sorted (the
+    reference's seed-node batches,
+    ``experiments/blueprint_mlflow.py:119-133``).
     """
-    from ..functions.hashing import knuth_hash, knuth_hash_py
+    from ..functions.hashing import knuth_hash
 
     L = len(layers)
     if L == 0:
         raise ValueError("train_relational_stack needs at least one layer spec")
-    if _batch_mode == "isin" and _root_mode != "collect":
-        raise ValueError(
-            "_batch_mode='isin' needs the driver-side root ids — "
-            "use _root_mode='collect' with it"
-        )
     for i in range(L - 1):
         if layers[i].key is None:
             raise ValueError(
@@ -837,78 +825,38 @@ def train_relational_stack(
     if fit_fn is not None:
         return fit_fn(frame, frames, meta)
 
-    # the seed-node set. "shard" computes the batch assignment in
-    # Spark with the SAME portable knuth hash and collects only one
-    # batch's rows at a time; "collect" materializes all train roots
-    # up-front (the reference trainer's memory shape). Both orders are
-    # node_id-sorted per batch, so the head-step arrays — and hence
-    # the whole trajectory — are bit-identical between the modes.
-    train_f = frame.filter(F.col("split") == "train").select(
-        "node_id", "code", "nums", "label"
-    )
+    # the seed-node set: the batch assignment is the portable knuth
+    # hash computed in Spark; each step collects only its own batch's
+    # rows, node_id-sorted, so the head-step arrays are the twin's
     y_dtype = np.float64 if task == "regression" else np.int64
+    train_f = cut_lineage(
+        frame.filter(F.col("split") == "train")
+        .select("node_id", "code", "nums", "label")
+        .withColumn(
+            "__batch", knuth_hash(F.col("node_id"), seed + 7) % F.lit(n_batches)
+        ),
+        eager=True,
+    )
+    present = {
+        int(r["__batch"]) for r in train_f.select("__batch").distinct().collect()
+    }
+    if present != set(range(n_batches)):
+        raise ValueError(
+            "train_relational_stack: a batch is empty — lower n_batches "
+            "or grow the input"
+        )
 
-    def _to_arrays(rows):
-        rows.sort(key=lambda r: r["node_id"])
+    def batch_arrays(bi):
+        rows = sorted(
+            train_f.filter(F.col("__batch") == bi).drop("__batch").collect(),
+            key=lambda r: r["node_id"],
+        )
         return (
             np.array([r["node_id"] for r in rows], dtype=np.int64),
             np.array([r["code"] for r in rows], dtype=np.int64),
             np.array([list(r["nums"]) for r in rows], dtype=np.float64),
             np.array([r["label"] for r in rows], dtype=y_dtype),
         )
-
-    if _root_mode == "shard":
-        train_f = cut_lineage(
-            train_f.withColumn(
-                "__batch", knuth_hash(F.col("node_id"), seed + 7) % F.lit(n_batches)
-            ),
-            eager=True,
-        )
-        present = {
-            int(r["__batch"])
-            for r in train_f.select("__batch").distinct().collect()
-        }
-        if present != set(range(n_batches)):
-            raise ValueError(
-                "train_relational_stack: a batch is empty — lower n_batches "
-                "or grow the input"
-            )
-
-        def batch_arrays(bi):
-            return _to_arrays(
-                train_f.filter(F.col("__batch") == bi).drop("__batch").collect()
-            )
-
-        def batch_keys_df(bi):
-            return F.broadcast(
-                train_f.filter(F.col("__batch") == bi).select(
-                    F.col("node_id").alias("parent_key")
-                )
-            )
-
-    else:
-        ids, codes, nums, y = _to_arrays(train_f.collect())
-        batch_of = np.array(
-            [knuth_hash_py(int(i), seed + 7) % n_batches for i in ids],
-            dtype=np.int64,
-        )
-        if set(np.unique(batch_of)) != set(range(n_batches)):
-            raise ValueError(
-                "train_relational_stack: a batch is empty — lower n_batches "
-                "or grow the input"
-            )
-
-        def batch_arrays(bi):
-            sel = batch_of == bi
-            return ids[sel], codes[sel], nums[sel], y[sel]
-
-        def batch_keys_df(bi):
-            return F.broadcast(
-                spark.createDataFrame(
-                    [(int(i),) for i in ids[batch_of == bi]],
-                    "parent_key bigint",
-                )
-            )
 
     k = meta["n_classes"]
     m = meta["n_num"]
@@ -933,20 +881,20 @@ def train_relational_stack(
 
     # receptive-field pruning, built ONCE per batch (the portable-hash
     # batches never change across epochs): broadcast semi-joins down
-    # the stack (or the driver-side isin literal, for the pinned
-    # equality test), materialized so every epoch's steps reuse the
-    # pruned frames instead of re-running the join chain per action
+    # the stack, materialized so every epoch's steps reuse the pruned
+    # frames instead of re-running the join chain per action
     batch_frames: list[list[DataFrame]] = []
     for bi in range(n_batches):
-        f_b: list[DataFrame] = []
-        if _batch_mode == "semi":
-            cur = frames[0].join(batch_keys_df(bi), "parent_key", "leftsemi")
-        else:
-            bids = ids[batch_of == bi]
-            cur = frames[0].filter(
-                F.col("parent_key").isin([int(i) for i in bids])
+        batch_keys = F.broadcast(
+            train_f.filter(F.col("__batch") == bi).select(
+                F.col("node_id").alias("parent_key")
             )
-        f_b.append(cut_lineage(cur, eager=True))
+        )
+        f_b = [
+            cut_lineage(
+                frames[0].join(batch_keys, "parent_key", "leftsemi"), eager=True
+            )
+        ]
         for i in range(1, L):
             parent_keys = f_b[i - 1].select(
                 F.col("child_key").alias("parent_key")

@@ -791,13 +791,14 @@ def _trompt_full_losses(
 
 
 def train_loss_oracle_sql(epochs: int = 8, seed: int = 42) -> str:
-    """The ``train_relational`` oracle: recompute BOTH loss trajectories
-    (full-batch GD and the minibatch-SGD loop over budgeted per-root
-    subgraphs) with the independent twins above and pin them as a
-    VALUES literal (``repr`` doubles round-trip exactly through DuckDB's
-    strtod). The data directory defaults to the driver's correctness SF;
-    selfcheck overrides via ``SPARK_GRAFT_ORACLE_SF`` when run at
-    another SF."""
+    """The ``train_relational`` oracle: recompute all seven loss
+    trajectories — full-batch GD, minibatch SGD over budgeted per-root
+    subgraphs, regression, the two- and three-layer stacks, and the
+    TabNet and Trompt heads — with the independent twins and pin them
+    as a VALUES literal (``repr`` doubles round-trip exactly through
+    DuckDB's strtod). The data directory defaults to the driver's
+    correctness SF; selfcheck overrides via ``SPARK_GRAFT_ORACLE_SF``
+    when run at another SF."""
     from .stack import THREE_LAYER_BENCH_CONFIG
     from .tabnet_head import TABNET_HEAD_BENCH_CONFIG, TROMPT_HEAD_BENCH_CONFIG
     from .training import (

@@ -13,18 +13,21 @@ is huge. So the split is:
 - **parameters on the driver** (numpy; seeded, deterministic),
 - **every data-parallel pass on Spark**: the design matrix is assembled
   once (graph build → neighbor aggregation → standardization — all
-  DataFrame ops) and persisted; each epoch is ONE Spark job over it — a
-  vectorized Arrow UDF computes per-row loss / residual / flattened
-  gradient outer-product, and a single ``groupBy(code)`` aggregates
-  everything with exact decimal folds.
+  DataFrame ops) and persisted; each SGD step is ONE Spark job over its
+  batch — a vectorized Arrow UDF computes per-row loss / residual /
+  flattened gradient outer-product, and a single ``groupBy(code)``
+  aggregates everything with exact decimal folds.
 
-The decimal folds make each epoch's gradients **bit-deterministic**
-under any partitioning (decimal addition is associative — the
-``exact_agg`` argument), so the whole training trajectory — losses,
-parameters, predictions — is reproducible run-to-run and
-oracle-checkable against pinned goldens. Full-batch gradient descent on
-a convex objective (softmax cross-entropy, fixed lr, optional L2)
-guarantees the train loss decreases monotonically at a small enough lr.
+The full-batch classifier, the minibatch classifier and the regressor
+run ONE loop (:func:`_sgd_head`); full-batch is that loop with a single
+batch. The decimal folds make each step's gradients
+**bit-deterministic** under any partitioning (decimal addition is
+associative — the ``exact_agg`` argument), so the whole training
+trajectory — losses, parameters, predictions — is reproducible
+run-to-run and oracle-checkable against pinned goldens. Full-batch
+gradient descent on a convex objective (softmax cross-entropy, fixed
+lr, optional L2) guarantees the train loss decreases monotonically at
+a small enough lr.
 
 This is exactly the reference's join-apply-update shape expressed
 relationally: *join* the embedding table onto the fact rows (the code
@@ -93,7 +96,7 @@ def _gradient_pass(df, E, Wc, bc, dim, m, k, card, task="classification"):
     exact decimal sums per code group and accumulated on the driver.
     Returns ``(loss_sum, resid_tot, GW, resid_by_code)`` — the raw
     (unnormalized, unregularized) sums, bit-deterministic under any
-    partitioning. Shared by the full-batch and minibatch trainers.
+    partitioning. The one gradient job of :func:`_sgd_head`.
 
     ``task``: ``"classification"`` (softmax cross-entropy over k
     classes, int labels) or ``"regression"`` (k=1 linear output,
@@ -361,6 +364,104 @@ def assemble_training_frame(
     return frame, meta
 
 
+def _sgd_head(
+    frame: DataFrame,
+    meta: dict,
+    dim: int,
+    epochs: int,
+    n_batches: int,
+    lr: float,
+    l2: float,
+    seed: int,
+    task: str,
+) -> TrainResult:
+    """The one SGD loop behind the three 1-layer trainers: seeded init,
+    the train split persisted with its portable-hash batch id, one
+    :func:`_gradient_pass` job per step, a float64 driver update, and
+    one per-split evaluation (accuracy, or MSE for regression).
+
+    Train roots go to ``n_batches`` by the portable Knuth hash of their
+    node id — deterministic on any engine and partitioning (a
+    ``rand()`` batcher would reshuffle rows between runs). With
+    ``n_batches=1`` the single batch is the whole train split, so each
+    step is a full-batch gradient-descent epoch.
+
+    Per-step loss = batch mean loss + the L2 term at the step-start
+    parameters."""
+    import numpy as np
+
+    from ..functions.hashing import knuth_hash
+
+    k = meta["n_classes"]
+    m = meta["n_num"]
+    card = meta["n_codes"]
+    rng = np.random.default_rng(seed)
+    emb = rng.uniform(-0.5, 0.5, size=(card, dim))
+    W = rng.uniform(-0.5, 0.5, size=(dim + m, k)) * 0.1
+    b = np.zeros(k)
+
+    train = (
+        frame.filter(F.col("split") == "train")
+        .select(
+            (knuth_hash(F.col("node_id"), seed + 7) % n_batches).alias("batch"),
+            "code",
+            "nums",
+            "label",
+        )
+    )
+    sc = train.sparkSession.sparkContext
+    parts = max(1, min(sc.defaultParallelism, 8))
+    train = train.repartition(parts).persist()
+    try:
+        batch_sizes = {
+            r["batch"]: r["count"] for r in train.groupBy("batch").count().collect()
+        }
+        # an empty batch shows up as a MISSING key (groupBy never emits
+        # a 0-count row), so presence of every batch id is the check
+        if set(batch_sizes) != set(range(n_batches)):
+            raise ValueError(
+                f"a training batch is empty (sizes={batch_sizes}) — "
+                "lower n_batches or grow the input"
+            )
+
+        losses: list[float] = []
+        for _ in range(epochs):
+            for bi in range(n_batches):
+                n_b = batch_sizes[bi]
+                E, Wc, bc = emb.copy(), W.copy(), b.copy()
+                loss_sum, resid_tot, GW, resid_by_code = _gradient_pass(
+                    train.filter(F.col("batch") == bi).select(
+                        "code", "nums", "label"
+                    ),
+                    E, Wc, bc, dim, m, k, card, task=task,
+                )
+                loss = loss_sum / n_b + 0.5 * l2 * (
+                    float((W * W).sum()) + float((emb * emb).sum())
+                )
+                losses.append(loss)
+                # update: decoder, bias, and the embedding code table
+                # (join-apply-update: dE[c] = Σ_{rows with code c} resid ·
+                # Wᵀ), normalized by the BATCH size. All three gradients
+                # use the STEP-START weights (Wc — the same copy the
+                # forward pass saw): mixing the already-updated W into dE
+                # would make the step not-the-gradient of the stated
+                # objective and can break monotone descent.
+                emb -= lr * (resid_by_code @ Wc[:dim].T / n_b + l2 * emb)
+                W -= lr * (GW / n_b + l2 * W)
+                b -= lr * resid_tot / n_b
+
+        kind = "mse" if task == "regression" else "accuracy"
+        metric = _split_eval(frame, emb, W, b, kind)
+    finally:
+        # a failed step must not leak the pinned frame
+        train.unpersist()
+    return TrainResult(
+        losses=losses,
+        accuracy=metric,
+        params={"emb": emb, "W": W, "b": b},
+    )
+
+
 def train_relational_classifier(
     tables: dict[str, DataFrame],
     primary_keys: dict[str, list[str]],
@@ -378,67 +479,25 @@ def train_relational_classifier(
     """N20/N21/N24 trainable path: full-batch gradient descent on
     softmax cross-entropy over [cat-embedding ++ standardized numeric
     aggregates], with the embedding table AND the linear decoder both
-    learned. See the module docstring for the driver/Spark split and
-    the :class:`~pyspark.ml.torch.distributor.TorchDistributor` seam
+    learned — :func:`_sgd_head` with one batch. See the module
+    docstring for the driver/Spark split and the
+    :class:`~pyspark.ml.torch.distributor.TorchDistributor` seam
     (``fit_fn`` receives ``(frame, meta)`` and may take over training
     entirely — e.g. DDP over the materialized Parquet shards).
 
     Determinism contract: parameter init is seeded numpy; per-epoch
     gradient sums are exact decimal folds (partitioning-independent);
     updates are float64 on the driver — the loss trajectory is
-    bit-reproducible, strictly decreasing at this lr on the bench data.
+    bit-reproducible, strictly decreasing at this lr on the bench data,
+    and oracle-checked (``plans/train_oracle.py:_train_losses``).
     """
-    import numpy as np
-
     frame, meta = assemble_training_frame(
         tables, primary_keys, foreign_keys, target, cat_col, num_cols, seed=seed
     )
     if fit_fn is not None:
         return fit_fn(frame, meta)
-
-    k = meta["n_classes"]
-    m = meta["n_num"]
-    card = meta["n_codes"]
-    rng = np.random.default_rng(seed)
-    emb = rng.uniform(-0.5, 0.5, size=(card, dim))
-    W = rng.uniform(-0.5, 0.5, size=(dim + m, k)) * 0.1
-    b = np.zeros(k)
-
-    train = frame.filter(F.col("split") == "train").select("code", "nums", "label")
-    sc = train.sparkSession.sparkContext
-    parts = max(1, min(sc.defaultParallelism, 8))
-    train = train.repartition(parts).persist()
-    try:
-        n_train = train.count()
-
-        losses: list[float] = []
-        for _ in range(epochs):
-            E, Wc, bc = emb.copy(), W.copy(), b.copy()
-            loss_sum, resid_tot, GW, resid_by_code = _gradient_pass(
-                train, E, Wc, bc, dim, m, k, card
-            )
-            loss = loss_sum / n_train + 0.5 * l2 * (
-                float((W * W).sum()) + float((emb * emb).sum())
-            )
-            losses.append(loss)
-            # update: decoder, bias, and the embedding code table
-            # (join-apply-update: dE[c] = Σ_{rows with code c} resid · Wᵀ).
-            # All three gradients use the EPOCH-START weights (Wc — the
-            # same copy the forward pass saw): mixing the already-updated
-            # W into dE would make the step not-the-gradient of the
-            # stated objective and can break monotone descent.
-            emb -= lr * (resid_by_code @ Wc[:dim].T / n_train + l2 * emb)
-            W -= lr * (GW / n_train + l2 * W)
-            b -= lr * resid_tot / n_train
-
-        accuracy = _split_accuracy(frame, emb, W, b)
-    finally:
-        # a failed epoch must not leak the pinned frame
-        train.unpersist()
-    return TrainResult(
-        losses=losses,
-        accuracy=accuracy,
-        params={"emb": emb, "W": W, "b": b},
+    return _sgd_head(
+        frame, meta, dim, epochs, 1, lr, l2, seed, task="classification"
     )
 
 
@@ -476,10 +535,6 @@ def _split_eval(frame, emb, W, b, kind: str) -> dict[str, float]:
     return {r["split"]: r["m"] for r in rows}
 
 
-def _split_accuracy(frame, emb, W, b) -> dict[str, float]:
-    return _split_eval(frame, emb, W, b, "accuracy")
-
-
 def train_relational_minibatch(
     tables: dict[str, DataFrame],
     primary_keys: dict[str, list[str]],
@@ -507,14 +562,12 @@ def train_relational_minibatch(
       re-runs BFS per sample row (``data/dataset.py:249-258``;
       :func:`~..operators.bfs.bfs_expand_per_root` is the row-level
       twin of the subgraphs this samples features from).
-    - **Minibatches**: train roots are assigned to ``n_batches`` by the
-      portable Knuth hash of their node id — deterministic on any
-      engine and partitioning (a ``rand()`` batcher would reshuffle
-      rows between runs). Each step is one Spark job over that batch's
-      slice of the persisted frame; gradients are the same exact
-      decimal folds as the full-batch path, so the whole SGD trajectory
-      (losses at every STEP, final parameters) is bit-reproducible and
-      oracle-checkable (``plans/train_oracle.py``).
+    - **Minibatches**: :func:`_sgd_head` over ``n_batches``
+      portable-hash batches. Each step is one Spark job over that
+      batch's slice of the persisted frame, with exact decimal folds,
+      so the whole SGD trajectory (losses at every STEP, final
+      parameters) is bit-reproducible and oracle-checkable
+      (``plans/train_oracle.py``).
 
     Per-step loss = batch mean cross-entropy + the L2 term at the
     step-start parameters (SGD semantics: not monotone per step, but
@@ -522,10 +575,6 @@ def train_relational_minibatch(
     assembled frame bucketed by ``batch`` so each step's filter prunes
     to its own files instead of scanning all batches.
     """
-    import numpy as np
-
-    from ..functions.hashing import knuth_hash
-
     frame, meta = assemble_training_frame(
         tables,
         primary_keys,
@@ -536,78 +585,9 @@ def train_relational_minibatch(
         seed=seed,
         neighbor_budget=neighbor_budget,
     )
-    k = meta["n_classes"]
-    m = meta["n_num"]
-    card = meta["n_codes"]
-    rng = np.random.default_rng(seed)
-    emb = rng.uniform(-0.5, 0.5, size=(card, dim))
-    W = rng.uniform(-0.5, 0.5, size=(dim + m, k)) * 0.1
-    b = np.zeros(k)
-
-    train = (
-        frame.filter(F.col("split") == "train")
-        .select(
-            (knuth_hash(F.col("node_id"), seed + 7) % n_batches).alias("batch"),
-            "code",
-            "nums",
-            "label",
-        )
+    return _sgd_head(
+        frame, meta, dim, epochs, n_batches, lr, l2, seed, task="classification"
     )
-    sc = train.sparkSession.sparkContext
-    parts = max(1, min(sc.defaultParallelism, 8))
-    train = train.repartition(parts).persist()
-    try:
-        batch_sizes = {
-            r["batch"]: r["count"] for r in train.groupBy("batch").count().collect()
-        }
-        # an empty batch shows up as a MISSING key (groupBy never emits
-        # a 0-count row), so presence of every batch id is the check
-        if set(batch_sizes) != set(range(n_batches)):
-            raise ValueError(
-                f"train_relational_minibatch: a batch is empty "
-                f"(sizes={batch_sizes}) — lower n_batches or grow the input"
-            )
-
-        losses: list[float] = []
-        for _ in range(epochs):
-            for bi in range(n_batches):
-                n_b = batch_sizes[bi]
-                E, Wc, bc = emb.copy(), W.copy(), b.copy()
-                loss_sum, resid_tot, GW, resid_by_code = _gradient_pass(
-                    train.filter(F.col("batch") == bi).select(
-                        "code", "nums", "label"
-                    ),
-                    E,
-                    Wc,
-                    bc,
-                    dim,
-                    m,
-                    k,
-                    card,
-                )
-                loss = loss_sum / n_b + 0.5 * l2 * (
-                    float((W * W).sum()) + float((emb * emb).sum())
-                )
-                losses.append(loss)
-                # same step rule as the full-batch path, normalized by
-                # the BATCH size (the gradient estimates the full one)
-                emb -= lr * (resid_by_code @ Wc[:dim].T / n_b + l2 * emb)
-                W -= lr * (GW / n_b + l2 * W)
-                b -= lr * resid_tot / n_b
-
-        accuracy = _split_accuracy(frame, emb, W, b)
-    finally:
-        train.unpersist()
-    return TrainResult(
-        losses=losses,
-        accuracy=accuracy,
-        params={"emb": emb, "W": W, "b": b},
-    )
-
-
-def _split_mse(frame, emb, W, b) -> dict[str, float]:
-    """Per-split MSE (standardized-label space) — see :func:`_split_eval`."""
-    return _split_eval(frame, emb, W, b, "mse")
 
 
 def train_relational_regressor(
@@ -626,18 +606,17 @@ def train_relational_regressor(
     """The reference's REGRESSION task branch
     (``TaskType.REGRESSION`` → ``MSELoss``,
     ``nn/lightning/lightning_wrapper.py:40,50-55``): full-batch
-    gradient descent on half-squared error over [cat-embedding ++
-    standardized numeric aggregates] with a k=1 linear head, predicting
-    a numeric column of the target table from its relational
-    neighborhood. The label is train-standardized (``meta["y_mean"]/
-    ["y_std"]`` de-normalize). Same determinism contract as the
-    classifier: seeded init, exact decimal gradient folds, float64
-    driver updates — the per-epoch loss trajectory is bit-reproducible
-    and oracle-checked (``plans/train_oracle.py:_regression_losses``).
+    gradient descent (:func:`_sgd_head` with one batch) on
+    half-squared error over [cat-embedding ++ standardized numeric
+    aggregates] with a k=1 linear head, predicting a numeric column of
+    the target table from its relational neighborhood. The label is
+    train-standardized (``params["y_mean"]/["y_std"]`` de-normalize).
+    Same determinism contract as the classifier: seeded init, exact
+    decimal gradient folds, float64 driver updates — the per-epoch
+    loss trajectory is bit-reproducible and oracle-checked
+    (``plans/train_oracle.py:_regression_losses``).
     ``TrainResult.accuracy`` carries per-split MSE (standardized
     space)."""
-    import numpy as np
-
     frame, meta = assemble_training_frame(
         tables,
         primary_keys,
@@ -648,51 +627,18 @@ def train_relational_regressor(
         seed=seed,
         task="regression",
     )
-    k = 1
-    m = meta["n_num"]
-    card = meta["n_codes"]
-    rng = np.random.default_rng(seed)
-    emb = rng.uniform(-0.5, 0.5, size=(card, dim))
-    W = rng.uniform(-0.5, 0.5, size=(dim + m, k)) * 0.1
-    b = np.zeros(k)
-
-    train = frame.filter(F.col("split") == "train").select("code", "nums", "label")
-    sc = train.sparkSession.sparkContext
-    parts = max(1, min(sc.defaultParallelism, 8))
-    train = train.repartition(parts).persist()
-    try:
-        n_train = train.count()
-
-        losses: list[float] = []
-        for _ in range(epochs):
-            E, Wc, bc = emb.copy(), W.copy(), b.copy()
-            loss_sum, resid_tot, GW, resid_by_code = _gradient_pass(
-                train, E, Wc, bc, dim, m, k, card, task="regression"
-            )
-            loss = loss_sum / n_train + 0.5 * l2 * (
-                float((W * W).sum()) + float((emb * emb).sum())
-            )
-            losses.append(loss)
-            emb -= lr * (resid_by_code @ Wc[:dim].T / n_train + l2 * emb)
-            W -= lr * (GW / n_train + l2 * W)
-            b -= lr * resid_tot / n_train
-
-        mse = _split_mse(frame, emb, W, b)
-    finally:
-        train.unpersist()
-    return TrainResult(
-        losses=losses,
-        accuracy=mse,
-        params={"emb": emb, "W": W, "b": b, "y_mean": meta["y_mean"], "y_std": meta["y_std"]},
-    )
+    res = _sgd_head(frame, meta, dim, epochs, 1, lr, l2, seed, task="regression")
+    res.params.update(y_mean=meta["y_mean"], y_std=meta["y_std"])
+    return res
 
 
 # ------------------------------------------------- two-layer training
 #
 # The reference backprops through L STACKED conv layers + embedders
 # (nn/models/blueprint.py:24-214, trained end-to-end by lightning).
-# The trainers above optimize a 1-layer head over blueprint-assembled
-# features; the stack trainer (plans/stack.py) closes that gap with a
+# The trainers above run one SGD loop (_sgd_head) over a 1-layer head
+# on blueprint-assembled features; the stack trainer (plans/stack.py)
+# closes that gap with a
 # genuinely deep model whose EVERY weight matrix and embedding table
 # is trained in-engine, over ANY FK edges declared as EdgeLayerSpec
 # rows. For the default customer←orders spec at depth 2:

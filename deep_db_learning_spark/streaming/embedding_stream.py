@@ -25,7 +25,8 @@ applies).
 the full merged snapshot every micro-batch; the snapshot is
 distinct-bigram-sized — it grows with the corpus, so N batches cost
 O(N × snapshot): super-linear in total documents (measured in the
-100× probe, ``tools/scaleprobe100_cooc.py``). ``compact_every=K``
+100× probe recorded in BASELINE.md, "Round-14 100×-docs probe:
+streaming co-occurrence maintenance"). ``compact_every=K``
 switches to LSM-style maintenance: each batch appends only its OWN
 delta (atomic directory rename; idempotent because the delta path is
 a pure function of the batch id, so a replay overwrites the identical
@@ -190,7 +191,7 @@ def apply_cooc_batch(
     keep_last: int | None = None,
 ) -> None:
     """One maintenance step — the ``foreachBatch`` body, factored out
-    so the scale probe (``tools/scaleprobe100_cooc.py``) drives the
+    so a batch loop outside a stream (e.g. a scale probe) drives the
     EXACT production path. Idempotent per ``batch_id`` in both
     modes."""
     last = (

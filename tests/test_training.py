@@ -26,6 +26,20 @@ def test_loss_strictly_decreases_and_is_deterministic(db):
     assert "train" in res.accuracy and "test" in res.accuracy
 
 
+def test_classifier_matches_numpy_decimal_twin(db):
+    """The full-batch trajectory (the shared SGD loop with one batch)
+    is recomputed bit-for-bit by the independent oracle twin."""
+    from conftest import SF_SMOKE
+
+    from deep_db_learning_spark.plans.train_oracle import _train_losses
+
+    res = train_relational_classifier(
+        db.tables, db.primary_keys, db.foreign_keys, epochs=3, seed=42
+    )
+    twin = _train_losses(SF_SMOKE, epochs=3, seed=42)
+    assert res.losses == twin
+
+
 @pytest.fixture(scope="module")
 def signal_db(spark):
     # 600 rows: label is a pure function of the cat code (+ a useless
@@ -200,39 +214,40 @@ def test_two_layer_matches_numpy_decimal_twin(db):
     """The depth-2 trajectory (tanh orders layer -> decimal-fold mean
     aggregation -> head; BOTH weight matrices trained) is recomputed
     bit-for-bit by the independent twin — assembly in DuckDB, hbar and
-    dW1 folds in python Decimal."""
+    dW1 folds in python Decimal. The second input splits the roots into
+    three uneven portable-hash batches, each collected per step from
+    the Spark-side batch column."""
+    import numpy as np
+    from conftest import SF_SMOKE
+
     from deep_db_learning_spark.plans.train_oracle import _two_layer_losses
     from deep_db_learning_spark.plans.training import (
         train_relational_two_layer,
     )
 
-    res = train_relational_two_layer(
-        db.tables, db.primary_keys, db.foreign_keys,
-        epochs=2, n_batches=2, seed=42, neighbor_budget=5,
-    )
-    twin = _two_layer_losses(
-        "/root/testdata/sf0.001", epochs=2, n_batches=2, seed=42,
-        neighbor_budget=5,
-    )
-    assert res.losses == twin
-    assert len(res.losses) == 4
-    # both W1 and W2 moved off their init — the second layer actually
-    # receives gradient through the aggregation
-    import numpy as np
-
-    # draw order: emb, emb1, W1, W2 (plans/training.py)
-    rng = np.random.default_rng(42)
-    rng.uniform(-0.5, 0.5, size=res.params["emb"].shape)
-    emb1_init = rng.uniform(-0.5, 0.5, size=res.params["emb1"].shape)
-    W1_init = rng.uniform(-0.5, 0.5, size=res.params["W1"].shape) * 0.1
-    W2_init = rng.uniform(-0.5, 0.5, size=res.params["W2"].shape) * 0.1
-    # every deep parameter moved off its init — gradient genuinely
-    # reaches the layer-1 weights AND the layer-1 embedding table
-    # through the aggregation
-    assert not np.array_equal(res.params["W1"], W1_init)
-    assert not np.array_equal(res.params["W2"], W2_init)
-    assert not np.array_equal(res.params["emb1"], emb1_init)
-    assert "train" in res.accuracy and "test" in res.accuracy
+    for n_batches, seed in ((2, 42), (3, 7)):
+        res = train_relational_two_layer(
+            db.tables, db.primary_keys, db.foreign_keys,
+            epochs=2, n_batches=n_batches, seed=seed, neighbor_budget=5,
+        )
+        twin = _two_layer_losses(
+            SF_SMOKE, epochs=2, n_batches=n_batches, seed=seed, neighbor_budget=5
+        )
+        assert res.losses == twin
+        assert len(res.losses) == 2 * n_batches
+        # draw order: emb, emb1, W1, W2 (plans/training.py)
+        rng = np.random.default_rng(seed)
+        rng.uniform(-0.5, 0.5, size=res.params["emb"].shape)
+        emb1_init = rng.uniform(-0.5, 0.5, size=res.params["emb1"].shape)
+        W1_init = rng.uniform(-0.5, 0.5, size=res.params["W1"].shape) * 0.1
+        W2_init = rng.uniform(-0.5, 0.5, size=res.params["W2"].shape) * 0.1
+        # every deep parameter moved off its init — gradient genuinely
+        # reaches the layer-1 weights AND the layer-1 embedding table
+        # through the aggregation
+        assert not np.array_equal(res.params["W1"], W1_init)
+        assert not np.array_equal(res.params["W2"], W2_init)
+        assert not np.array_equal(res.params["emb1"], emb1_init)
+        assert "train" in res.accuracy and "test" in res.accuracy
 
 
 def test_two_layer_descending_trend(db):
@@ -419,72 +434,11 @@ def test_stack_three_layer_matches_twin(db):
         assert np.any(lay["b"] != 0.0)
 
 
-def test_stack_scale_swaps_bit_identical(db):
-    """Ask r4 #2 — the scale paths ARE the defaults and are bit-equal
-    to the driver-side reference paths: broadcast semi-join batching
-    vs the isin literal, sharded roots vs the up-front collect. Same
-    losses, same accuracies, same parameters."""
-    import numpy as np
-
-    from deep_db_learning_spark.plans.stack import train_relational_stack
-
-    kw = dict(epochs=2, n_batches=2, seed=42, neighbor_budget=5)
-    scale = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys,
-        _batch_mode="semi", _root_mode="shard", **kw,
-    )
-    ref = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys,
-        _batch_mode="isin", _root_mode="collect", **kw,
-    )
-    assert scale.losses == ref.losses
-    assert scale.accuracy == ref.accuracy
-    assert np.array_equal(scale.params["emb"], ref.params["emb"])
-    assert np.array_equal(scale.params["W_head"], ref.params["W_head"])
-    for a, b in zip(scale.params["layers"], ref.params["layers"]):
-        assert np.array_equal(a["W"], b["W"])
-        assert np.array_equal(a["emb"], b["emb"])
-        assert np.array_equal(a["b"], b["b"])
-
-
-def test_stack_root_shard_bit_identical(db):
-    """Ask r5 #1 — the sharded root path (Spark-side batch hash +
-    per-step O(batch) collect, the new default) reproduces the
-    up-front all-roots collect bit-for-bit, and the isin literal
-    refuses to run without the driver-side ids it needs."""
-    import numpy as np
-    import pytest
-
-    from deep_db_learning_spark.plans.stack import train_relational_stack
-
-    kw = dict(epochs=2, n_batches=3, seed=7, neighbor_budget=5)
-    shard = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys, _root_mode="shard", **kw,
-    )
-    coll = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys, _root_mode="collect", **kw,
-    )
-    assert shard.losses == coll.losses
-    assert shard.accuracy == coll.accuracy
-    assert np.array_equal(shard.params["emb"], coll.params["emb"])
-    assert np.array_equal(shard.params["W_head"], coll.params["W_head"])
-    for a, b in zip(shard.params["layers"], coll.params["layers"]):
-        assert np.array_equal(a["emb"], b["emb"])
-        assert np.array_equal(a["W"], b["W"])
-
-    with pytest.raises(ValueError, match="isin"):
-        train_relational_stack(
-            db.tables, db.primary_keys, db.foreign_keys,
-            _batch_mode="isin", _root_mode="shard", **kw,
-        )
-
-
 def test_stack_regression_matches_twin(db):
     """The stack's regression head (k=1 linear, half-squared error,
     train-standardized c_acctbal label — the MSELoss branch) trains
     through the deep layers too: engine and twin agree bit-for-bit on
-    every step loss AND on the decimal-folded per-split MSE, and the
-    driver-side batching/root reference paths reproduce both exactly."""
+    every step loss AND on the decimal-folded per-split MSE."""
     from dataclasses import replace
 
     from deep_db_learning_spark.plans.stack import (
@@ -520,12 +474,6 @@ def test_stack_regression_matches_twin(db):
     assert res.losses == twin_losses
     assert len(res.losses) == 4
     assert res.accuracy == twin_mse
-    ref = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys,
-        _batch_mode="isin", _root_mode="collect", **kw,
-    )
-    assert ref.losses == res.losses
-    assert ref.accuracy == res.accuracy
 
 
 def test_stack_childless_roots_and_spec_validation(spark):
