@@ -214,7 +214,6 @@ def tabnet_forward(
     gamma: float = 1.2,
     seed: int = 42,
     exact: bool = False,
-    return_last_states: bool = False,
 ):
     """The TabNet encoder forward over a [batch, in_ch] float matrix —
     the SHARED kernel (the ``row_logits`` precedent: engine UDF and
@@ -222,12 +221,8 @@ def tabnet_forward(
     data path). ``exact=True`` replaces every GEMM with the
     fixed-order rank-1 accumulation, making results independent of the
     Arrow batch split — required whenever the encoding feeds a
-    bit-pinned trajectory (the decision-head trainer).
-    ``return_last_states=True`` stops BEFORE the last GLU feature
-    transformer and returns ``(z, acc_prev)`` — its masked input and
-    the decision accumulator so far, everything upstream frozen — the
-    states the r8 GLU-level trainer (``plans/tabnet_head.
-    train_tabnet_glu``) differentiates through."""
+    bit-pinned trajectory (the frozen-encoder head trainer,
+    ``plans/tabnet_head.train_tabnet_head``, and its twin)."""
     import numpy as np
 
     if exact:
@@ -270,8 +265,6 @@ def tabnet_forward(
     acc = np.zeros((xs.shape[0], feat_channels))
     for i in range(num_layers):
         mask = sparsemax(lin(attention_x, w_attn[i], zeros_attn) * prior)
-        if return_last_states and i == num_layers - 1:
-            return mask * xs, acc
         h = glu_block(mask * xs, w_feat[i + 1], b_feat[i + 1])
         acc += np.maximum(h[..., :feat_channels], 0.0)
         attention_x = h[..., feat_channels:]
@@ -305,35 +298,6 @@ def tabnet_encode(
             gamma, seed, exact,
         )
         return pd.Series([r.tolist() for r in res])
-
-    return _pandas_udf(fn, "array<double>")(col)
-
-
-def tabnet_penultimate_encode(
-    col: Column,
-    out_channels: int,
-    num_layers: int = 3,
-    feat_channels: int = 8,
-    attn_channels: int = 8,
-    gamma: float = 1.2,
-    seed: int = 42,
-) -> Column:
-    """The frozen states feeding the LAST GLU feature transformer, as
-    one ``array<double>`` of ``z ++ acc_prev`` (widths: in_ch +
-    feat_channels) — always exact mode, since these states feed the
-    bit-pinned GLU-level gradient fold."""
-
-    def fn(v):
-        import numpy as np
-        import pandas as pd
-
-        z, acc = tabnet_forward(
-            _stack(v), out_channels, num_layers, feat_channels,
-            attn_channels, gamma, seed, exact=True,
-            return_last_states=True,
-        )
-        cat = np.concatenate([z, acc], axis=1)
-        return pd.Series([r.tolist() for r in cat])
 
     return _pandas_udf(fn, "array<double>")(col)
 

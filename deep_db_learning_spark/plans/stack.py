@@ -62,6 +62,7 @@ from .training import (
     _dec9_py,
     assemble_training_frame,
     row_logits,
+    split_metric,
     two_layer_head_step,
 )
 
@@ -1004,24 +1005,9 @@ def train_relational_stack(
         ],
     }
     scored = cut_lineage(_score_roots(frame, frames, params, dims, task), eager=True)
-    err = F.col("pred") - F.col("label")
-    if task == "regression":
-        # exact decimal fold: a plain avg of doubles depends on the
-        # partition summation order — the fold makes the MSE
-        # partitioning-independent and bit-equal to the twin's
-        metric = (
-            F.sum((err * err).cast(DECIMAL_TYPE)).cast("double")
-            / F.count(F.lit(1))
-        )
-    else:
-        metric = F.avg((F.col("pred") == F.col("label")).cast("double"))
-    accuracy = {
-        r["split"]: r["m"]
-        for r in scored.groupBy("split").agg(metric.alias("m")).collect()
-    }
     return TrainResult(
         losses=losses,
-        accuracy=accuracy,
+        accuracy=split_metric(scored, task),
         params=params,
         scored=scored,
         meta=meta,

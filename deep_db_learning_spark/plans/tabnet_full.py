@@ -4,11 +4,10 @@ transformers, all attentive transformers, the prior-decay chain, the
 output projection — plus the decision head trains jointly, under the
 repo's bit-determinism contract.
 
-The r8 extensions (``tabnet_head.train_tabnet_glu`` /
-``train_trompt_layer``) stopped one level into each encoder and
-documented sparsemax's sort-based backward as the hand-off boundary.
-That boundary dissolves on inspection: the sort lives ONLY in the
-forward (finding the simplex threshold τ). Given the forward's output
+The head trainers in ``tabnet_head`` keep the encoder frozen and
+train only the decision head. Sparsemax's sort does not force that
+boundary: the sort lives ONLY in the forward (finding the simplex
+threshold τ). Given the forward's output
 ``p = sparsemax(s)``, the backward is elementwise arithmetic on the
 support set S = {j : p_j > 0}:
 
@@ -38,7 +37,7 @@ twins (``train_oracle._tabnet_full_losses`` / ``_trompt_full_losses``)
 replay every epoch's loss bit-for-bit from DuckDB-read parquet.
 
 The gradient fold here is a ``posexplode → groupBy(pos) → sum`` —
-unlike the head/GLU trainers' wide single-row aggregate — because the
+unlike the head trainers' wide single-row aggregate — because the
 full parameter vector is ~4k components: four thousand aggregate
 expressions in one projection is a plan-compilation hazard, while one
 narrow shuffle of (pos, decimal) pairs is the same exact arithmetic at
@@ -61,7 +60,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import cut_lineage
 from ..functions.exact_agg import DECIMAL_TYPE
-from .training import TrainResult, _dec9_py, row_logits
+from .training import TrainResult, _dec9_py, row_logits, split_metric
 
 TABNET_FULL_BENCH_CONFIG = {
     "epochs": 3,
@@ -413,8 +412,9 @@ def train_tabnet_full(
         pred_fn.__annotations__ = {"x": pd.Series, "return": pd.Series}
         pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
         preds = full.select("split", "label", pudf("x").alias("pred"))
-        accuracy = _eval_by_split(preds, regression)
-        return TrainResult(losses=losses, accuracy=accuracy, params=p)
+        return TrainResult(
+            losses=losses, accuracy=split_metric(preds, task), params=p
+        )
 
     return train_relational_stack(
         tables,
@@ -429,35 +429,6 @@ def train_tabnet_full(
         task=task,
         fit_fn=fit,
     )
-
-
-def _eval_by_split(preds, regression: bool) -> dict:
-    """Per-split eval over a (split, label, pred) frame: exact integer
-    hit counts (classification) or the decimal-fold MSE in
-    standardized-label space (regression) — ``_fit_linear_head``'s
-    conventions, partitioning-independent either way."""
-    if regression:
-        err = F.col("pred") - F.col("label")
-        rows = (
-            preds.groupBy("split")
-            .agg(
-                (
-                    F.sum((err * err).cast(DECIMAL_TYPE)).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("m")
-            )
-            .collect()
-        )
-        return {r["split"]: r["m"] for r in rows}
-    rows = (
-        preds.groupBy("split")
-        .agg(
-            F.sum((F.col("pred") == F.col("label")).cast("bigint")).alias("h"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    )
-    return {r["split"]: r["h"] / r["n"] for r in rows}
 
 
 # --------------------------------------------------------------- Trompt
@@ -661,8 +632,9 @@ def train_trompt_full(
         preds = full.select(
             "split", "label", pudf("code", "nums").alias("pred")
         )
-        accuracy = _eval_by_split(preds, regression)
-        return TrainResult(losses=losses, accuracy=accuracy, params=p)
+        return TrainResult(
+            losses=losses, accuracy=split_metric(preds, task), params=p
+        )
 
     return train_relational_stack(
         tables,

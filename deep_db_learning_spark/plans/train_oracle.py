@@ -184,112 +184,40 @@ def _grad_fold(g, tr_codes, glen, k, card):
     return tot, resid_by_code
 
 
-def _train_losses(sf_dir: str, epochs: int = 8, seed: int = 42) -> list[float]:
-    """Replays ``plans.training.train_relational_classifier`` (default
-    target/feature config, as called by ``q_train_relational``) from the
-    parquet tables. Returns the per-epoch train losses."""
-    import numpy as np
-
-    _, codes_a, y_a, X_num, train_mask = _assemble(sf_dir, seed)
-    tr_codes = codes_a[train_mask]
-    tr_nums = X_num[train_mask]
-    tr_y = y_a[train_mask]
-    n_train = int(train_mask.sum())
-    m = X_num.shape[1]
-
-    card = int(codes_a.max()) + 1
-    k = int(y_a.max()) + 1
-    dim, lr, l2 = 4, 0.5, 1e-4
-    rng = np.random.default_rng(seed)
-    emb = rng.uniform(-0.5, 0.5, size=(card, dim))
-    W = rng.uniform(-0.5, 0.5, size=(dim + m, k)) * 0.1
-    b = np.zeros(k)
-
-    glen = 1 + k + (dim + m) * k
-    losses: list[float] = []
-    for _ in range(epochs):
-        E, Wc, bc = emb.copy(), W.copy(), b.copy()
-        tot, resid_by_code = _step_gradients(
-            tr_codes, tr_nums, tr_y, E, Wc, bc, glen, k, card
-        )
-        losses.append(
-            _sgd_update(
-                tot, resid_by_code, n_train, emb, W, b, Wc, dim, m, k, lr, l2
-            )
-        )
-    return losses
-
-
-def _step_gradients(tr_codes, tr_nums, tr_y, E, Wc, bc, glen, k, card):
-    """Forward/backward over one row set + decimal folds — the numpy
-    twin of ``training._gradient_pass`` on those rows."""
-    import numpy as np
-
-    from .training import row_logits
-
-    X = np.concatenate([E[tr_codes], tr_nums], axis=1)
-    logits = row_logits(X, Wc, bc)
-    logits -= logits.max(axis=1, keepdims=True)
-    ex = np.exp(logits)
-    P = ex / ex.sum(axis=1, keepdims=True)
-    nrows = len(tr_codes)
-    rows_idx = np.arange(nrows)
-    loss_rows = -np.log(P[rows_idx, tr_y])
-    resid = P.copy()
-    resid[rows_idx, tr_y] -= 1.0
-    gw = (X[:, :, None] * resid[:, None, :]).reshape(nrows, -1)
-    g = np.concatenate([loss_rows[:, None], resid, gw], axis=1)
-    return _grad_fold(g, tr_codes, glen, k, card)
-
-
-def _sgd_update(tot, resid_by_code, n, emb, W, b, Wc, dim, m, k, lr, l2):
-    """One parameter step from folded gradients (shared by the
-    full-batch and minibatch replays — the update rule must stay
-    bit-identical between the two trajectories). Mutates emb/W/b in
-    place and returns the recorded loss."""
-    import numpy as np
-
-    loss = float(tot[0]) / n + 0.5 * l2 * (
-        float((W * W).sum()) + float((emb * emb).sum())
-    )
-    resid_tot = np.array([float(tot[1 + j]) for j in range(k)])
-    GW = np.array(
-        [float(tot[1 + k + i]) for i in range((dim + m) * k)]
-    ).reshape(dim + m, k)
-    emb -= lr * (resid_by_code @ Wc[:dim].T / n + l2 * emb)
-    W -= lr * (GW / n + l2 * W)
-    b -= lr * resid_tot / n
-    return loss
-
-
-def _minibatch_losses(
+def _sgd_losses(
     sf_dir: str,
-    epochs: int = 4,
-    n_batches: int = 2,
+    epochs: int = 8,
+    n_batches: int = 1,
+    lr: float = 0.5,
     seed: int = 42,
-    neighbor_budget: int | None = 5,
+    neighbor_budget: int | None = None,
+    task: str = "classification",
 ) -> list[float]:
-    """Replays ``plans.training.train_relational_minibatch`` (default
-    config, as called by ``q_train_relational``): budgeted per-root
-    subgraph assembly, portable-hash batch assignment, per-step decimal
-    gradient folds. Returns the per-STEP batch losses."""
+    """Replays ``plans.training._sgd_head``, the one SGD loop behind the
+    three 1-layer trainers (default target/feature config, as called by
+    ``q_train_relational``): the relational assembly, portable-hash
+    batch assignment, per-step decimal gradient folds and the driver
+    update. ``n_batches=1`` is full-batch gradient descent
+    (``train_relational_classifier``; with ``task="regression"``,
+    ``train_relational_regressor`` on the c_acctbal label); more
+    batches over the budgeted assembly is
+    ``train_relational_minibatch``. Returns the per-step losses."""
     import numpy as np
 
     node_ids, codes_a, y_a, X_num, train_mask = _assemble(
-        sf_dir, seed, neighbor_budget=neighbor_budget
+        sf_dir, seed, neighbor_budget=neighbor_budget, task=task
     )
     m = X_num.shape[1]
     card = int(codes_a.max()) + 1
-    k = int(y_a.max()) + 1
-    dim, lr, l2 = 4, 0.5, 1e-4
+    k = 1 if task == "regression" else int(y_a.max()) + 1
+    dim, l2 = 4, 1e-4
     rng = np.random.default_rng(seed)
     emb = rng.uniform(-0.5, 0.5, size=(card, dim))
     W = rng.uniform(-0.5, 0.5, size=(dim + m, k)) * 0.1
     b = np.zeros(k)
 
-    ids_a = np.array(node_ids, dtype=np.int64)
     batch_of = np.array(
-        [_knuth(int(i), seed + 7) % n_batches for i in ids_a], dtype=np.int64
+        [_knuth(int(i), seed + 7) % n_batches for i in node_ids], dtype=np.int64
     )
     glen = 1 + k + (dim + m) * k
     losses: list[float] = []
@@ -299,60 +227,50 @@ def _minibatch_losses(
             n_b = int(sel.sum())
             E, Wc, bc = emb.copy(), W.copy(), b.copy()
             tot, resid_by_code = _step_gradients(
-                codes_a[sel], X_num[sel], y_a[sel], E, Wc, bc, glen, k, card
+                codes_a[sel], X_num[sel], y_a[sel], E, Wc, bc, glen, k, card,
+                task,
             )
             losses.append(
-                _sgd_update(
-                    tot, resid_by_code, n_b, emb, W, b, Wc, dim, m, k, lr, l2
-                )
+                float(tot[0]) / n_b
+                + 0.5 * l2 * (float((W * W).sum()) + float((emb * emb).sum()))
             )
+            resid_tot = np.array([float(tot[1 + j]) for j in range(k)])
+            GW = np.array(
+                [float(tot[1 + k + i]) for i in range((dim + m) * k)]
+            ).reshape(dim + m, k)
+            emb -= lr * (resid_by_code @ Wc[:dim].T / n_b + l2 * emb)
+            W -= lr * (GW / n_b + l2 * W)
+            b -= lr * resid_tot / n_b
     return losses
 
 
-def _regression_losses(
-    sf_dir: str, epochs: int = 6, lr: float = 0.2, seed: int = 42
-) -> list[float]:
-    """Replays ``plans.training.train_relational_regressor`` (default
-    c_acctbal target, as called by ``q_train_relational``): k=1 linear
-    head, half-squared error, standardized label. Returns the per-epoch
-    train losses."""
+def _step_gradients(tr_codes, tr_nums, tr_y, E, Wc, bc, glen, k, card, task):
+    """Forward/backward over one row set + decimal folds — the numpy
+    twin of ``training._gradient_pass`` on those rows: softmax
+    cross-entropy (classification) or half-squared error on a k=1
+    linear output (regression)."""
     import numpy as np
-
-    _, codes_a, y_a, X_num, train_mask = _assemble(sf_dir, seed, task="regression")
-    tr_codes = codes_a[train_mask]
-    tr_nums = X_num[train_mask]
-    tr_y = y_a[train_mask]
-    n_train = int(train_mask.sum())
-    m = X_num.shape[1]
-
-    card = int(codes_a.max()) + 1
-    k = 1
-    dim, l2 = 4, 1e-4
-    rng = np.random.default_rng(seed)
-    emb = rng.uniform(-0.5, 0.5, size=(card, dim))
-    W = rng.uniform(-0.5, 0.5, size=(dim + m, k)) * 0.1
-    b = np.zeros(k)
 
     from .training import row_logits
 
-    glen = 1 + k + (dim + m) * k
-    losses: list[float] = []
-    for _ in range(epochs):
-        E, Wc, bc = emb.copy(), W.copy(), b.copy()
-        X = np.concatenate([E[tr_codes], tr_nums], axis=1)
-        pred = row_logits(X, Wc, bc)[:, 0]
-        r = pred - tr_y
+    X = np.concatenate([E[tr_codes], tr_nums], axis=1)
+    nrows = len(tr_codes)
+    if task == "regression":
+        r = row_logits(X, Wc, bc)[:, 0] - tr_y
         loss_rows = 0.5 * r * r
         resid = r[:, None]
-        gw = (X[:, :, None] * resid[:, None, :]).reshape(n_train, -1)
-        g = np.concatenate([loss_rows[:, None], resid, gw], axis=1)
-        tot, resid_by_code = _grad_fold(g, tr_codes, glen, k, card)
-        losses.append(
-            _sgd_update(
-                tot, resid_by_code, n_train, emb, W, b, Wc, dim, m, k, lr, l2
-            )
-        )
-    return losses
+    else:
+        logits = row_logits(X, Wc, bc)
+        logits -= logits.max(axis=1, keepdims=True)
+        ex = np.exp(logits)
+        P = ex / ex.sum(axis=1, keepdims=True)
+        rows_idx = np.arange(nrows)
+        loss_rows = -np.log(P[rows_idx, tr_y])
+        resid = P.copy()
+        resid[rows_idx, tr_y] -= 1.0
+    gw = (X[:, :, None] * resid[:, None, :]).reshape(nrows, -1)
+    g = np.concatenate([loss_rows[:, None], resid, gw], axis=1)
+    return _grad_fold(g, tr_codes, glen, k, card)
 
 
 def _tabnet_head_losses(
@@ -447,113 +365,6 @@ def _head_gd_losses(X, y, k, epochs, lr, l2, seed, task="classification") -> lis
     return losses
 
 
-def _tabnet_glu_losses(
-    sf_dir: str,
-    epochs: int = 3,
-    lr: float = 0.2,
-    l2: float = 1e-4,
-    seed: int = 42,
-    neighbor_budget: int | None = 5,
-    out_channels: int = 8,
-    num_layers: int = 2,
-    feat_channels: int = 8,
-    attn_channels: int = 8,
-) -> list[float]:
-    """Twin of ``plans.tabnet_head.train_tabnet_glu``: DuckDB-assembled
-    root frame, the SHARED exact-mode ``tabnet_forward`` penultimate
-    states and ``glu_head_forward`` sub-network (the ``row_logits``
-    precedent), then an independent numpy/decimal replay of the JOINT
-    (last-GLU, head) GD — per-row dec9-quantized gradients summed as
-    exact decimals in row order, the same update expressions — every
-    epoch's loss bit-equal to the engine's."""
-    import numpy as np
-
-    from ..operators.kernels import tabnet_forward
-    from .tabnet_head import glu_head_forward, glu_seed_params
-
-    node_ids, codes_a, y_a, X_num, train_mask = _assemble(
-        sf_dir, seed, neighbor_budget=neighbor_budget
-    )
-    card = int(codes_a.max()) + 1
-    k = int(y_a.max()) + 1
-    onehot = np.zeros((len(codes_a), card))
-    onehot[np.arange(len(codes_a)), codes_a] = 1.0
-    feats = np.concatenate([onehot, X_num], axis=1)
-    tr = np.where(train_mask)[0]
-    Z, A = tabnet_forward(
-        feats[tr], out_channels, num_layers, feat_channels, attn_channels,
-        seed=seed, exact=True, return_last_states=True,
-    )
-    y = y_a[tr]
-    in_ch, fc = feats.shape[1], feat_channels
-    n = len(y)
-    Wv, bv, Wg, bg, w_out = glu_seed_params(
-        in_ch, num_layers, fc, attn_channels, out_channels, seed
-    )
-    rng = np.random.default_rng(seed)
-    Wh = rng.uniform(-0.5, 0.5, size=(out_channels, k)) * 0.1
-    bh = np.zeros(k)
-    glen = 1 + 2 * (in_ch * fc + fc) + out_channels * k + k
-    losses: list[float] = []
-    for _ in range(epochs):
-        gs, gl, acc, enc, logits = glu_head_forward(
-            Z, A, Wv, bv, Wg, bg, Wh, bh, w_out
-        )
-        logits = logits - logits.max(axis=1, keepdims=True)
-        ex = np.exp(logits)
-        P = ex / ex.sum(axis=1, keepdims=True)
-        ridx = np.arange(n)
-        loss_rows = -np.log(P[ridx, y])
-        resid = P.copy()
-        resid[ridx, y] -= 1.0
-        d_enc = resid @ Wh.T
-        d_acc = d_enc @ w_out.T
-        d_gl = d_acc * (gl > 0)
-        d_av = d_gl * gs
-        d_ag = d_gl * (gl * (1.0 - gs))
-        out = np.concatenate(
-            [
-                loss_rows[:, None],
-                (Z[:, :, None] * d_av[:, None, :]).reshape(n, -1),
-                d_av,
-                (Z[:, :, None] * d_ag[:, None, :]).reshape(n, -1),
-                d_ag,
-                (enc[:, :, None] * resid[:, None, :]).reshape(n, -1),
-                resid,
-            ],
-            axis=1,
-        )
-        tot = [Decimal(0)] * glen
-        for row in out:
-            for i in range(glen):
-                tot[i] += _dec9(float(row[i]))
-        o = 1
-
-        def seg(off, size):
-            return np.array([float(tot[off + i]) for i in range(size)])
-
-        GWv = seg(o, in_ch * fc).reshape(in_ch, fc); o += in_ch * fc
-        gbv = seg(o, fc); o += fc
-        GWg = seg(o, in_ch * fc).reshape(in_ch, fc); o += in_ch * fc
-        gbg = seg(o, fc); o += fc
-        GWh = seg(o, out_channels * k).reshape(out_channels, k)
-        o += out_channels * k
-        gbh = seg(o, k)
-        losses.append(
-            float(tot[0]) / n
-            + 0.5
-            * l2
-            * float((Wh * Wh).sum() + (Wv * Wv).sum() + (Wg * Wg).sum())
-        )
-        Wv -= lr * (GWv / n + l2 * Wv)
-        bv -= lr * (gbv / n)
-        Wg -= lr * (GWg / n + l2 * Wg)
-        bg -= lr * (gbg / n)
-        Wh -= lr * (GWh / n + l2 * Wh)
-        bh -= lr * (gbh / n)
-    return losses
-
-
 def _trompt_head_losses(
     sf_dir: str,
     epochs: int = 4,
@@ -584,83 +395,6 @@ def _trompt_head_losses(
         codes_a[tr], X_num[tr], card, ch, num_prompts, num_layers, seed
     )
     return _head_gd_losses(X, y_a[tr], k, epochs, lr, l2, seed, task=task)
-
-
-def _trompt_layer_losses(
-    sf_dir: str,
-    epochs: int = 3,
-    lr: float = 0.3,
-    l2: float = 1e-4,
-    seed: int = 42,
-    neighbor_budget: int | None = 5,
-    ch: int = 8,
-    num_prompts: int = 4,
-    num_layers: int = 2,
-) -> list[float]:
-    """Twin of ``plans.tabnet_head.train_trompt_layer``: DuckDB root
-    assembly, the SHARED per-row state/forward/grad kernels, then an
-    independent numpy/decimal replay of the joint (last attention
-    layer, head) GD — per-row dec9-quantized gradients summed as exact
-    decimals in row order, the same update expressions."""
-    import math as _math
-
-    import numpy as np
-
-    from ..operators.kernels import _seeded_matrix
-    from .tabnet_head import (
-        trompt_column_embeddings,
-        trompt_layer_row_grads,
-        trompt_layer_states,
-    )
-
-    node_ids, codes_a, y_a, X_num, train_mask = _assemble(
-        sf_dir, seed, neighbor_budget=neighbor_budget
-    )
-    card = int(codes_a.max()) + 1
-    k = int(y_a.max()) + 1
-    tr = np.where(train_mask)[0]
-    n = len(tr)
-    W = _seeded_matrix(
-        (seed, "conv", num_layers - 1), ch, ch, 1.0 / _math.sqrt(ch)
-    ).copy()
-    rng = np.random.default_rng(seed)
-    Wh = rng.uniform(-0.5, 0.5, size=(ch, k)) * 0.1
-    bh = np.zeros(k)
-    glen = 1 + ch * ch + ch * k + k
-    # the frozen per-row states are parameter-independent — build once
-    states = []
-    for i in tr:
-        m = trompt_column_embeddings(
-            int(codes_a[i]), X_num[i], card, ch, seed
-        )
-        states.append((m, *trompt_layer_states(m, num_prompts, num_layers, seed)))
-    losses: list[float] = []
-    for _ in range(epochs):
-        tot = [Decimal(0)] * glen
-        for idx, i in enumerate(tr):
-            m, p_in, frozen = states[idx]
-            g = trompt_layer_row_grads(
-                m, p_in, frozen, W, Wh, bh, int(y_a[i]),
-                num_layers, num_prompts,
-            )
-            for j in range(glen):
-                tot[j] += _dec9(float(g[j]))
-        o = 1
-
-        def seg(off, size):
-            return np.array([float(tot[off + i]) for i in range(size)])
-
-        GW = seg(o, ch * ch).reshape(ch, ch); o += ch * ch
-        GWh = seg(o, ch * k).reshape(ch, k); o += ch * k
-        gbh = seg(o, k)
-        losses.append(
-            float(tot[0]) / n
-            + 0.5 * l2 * float((Wh * Wh).sum() + (W * W).sum())
-        )
-        W -= lr * (GW / n + l2 * W)
-        Wh -= lr * (GWh / n + l2 * Wh)
-        bh -= lr * (gbh / n)
-    return losses
 
 
 def _fold_rows_decimal(rows, glen: int):
@@ -793,7 +527,8 @@ def _trompt_full_losses(
 def train_loss_oracle_sql(epochs: int = 8, seed: int = 42) -> str:
     """The ``train_relational`` oracle: recompute all seven loss
     trajectories — full-batch GD, minibatch SGD over budgeted per-root
-    subgraphs, regression, the two- and three-layer stacks, and the
+    subgraphs and regression (all three from the one replay loop
+    :func:`_sgd_losses`), the two- and three-layer stacks, and the
     TabNet and Trompt heads — with the independent twins and pin them
     as a VALUES literal (``repr`` doubles round-trip exactly through
     DuckDB's strtod). The data directory defaults to the driver's
@@ -810,19 +545,21 @@ def train_loss_oracle_sql(epochs: int = 8, seed: int = 42) -> str:
     sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF", DEFAULT_SF_DIR)
     rows = [
         ("full", i, loss)
-        for i, loss in enumerate(_train_losses(sf_dir, epochs=epochs, seed=seed))
+        for i, loss in enumerate(_sgd_losses(sf_dir, epochs=epochs, seed=seed))
     ] + [
         ("minibatch", i, loss)
         for i, loss in enumerate(
             # the SHARED configs (plans/training.py) — the same dicts
             # q_train_relational unpacks, so the pinned trajectories and
             # the engine runs can never use different hyperparameters
-            _minibatch_losses(sf_dir, seed=seed, **MINIBATCH_BENCH_CONFIG)
+            _sgd_losses(sf_dir, seed=seed, **MINIBATCH_BENCH_CONFIG)
         )
     ] + [
         ("regression", i, loss)
         for i, loss in enumerate(
-            _regression_losses(sf_dir, seed=seed, **REGRESSION_BENCH_CONFIG)
+            _sgd_losses(
+                sf_dir, seed=seed, task="regression", **REGRESSION_BENCH_CONFIG
+            )
         )
     ] + [
         ("two_layer", i, loss)

@@ -214,6 +214,26 @@ class TrainResult:
     scored_from: tuple | None = field(default=None, repr=False, compare=False)
 
 
+
+def split_metric(scored: DataFrame, task: str) -> dict[str, float]:
+    """The per-split metric of a ``(split, label, pred)`` frame, in one
+    Spark job — the evaluation every trainer ends with. Classification:
+    accuracy, the mean of ``pred == label`` as 0.0/1.0 (a sum of ones is
+    exact below 2^53 rows). Regression: MSE with each squared error
+    folded as an exact decimal (``cast(err² AS DECIMAL(30,9))``), so the
+    value depends on neither the partitioning nor the summation order
+    and a driver-side ``Decimal`` replay reproduces it bit for bit
+    (``train_oracle._stack_losses(with_accuracy=True)``)."""
+    if task == "regression":
+        err = F.col("pred") - F.col("label")
+        metric = F.sum((err * err).cast(DECIMAL_TYPE)).cast("double") / F.count(
+            F.lit(1)
+        )
+    else:
+        metric = F.avg((F.col("pred") == F.col("label")).cast("double"))
+    rows = scored.groupBy("split").agg(metric.alias("m")).collect()
+    return {r["split"]: r["m"] for r in rows}
+
 def assemble_training_frame(
     tables: dict[str, DataFrame],
     primary_keys: dict[str, list[str]],
@@ -450,8 +470,7 @@ def _sgd_head(
                 W -= lr * (GW / n_b + l2 * W)
                 b -= lr * resid_tot / n_b
 
-        kind = "mse" if task == "regression" else "accuracy"
-        metric = _split_eval(frame, emb, W, b, kind)
+        metric = _split_eval(frame, emb, W, b, task)
     finally:
         # a failed step must not leak the pinned frame
         train.unpersist()
@@ -489,7 +508,7 @@ def train_relational_classifier(
     gradient sums are exact decimal folds (partitioning-independent);
     updates are float64 on the driver — the loss trajectory is
     bit-reproducible, strictly decreasing at this lr on the bench data,
-    and oracle-checked (``plans/train_oracle.py:_train_losses``).
+    and oracle-checked (``plans/train_oracle.py:_sgd_losses``).
     """
     frame, meta = assemble_training_frame(
         tables, primary_keys, foreign_keys, target, cat_col, num_cols, seed=seed
@@ -501,38 +520,30 @@ def train_relational_classifier(
     )
 
 
-def _split_eval(frame, emb, W, b, kind: str) -> dict[str, float]:
-    """Per-split metric with the trained parameters — one Spark job.
-    ``kind``: ``"accuracy"`` (argmax prediction) or ``"mse"``
-    (linear-head prediction, standardized-label space)."""
+def _split_eval(frame, emb, W, b, task: str) -> dict[str, float]:
+    """Per-split metric (:func:`split_metric`) of the 1-layer head with
+    the trained parameters: argmax prediction (classification) or the
+    linear-head prediction in standardized-label space (regression)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    regression = task == "regression"
     Ef, Wf, bf = emb.copy(), W.copy(), b.copy()
 
     def pred_fn(code, nums):
         codes = code.to_numpy(dtype=np.int64)
         X = np.concatenate([Ef[codes], np.vstack(nums.to_list())], axis=1)
         out = row_logits(X, Wf, bf)
-        if kind == "mse":
+        if regression:
             return pd.Series(out[:, 0])
         return pd.Series(np.argmax(out, axis=1).astype(np.int64))
 
     pred_fn.__annotations__ = {"code": pd.Series, "nums": pd.Series, "return": pd.Series}
-    pudf = pandas_udf(pred_fn, "double" if kind == "mse" else "bigint")
-    err = F.col("pred") - F.col("label")
-    metric = (
-        F.avg(err * err) if kind == "mse"
-        else F.avg((F.col("pred") == F.col("label")).cast("double"))
+    pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
+    return split_metric(
+        frame.select("split", "label", pudf("code", "nums").alias("pred")), task
     )
-    rows = (
-        frame.select("split", "label", pudf("code", "nums").alias("pred"))
-        .groupBy("split")
-        .agg(metric.alias("m"))
-        .collect()
-    )
-    return {r["split"]: r["m"] for r in rows}
 
 
 def train_relational_minibatch(
@@ -614,7 +625,7 @@ def train_relational_regressor(
     Same determinism contract as the classifier: seeded init, exact
     decimal gradient folds, float64 driver updates — the per-epoch
     loss trajectory is bit-reproducible and oracle-checked
-    (``plans/train_oracle.py:_regression_losses``).
+    (``plans/train_oracle.py:_sgd_losses``).
     ``TrainResult.accuracy`` carries per-split MSE (standardized
     space)."""
     frame, meta = assemble_training_frame(

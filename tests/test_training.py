@@ -4,6 +4,7 @@ static-feature baseline on data where the signal lives ONLY in the
 categorical code (the thing an embedding table exists to learn)."""
 
 import pytest
+from conftest import SF_SMOKE
 from pyspark.sql import functions as F
 
 from deep_db_learning_spark.plans.training import (
@@ -29,15 +30,47 @@ def test_loss_strictly_decreases_and_is_deterministic(db):
 def test_classifier_matches_numpy_decimal_twin(db):
     """The full-batch trajectory (the shared SGD loop with one batch)
     is recomputed bit-for-bit by the independent oracle twin."""
-    from conftest import SF_SMOKE
-
-    from deep_db_learning_spark.plans.train_oracle import _train_losses
+    from deep_db_learning_spark.plans.train_oracle import _sgd_losses
 
     res = train_relational_classifier(
         db.tables, db.primary_keys, db.foreign_keys, epochs=3, seed=42
     )
-    twin = _train_losses(SF_SMOKE, epochs=3, seed=42)
+    twin = _sgd_losses(SF_SMOKE, epochs=3, seed=42)
     assert res.losses == twin
+
+
+def test_split_metric_partition_independent(spark):
+    """The one per-split evaluator: the regression MSE folds squared
+    errors as exact decimals, so a frame whose double sums depend on
+    the summation order (errors near 1e4 mixed with errors near 0.03)
+    gives the same dict at 1 and 8 partitions, equal to a Python
+    Decimal replay; classification accuracy is hits / rows."""
+    from deep_db_learning_spark.plans.train_oracle import _dec9
+    from deep_db_learning_spark.plans.training import split_metric
+
+    rows = []
+    for i in range(400):
+        err = 1.0e4 + i * 0.37 if i % 50 == 0 else 0.031 + i * 1.3e-5
+        label = float(i % 7) - 3.0
+        rows.append(("train" if i % 3 else "test", label, label + err))
+    want = {}
+    for split in ("train", "test"):
+        sq = [(p - y) * (p - y) for s, y, p in rows if s == split]
+        # the data is order-sensitive as plain double sums
+        assert sum(sq) != sum(sorted(sq))
+        want[split] = float(sum(_dec9(v) for v in sq)) / len(sq)
+    df = spark.createDataFrame(rows, "split string, label double, pred double")
+    one = split_metric(df.repartition(1), "regression")
+    eight = split_metric(df.repartition(8), "regression")
+    assert one == eight == want
+
+    cls = [("train" if i % 3 else "test", i % 4, (i * 7) % 5) for i in range(301)]
+    df = spark.createDataFrame(cls, "split string, label int, pred bigint")
+    want = {}
+    for split in ("train", "test"):
+        hits = [p == y for s, y, p in cls if s == split]
+        want[split] = sum(hits) / len(hits)
+    assert split_metric(df.repartition(8), "classification") == want
 
 
 @pytest.fixture(scope="module")
@@ -126,15 +159,15 @@ def test_minibatch_deterministic_and_descending(db):
 def test_minibatch_matches_numpy_decimal_twin(db):
     """The Spark minibatch trajectory is recomputed bit-for-bit by the
     independent oracle twin (budgeted assembly + per-step folds)."""
-    from deep_db_learning_spark.plans.train_oracle import _minibatch_losses
+    from deep_db_learning_spark.plans.train_oracle import _sgd_losses
     from deep_db_learning_spark.plans.training import train_relational_minibatch
 
     res = train_relational_minibatch(
         db.tables, db.primary_keys, db.foreign_keys,
         epochs=2, n_batches=2, seed=42, neighbor_budget=5,
     )
-    twin = _minibatch_losses(
-        "/root/testdata/sf0.001", epochs=2, n_batches=2, seed=42, neighbor_budget=5
+    twin = _sgd_losses(
+        SF_SMOKE, epochs=2, n_batches=2, seed=42, neighbor_budget=5
     )
     assert res.losses == twin
 
@@ -200,13 +233,13 @@ def test_regression_trainer_deterministic_and_descending(db):
 
 
 def test_regression_trainer_matches_numpy_decimal_twin(db):
-    from deep_db_learning_spark.plans.train_oracle import _regression_losses
+    from deep_db_learning_spark.plans.train_oracle import _sgd_losses
     from deep_db_learning_spark.plans.training import train_relational_regressor
 
     res = train_relational_regressor(
         db.tables, db.primary_keys, db.foreign_keys, epochs=3, lr=0.2, seed=42
     )
-    twin = _regression_losses("/root/testdata/sf0.001", epochs=3, lr=0.2, seed=42)
+    twin = _sgd_losses(SF_SMOKE, epochs=3, lr=0.2, seed=42, task="regression")
     assert res.losses == twin
 
 
@@ -218,8 +251,6 @@ def test_two_layer_matches_numpy_decimal_twin(db):
     three uneven portable-hash batches, each collected per step from
     the Spark-side batch column."""
     import numpy as np
-    from conftest import SF_SMOKE
-
     from deep_db_learning_spark.plans.train_oracle import _two_layer_losses
     from deep_db_learning_spark.plans.training import (
         train_relational_two_layer,
@@ -385,7 +416,7 @@ def test_stack_second_edge_matches_twin(db):
         layers=(spec,), epochs=2, n_batches=2, seed=11, neighbor_budget=5,
     )
     twin, twin_acc = _stack_losses(
-        "/root/testdata/sf0.001", (spec,),
+        SF_SMOKE, (spec,),
         epochs=2, n_batches=2, seed=11, neighbor_budget=5, with_accuracy=True,
     )
     assert res.losses == twin
@@ -416,7 +447,7 @@ def test_stack_three_layer_matches_twin(db):
         neighbor_budget=5,
     )
     twin = _three_layer_losses(
-        "/root/testdata/sf0.001", epochs=2, n_batches=2, seed=42,
+        SF_SMOKE, epochs=2, n_batches=2, seed=42,
         neighbor_budget=5,
     )
     assert res.losses == twin
@@ -461,7 +492,7 @@ def test_stack_regression_matches_twin(db):
     )
     res = train_relational_stack(db.tables, db.primary_keys, db.foreign_keys, **kw)
     twin_losses, twin_mse = _stack_losses(
-        "/root/testdata/sf0.001",
+        SF_SMOKE,
         (spec,),
         epochs=2,
         n_batches=2,
@@ -581,7 +612,7 @@ def test_stack_frame_emb_matches_driver_and_twin(db):
     assert got == want
     assert fr.accuracy == dr.accuracy
     assert len(fr.losses) == 4 and fr.losses[-1] < fr.losses[0]
-    twin = _stack_losses("/root/testdata/sf0.001", (fspec,), **kw)
+    twin = _stack_losses(SF_SMOKE, (fspec,), **kw)
     assert fr.losses == twin
 
 
@@ -719,7 +750,7 @@ def test_tabnet_head_trains_through_fit_fn(db):
         **TABNET_HEAD_BENCH_CONFIG,
     )
     twin = _tabnet_head_losses(
-        "/root/testdata/sf0.001", seed=42, **TABNET_HEAD_BENCH_CONFIG
+        SF_SMOKE, seed=42, **TABNET_HEAD_BENCH_CONFIG
     )
     assert res.losses == twin
     assert len(res.losses) == TABNET_HEAD_BENCH_CONFIG["epochs"]
@@ -778,7 +809,7 @@ def test_trompt_head_trains_through_fit_fn(db):
         **TROMPT_HEAD_BENCH_CONFIG,
     )
     twin = _trompt_head_losses(
-        "/root/testdata/sf0.001", seed=42, **TROMPT_HEAD_BENCH_CONFIG
+        SF_SMOKE, seed=42, **TROMPT_HEAD_BENCH_CONFIG
     )
     assert res.losses == twin
     assert res.losses[-1] < res.losses[0]
@@ -853,7 +884,7 @@ def test_head_trainers_regression_task(db):
         **TABNET_HEAD_BENCH_CONFIG,
     )
     twin_tab = _tabnet_head_losses(
-        "/root/testdata/sf0.001", seed=42, task="regression",
+        SF_SMOKE, seed=42, task="regression",
         **TABNET_HEAD_BENCH_CONFIG,
     )
     assert tab.losses == twin_tab
@@ -866,7 +897,7 @@ def test_head_trainers_regression_task(db):
         **TROMPT_HEAD_BENCH_CONFIG,
     )
     twin_tro = _trompt_head_losses(
-        "/root/testdata/sf0.001", seed=42, task="regression",
+        SF_SMOKE, seed=42, task="regression",
         **TROMPT_HEAD_BENCH_CONFIG,
     )
     assert tro.losses == twin_tro
@@ -970,7 +1001,6 @@ def test_predict_relational_stack_rebuilds_for_other_inputs(db):
         predict_relational_stack,
         train_relational_stack,
     )
-    from conftest import SF_SMOKE
     from deep_db_learning_spark.sources import load_testdata
 
     res = train_relational_stack(
@@ -1103,91 +1133,6 @@ def test_save_load_frame_embedding_layer(db, tmp_path):
     want = sorted(map(tuple, res.params["layers"][0]["emb"].collect()))
     got = sorted(map(tuple, params["layers"][0]["emb"].collect()))
     assert got == want
-
-
-def test_tabnet_glu_trains_last_block_through_fit_fn(db):
-    """r8 (VERDICT r7 #6): the backprop extends ONE level into the
-    encoder — the last GLU feature transformer trains JOINTLY with the
-    decision head over the frozen upstream states. The independent
-    numpy/decimal twin replays every epoch's loss bit-for-bit, the
-    loss descends, the GLU value/gate columns move off their seeded
-    init, and training the extra level beats the frozen-encoder head
-    on the train split (more capacity, same data)."""
-    import numpy as np
-
-    from deep_db_learning_spark.plans.tabnet_head import (
-        TABNET_GLU_BENCH_CONFIG,
-        TABNET_HEAD_BENCH_CONFIG,
-        glu_seed_params,
-        train_tabnet_glu,
-        train_tabnet_head,
-    )
-    from deep_db_learning_spark.plans.train_oracle import (
-        _tabnet_glu_losses,
-    )
-
-    res = train_tabnet_glu(
-        db.tables, db.primary_keys, db.foreign_keys, seed=42,
-        **TABNET_GLU_BENCH_CONFIG,
-    )
-    twin = _tabnet_glu_losses(
-        "/root/testdata/sf0.001", seed=42, **TABNET_GLU_BENCH_CONFIG
-    )
-    assert res.losses == twin
-    assert len(res.losses) == TABNET_GLU_BENCH_CONFIG["epochs"]
-    assert res.losses[-1] < res.losses[0]
-    # the GLU block actually trained: both value and gate columns moved
-    in_ch = res.params["Wv"].shape[0]
-    Wv0, bv0, Wg0, bg0, _ = glu_seed_params(
-        in_ch,
-        TABNET_GLU_BENCH_CONFIG["num_layers"],
-        TABNET_GLU_BENCH_CONFIG["feat_channels"],
-        TABNET_GLU_BENCH_CONFIG["attn_channels"],
-        TABNET_GLU_BENCH_CONFIG["out_channels"],
-        42,
-    )
-    assert not np.array_equal(res.params["Wv"], Wv0)
-    assert not np.array_equal(res.params["Wg"], Wg0)
-    assert np.any(res.params["bv"] != bv0)
-    assert "train" in res.accuracy and "test" in res.accuracy
-
-
-def test_trompt_layer_trains_through_fit_fn(db):
-    """r8 N23 mirror of the GLU extension: the LAST prompt-bank
-    attention layer trains jointly with the head (softmax backward —
-    smooth, unlike sparsemax). Twin replays every epoch's loss
-    bit-for-bit; the loss descends; the attention weight moves off its
-    seeded init."""
-    import math
-
-    import numpy as np
-
-    from deep_db_learning_spark.operators.kernels import _seeded_matrix
-    from deep_db_learning_spark.plans.tabnet_head import (
-        TROMPT_LAYER_BENCH_CONFIG,
-        train_trompt_layer,
-    )
-    from deep_db_learning_spark.plans.train_oracle import (
-        _trompt_layer_losses,
-    )
-
-    res = train_trompt_layer(
-        db.tables, db.primary_keys, db.foreign_keys, seed=42,
-        **TROMPT_LAYER_BENCH_CONFIG,
-    )
-    twin = _trompt_layer_losses(
-        "/root/testdata/sf0.001", seed=42, **TROMPT_LAYER_BENCH_CONFIG
-    )
-    assert res.losses == twin
-    assert len(res.losses) == TROMPT_LAYER_BENCH_CONFIG["epochs"]
-    assert res.losses[-1] < res.losses[0]
-    ch = TROMPT_LAYER_BENCH_CONFIG["ch"]
-    W0 = _seeded_matrix(
-        (42, "conv", TROMPT_LAYER_BENCH_CONFIG["num_layers"] - 1),
-        ch, ch, 1.0 / math.sqrt(ch),
-    )
-    assert not np.array_equal(res.params["W"], W0)
-    assert "train" in res.accuracy and "test" in res.accuracy
 
 
 def test_tabnet_full_gradients_match_finite_differences():
@@ -1324,7 +1269,7 @@ def test_tabnet_full_trains_whole_encoder_through_fit_fn(db):
         **TABNET_FULL_BENCH_CONFIG,
     )
     twin = _tabnet_full_losses(
-        "/root/testdata/sf0.001", seed=42, **TABNET_FULL_BENCH_CONFIG
+        SF_SMOKE, seed=42, **TABNET_FULL_BENCH_CONFIG
     )
     assert res.losses == twin
     assert len(res.losses) == TABNET_FULL_BENCH_CONFIG["epochs"]
@@ -1381,7 +1326,7 @@ def test_trompt_full_trains_whole_encoder_through_fit_fn(db):
         **TROMPT_FULL_BENCH_CONFIG,
     )
     twin = _trompt_full_losses(
-        "/root/testdata/sf0.001", seed=42, **TROMPT_FULL_BENCH_CONFIG
+        SF_SMOKE, seed=42, **TROMPT_FULL_BENCH_CONFIG
     )
     assert res.losses == twin
     assert len(res.losses) == TROMPT_FULL_BENCH_CONFIG["epochs"]
@@ -1414,7 +1359,7 @@ def test_tabnet_full_regression_task(db):
         target=("customer", "c_acctbal"), task="regression", **cfg,
     )
     twin = _tabnet_full_losses(
-        "/root/testdata/sf0.001", seed=42, task="regression", **cfg
+        SF_SMOKE, seed=42, task="regression", **cfg
     )
     assert res.losses == twin
     assert res.losses[-1] < res.losses[0]
@@ -1437,7 +1382,7 @@ def test_trompt_full_regression_task(db):
         target=("customer", "c_acctbal"), task="regression", **cfg,
     )
     twin = _trompt_full_losses(
-        "/root/testdata/sf0.001", seed=42, task="regression", **cfg
+        SF_SMOKE, seed=42, task="regression", **cfg
     )
     assert res.losses == twin
     assert res.losses[-1] < res.losses[0]
