@@ -1,6 +1,6 @@
 """Deployment-gated lineage cutting.
 
-Several operators (iterative BFS / label propagation, dedup loser
+Several operators (iterative BFS / label propagation, dedup candidate
 sets, the training frame, streaming snapshot merges) must materialize
 an intermediate and *cut its lineage* — a bare ``persist()`` is not
 enough when the next step re-derives the frame from a source that is

@@ -500,17 +500,25 @@ def minhash_lsh_dedup(
     (r14: the cross-corpus candidate set is a parity slice of this
     same frame, see ``q_minhash_dedup``).
 
+    The result is lazy and not cut: a caller that feeds it to more
+    than one action cuts it once (``cut_lineage`` or ``cut_count``),
+    or each action re-runs the verify join.
+
     Default ``shingle_k=9``: with char 5-grams, unrelated docs drawn
     from one vocabulary share ~0.17 Jaccard, so 4-row LSH bands pass
     ~1% of ALL pairs as candidates (O(n²) verify — the scale killer);
     9-grams drop baseline similarity to ~0.03 while true near-dups stay
     ≥0.8, cutting candidates by ~100× for the same recall curve."""
-    # a single input file = a single partition = one core doing all the
-    # signature math; spread it (at scale the scan is already split)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
     if signed is None:
+        # a single input file = a single partition = one core doing all
+        # the signature math; spread it (at scale the scan is already
+        # split). Probed only on THIS branch, as in
+        # minhash_dedup_against: with precomputed signatures the
+        # per-row work is done, and under AQE the .rdd partition probe
+        # runs every exchange of a lazy input as hidden jobs.
+        par = df.sparkSession.sparkContext.defaultParallelism
+        if df.rdd.getNumPartitions() < par:
+            df = df.repartition(par)
         signed = minhash_signature(df, text_col, num_perm, shingle_k)
     cand = (
         candidates
@@ -520,18 +528,10 @@ def minhash_lsh_dedup(
     verified = ngram_jaccard_pairs(
         df, text_col, id_col, shingle_k, threshold, candidates=cand
     )
-    # losers is consumed by the anti-join's broadcast side; materialize
-    # it once so the verify join chain doesn't re-run during that build.
-    # localCheckpoint (not persist): a bare persist() here could never
-    # be unpersisted — the result is lazy, so the right moment is after
-    # the CALLER's action — and would pin executor memory for the
-    # session; checkpoint blocks are instead reclaimed by the
-    # ContextCleaner as soon as the frame is garbage-collected.
-    losers = (
-        cut_lineage(
-            verified.select(F.col("id_b").alias(id_col)).distinct(), eager=True
-        )
-    )
+    # no cut on losers: the anti-join is its only consumer, and the
+    # candidate and shingle frames the verify join reads are already
+    # materialized above; a caller that fans the result out cuts it
+    losers = verified.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, id_col, "left_anti")
 
 

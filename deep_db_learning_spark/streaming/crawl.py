@@ -20,6 +20,25 @@ This composes the three batch pieces
 - signatures are computed ONCE per batch and shared by the
   against-store join, the within-batch dedup, and the index append.
 
+Each batch materializes (eager ``cut_lineage``) exactly the frames
+with more than one consumer; each of those consumers would otherwise
+re-run the frame's whole plan:
+
+- ``sig``, the batch's signatures: the against-store banding, the
+  within-batch banding (semi-joined to the survivors) and the index
+  rows (semi-joined to the kept ids);
+- the SURVIVORS of the against-store pass (the verify chain over the
+  standing corpus, ~12 jobs per evaluation): the within-batch pass
+  reads them three times — their ids select the signatures it bands,
+  its verify shingles the candidate docs among them, and its
+  anti-join keeps the survivors that lost no within-batch pair;
+- ``kept``, the batch's final survivors: the kept-partition write and
+  the kept-id semi-join that selects the index rows.
+
+The within-batch losers and the new index (old index ∪ band rows)
+each have one consumer — the anti-join and the snapshot commit's
+write — and stay lazy.
+
 At 100 TB this is the production shape: per batch the standing index
 is scanned only through the (band, bucket) join, the standing texts
 only for verify candidates, and the index append is the kept batch's
@@ -84,11 +103,14 @@ def stream_dedup_into_band_index(
             # holds compacted_<id> (+ possibly covered leftovers from a
             # crash window) — a bare read.parquet would double-count
             reference = read_parts(spark, kept_path)
-            kept = minhash_dedup_against(
-                kept, reference, text_col, id_col,
-                num_perm=num_perm, bands=bands, shingle_k=shingle_k,
-                threshold=threshold,
-                new_signed=sig, ref_banded=old_index,
+            kept = cut_lineage(
+                minhash_dedup_against(
+                    kept, reference, text_col, id_col,
+                    num_perm=num_perm, bands=bands, shingle_k=shingle_k,
+                    threshold=threshold,
+                    new_signed=sig, ref_banded=old_index,
+                ),
+                eager=True,
             )
         if within_batch:
             kept_ids = kept.select(id_col)
@@ -114,7 +136,6 @@ def stream_dedup_into_band_index(
             band_rows if old_index is None
             else old_index.unionByName(band_rows)
         )
-        new_index = cut_lineage(new_index, eager=True)
         store.commit(new_index, batch_id=batch_id)
         if keep_last is not None:
             from .node_store import vacuum_snapshots

@@ -65,6 +65,7 @@ def build_parser() -> argparse.ArgumentParser:
 def run(spark, args) -> dict:
     from pyspark.sql import functions as F
 
+    from deep_db_learning_spark.checkpoint import cut_count
     from deep_db_learning_spark.functions.text import (
         contamination_matches,
         quality_score,
@@ -164,8 +165,12 @@ def run(spark, args) -> dict:
     docs = exact_dedup_keep_rows(docs, "text", "doc_id")
     funnel["exact_dedup"] = docs.count()
     kept = minhash_lsh_dedup(docs, "text", "doc_id")
-    docs = docs.join(kept.select("doc_id"), "doc_id", "leftsemi")
-    funnel["near_dedup"] = docs.count()
+    # cut and count in one job: the survivors feed every later stage,
+    # and each would otherwise re-run the verify join and the stages
+    # above it
+    docs, funnel["near_dedup"] = cut_count(
+        docs.join(kept.select("doc_id"), "doc_id", "leftsemi")
+    )
 
     # 3. SemDeDup on the embedding table (vec_id keys documents 1:1 in
     # the synthetic corpus; a production run joins on its own id map)

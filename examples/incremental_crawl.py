@@ -63,6 +63,7 @@ def build_parser() -> argparse.ArgumentParser:
 def run(spark, args) -> dict:
     from pyspark.sql import functions as F
 
+    from deep_db_learning_spark.checkpoint import cut_count
     from deep_db_learning_spark.operators.dedup import minhash_dedup_against
     from deep_db_learning_spark.operators.similarity import (
         ivf_append,
@@ -156,10 +157,14 @@ def run(spark, args) -> dict:
             .count()
         )
 
-    kept = minhash_dedup_against(
-        batch_docs, store_docs, "text", "doc_id", threshold=args.threshold
+    # cut and count in one job: kept feeds the vector semi-join, the
+    # postings append, the corpus union and the summary counts, and
+    # each would otherwise re-sign the store half and re-verify
+    kept, n_kept = cut_count(
+        minhash_dedup_against(
+            batch_docs, store_docs, "text", "doc_id", threshold=args.threshold
+        )
     )
-    n_kept = kept.count()
 
     # vector half: the standing store's vectors are the even half; the
     # kept batch docs' vectors append (doc_id keys the embedding here)

@@ -244,6 +244,46 @@ def test_dedup_paragraphs_boilerplate_removal(spark, duck):
     assert out == want
 
 
+def test_minhash_lsh_dedup_signed_runs_no_input_plan(spark, monkeypatch):
+    """With precomputed signatures, building minhash_lsh_dedup's result
+    runs none of the input's plan before the caller's action. The .rdd
+    partition probe, which under AQE executes every exchange of a lazy
+    input as hidden jobs, is taken only when the function signs the
+    input itself. The operator's own lineage cuts are stubbed out, so
+    any job fired while building is a hidden one."""
+    from deep_db_learning_spark.checkpoint import cut_lineage
+
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog and runs away fast"),
+        (2, "the quick brown fox jumps over the lazy dog and runs away fast!"),
+        (3, "a totally different document about spark query optimization today"),
+    ]
+    # a lazy input with an exchange, at fewer partitions than the
+    # default parallelism (the probe's repartition condition)
+    df = spark.createDataFrame(rows, "doc_id bigint, text string").repartition(
+        2, "doc_id"
+    )
+    signed = cut_lineage(dedup.minhash_signature(df, "text", num_perm=64))
+    monkeypatch.setattr(dedup, "cut_lineage", lambda frame, eager=True: frame)
+    sc = spark.sparkContext
+
+    def build(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            kept = dedup.minhash_lsh_dedup(df, "text", "doc_id", **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return kept, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    kept, n_jobs = build("lsh_dedup_signed_build", signed=signed)
+    assert n_jobs == 0
+    assert {r["doc_id"] for r in kept.collect()} == {1, 3}
+    # the input does carry an exchange that the probe would run
+    kept, n_jobs = build("lsh_dedup_unsigned_build")
+    assert n_jobs > 0
+    assert {r["doc_id"] for r in kept.collect()} == {1, 3}
+
+
 def test_minhash_dedup_against_reference(spark):
     """Cross-corpus dedup (r5): rows of the new corpus that
     near-duplicate any reference doc are dropped; unique rows survive;

@@ -1,9 +1,13 @@
 """The user-facing experiment CLI (examples/run_experiment.py — the
 reference main.py counterpart) drives the whole pipeline."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/examples")
+# this checkout's examples, wherever the checkout lives
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "examples")
+)
 
 
 def test_run_experiment_minibatch(spark, tmp_path):

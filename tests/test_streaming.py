@@ -768,6 +768,91 @@ def test_stream_dedup_into_band_index(spark, db, tmp_path):
     assert got_idx == want_idx
 
 
+# jobs the third batch of test_stream_dedup_three_batches_jobs fires,
+# the stream's own included: 36 or 37 on local[4] (AQE plans the
+# survivors' verify chain as 13 or 14 jobs, run to run); re-running
+# that chain for each of its four consumers fires 73
+CRAWL_BATCH_MAX_JOBS = 37
+
+
+def test_stream_dedup_three_batches_jobs(spark, db, tmp_path):
+    """Three micro-batches, one stream run each (the crawl's
+    arrival shape): the third batch, which dedups against a non-empty
+    index and then within itself, fires at most CRAWL_BATCH_MAX_JOBS
+    Spark jobs, because the survivors of the against-store pass are
+    materialized once for their four consumers; the kept corpus and
+    index equal the batch-mode composition."""
+    from pyspark.sql import functions as F
+
+    from deep_db_learning_spark.checkpoint import cut_lineage
+    from deep_db_learning_spark.operators.dedup import (
+        minhash_band_index,
+        minhash_dedup_against,
+        minhash_lsh_dedup,
+    )
+    from deep_db_learning_spark.streaming import (
+        SnapshotStore,
+        stream_dedup_into_band_index,
+    )
+    from deep_db_learning_spark.streaming.crawl import read_parts
+
+    docs = db.df("documents").select("doc_id", "text")
+    batches = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    in_dir = str(tmp_path / "in")
+    kept_dir = str(tmp_path / "kept")
+    idx_dir = str(tmp_path / "idx")
+    sc = spark.sparkContext
+    for b in batches:
+        b.coalesce(1).write.mode("append").parquet(in_dir)
+        stream = (
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir)
+        )
+        q = stream_dedup_into_band_index(
+            stream, idx_dir, str(tmp_path / "ck"), kept_dir
+        )
+        q.awaitTermination(180)
+        assert q.exception() is None
+    # foreachBatch runs on the stream thread, under the run's job group
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert 0 < n_jobs <= CRAWL_BATCH_MAX_JOBS
+
+    # batch-mode composition: each batch deduped against the union of
+    # the earlier batches' survivors, then within itself; each
+    # survivor set is cut once, as it feeds every later stage
+    k1 = cut_lineage(
+        minhash_lsh_dedup(batches[0], "text", "doc_id", threshold=0.7)
+    )
+    k2 = cut_lineage(
+        minhash_lsh_dedup(
+            minhash_dedup_against(
+                batches[1], k1, "text", "doc_id", threshold=0.7
+            ),
+            "text", "doc_id", threshold=0.7,
+        )
+    )
+    k3 = cut_lineage(
+        minhash_lsh_dedup(
+            minhash_dedup_against(
+                batches[2], k1.unionByName(k2), "text", "doc_id",
+                threshold=0.7,
+            ),
+            "text", "doc_id", threshold=0.7,
+        )
+    )
+    kept = k1.unionByName(k2).unionByName(k3)
+    want = sorted(map(tuple, kept.collect()))
+    assert sorted(map(tuple, read_parts(spark, kept_dir).collect())) == want
+    assert len(want) < docs.count()  # dups actually dropped
+    want_idx = sorted(
+        map(tuple, minhash_band_index(kept, "text", "doc_id").collect())
+    )
+    got_idx = sorted(map(tuple, SnapshotStore(idx_dir).read(spark).collect()))
+    assert got_idx == want_idx
+
+
 def test_doc_index_stats_survive_crash_window(spark, db, tmp_path):
     """r8 hardening (ADVICE): stats are written BEFORE the pointer
     flips, so every committed version has its stats even if the writer
