@@ -1287,7 +1287,7 @@ def q_train_relational(spark, sf_dir):
         seed=42,
         **THREE_LAYER_BENCH_CONFIG,
     )
-    # TabNet decision head through the fit_fn hand-off (r6): frozen
+    # TabNet decision head over the assembled root frame (r6): frozen
     # seeded encoder (exact-mode kernel, batch-independent), in-engine
     # decimal-fold GD on the head; twin plans/train_oracle.py
     from deep_db_learning_spark.plans.tabnet_head import (
@@ -1304,7 +1304,7 @@ def q_train_relational(spark, sf_dir):
         seed=42,
         **TABNET_HEAD_BENCH_CONFIG,
     )
-    # Trompt decision head, same fit_fn pattern (r6): frozen seeded
+    # Trompt decision head, same pattern (r6): frozen seeded
     # prompt-bank encoder over per-column embeddings, mean-pooled,
     # decimal-fold head GD; twin _trompt_head_losses
     tro = train_trompt_head(

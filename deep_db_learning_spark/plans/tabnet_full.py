@@ -36,12 +36,14 @@ partitioning-independent); SGD runs on the driver; the independent
 twins (``train_oracle._tabnet_full_losses`` / ``_trompt_full_losses``)
 replay every epoch's loss bit-for-bit from DuckDB-read parquet.
 
-The gradient fold here is a ``posexplode → groupBy(pos) → sum`` —
-unlike the head trainers' wide single-row aggregate — because the
-full parameter vector is ~4k components: four thousand aggregate
-expressions in one projection is a plan-compilation hazard, while one
-narrow shuffle of (pos, decimal) pairs is the same exact arithmetic at
-any parameter count (and is how a 100×-wider model would fold too).
+The gradient fold is the one every in-engine trainer runs:
+``training.dec9_udf`` emits each row's dec9 vector and
+``training.fold_dec9`` sums it with ``posexplode → groupBy(pos) →
+sum``. The full parameter vector here is ~4k components: four thousand
+aggregate expressions in one projection is a plan-compilation hazard,
+while one narrow shuffle of (pos, decimal) pairs is the same exact
+arithmetic at any parameter count (and is how a 100×-wider model would
+fold too).
 
 Seeding: every encoder parameter initializes at the IDENTICAL
 ``_seeded_matrix`` draw the frozen kernels use, and the head at the
@@ -59,8 +61,14 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from ..checkpoint import cut_lineage
-from ..functions.exact_agg import DECIMAL_TYPE
-from .training import TrainResult, _dec9_py, row_logits, split_metric
+from .training import (
+    TrainResult,
+    assemble_training_frame,
+    dec9_udf,
+    fold_dec9,
+    row_logits,
+    split_metric,
+)
 
 TABNET_FULL_BENCH_CONFIG = {
     "epochs": 3,
@@ -281,39 +289,6 @@ def sgd_step(p: dict, specs, flat_grads, n: int, lr: float, l2: float) -> None:
             p[name] = p[name] - lr * (g / n + l2 * p[name])
 
 
-def _fold_flat_grads(tr, grad_col, glen: int, n: int):
-    """ONE Spark job: ``posexplode`` the per-row decimal gradient
-    arrays and sum per position — exact decimal addition is associative
-    so the fold is partitioning-independent; the shuffle is narrow
-    ``(pos, decimal)`` pairs and the driver collects exactly ``glen``
-    rows. A NULL sum over a non-empty position = decimal overflow
-    (fail loudly, never a silent zero gradient)."""
-    rows = (
-        tr.select(F.posexplode(grad_col).alias("pos", "v"))
-        .groupBy("pos")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
-        .collect()
-    )
-    by_pos = {r["pos"]: r for r in rows}
-    if len(by_pos) != glen:
-        raise ArithmeticError(
-            f"gradient fold returned {len(by_pos)} positions, expected {glen}"
-        )
-    out = np.empty(glen, dtype=np.float64)
-    for i in range(glen):
-        r = by_pos[i]
-        if r["c"] != n:
-            raise ArithmeticError(
-                f"gradient position {i} folded {r['c']} rows, expected {n}"
-            )
-        if r["s"] is None:
-            raise ArithmeticError(
-                f"decimal overflow in full-trainer gradient fold at position {i}"
-            )
-        out[i] = float(r["s"])
-    return out
-
-
 def train_tabnet_full(
     tables,
     primary_keys,
@@ -335,99 +310,69 @@ def train_tabnet_full(
 ) -> TrainResult:
     """Joint full-batch GD on EVERY TabNet parameter (all GLU feature
     transformers, all attentive transformers, the output projection,
-    the decision head) through the stack trainer's ``fit_fn`` seam —
-    see the module docstring. ``task="regression"`` swaps the k=1
+    the decision head) over the assembled root frame — see the module
+    docstring. ``task="regression"`` swaps the k=1
     half-squared-error head on the train-standardized double label
     (accuracy dict carries decimal-fold per-split MSE — the
     ``_fit_linear_head`` conventions). Twin:
     ``train_oracle._tabnet_full_losses``."""
-    from .stack import ORDERS_LAYER_SPEC, train_relational_stack
     from .tabnet_head import tabnet_feature_expr
 
     regression = task == "regression"
+    frame, meta = assemble_training_frame(
+        tables, primary_keys, foreign_keys, target, cat_col, num_cols,
+        seed=seed, neighbor_budget=neighbor_budget, task=task,
+    )
+    card = meta["n_codes"]
+    k = meta["n_classes"]
+    # the flat input row (one-hot code ++ standardized nums) is
+    # parameter-FREE — materialize it once; every epoch's gradient
+    # kernel re-runs forward+backward over it with the live params
+    full = cut_lineage(
+        frame.select("split", "label", tabnet_feature_expr(card).alias("x")),
+        eager=True,
+    )
+    tr = full.filter(F.col("split") == "train").select("x", "label")
+    in_ch = card + meta["n_num"]
+    fc, ac = feat_channels, attn_channels
+    specs = tabnet_param_specs(in_ch, num_layers, fc, ac, out_channels, k)
+    p = tabnet_seed_params(in_ch, num_layers, fc, ac, out_channels, k, seed)
+    glen = 1 + sum(int(np.prod(s)) for _n, s, _b in specs)
 
-    def fit(frame, frames, meta):
-        card = meta["n_codes"]
-        k = meta["n_classes"]
-        # the flat input row (one-hot code ++ standardized nums) is
-        # parameter-FREE — materialize it once; every epoch's gradient
-        # UDF re-runs forward+backward over it with the live params
-        full = cut_lineage(
-            frame.select(
-                "split", "label", tabnet_feature_expr(card).alias("x")
-            ),
-            eager=True,
-        )
-        tr = full.filter(F.col("split") == "train").select("x", "label")
-        n = tr.count()
-        in_ch = int(full.select(F.size("x")).first()[0])
-        fc, ac = feat_channels, attn_channels
-        specs = tabnet_param_specs(in_ch, num_layers, fc, ac, out_channels, k)
-        p = tabnet_seed_params(in_ch, num_layers, fc, ac, out_channels, k, seed)
-        glen = 1 + sum(int(np.prod(s)) for _n, s, _b in specs)
-
-        losses: list[float] = []
-        for _ in range(epochs):
-            from decimal import Decimal
-
-            import pandas as pd
-            from pyspark.sql.functions import pandas_udf
-
-            pc = {kk: v.copy() for kk, v in p.items()}
-
-            def grad_fn(x, label):
-                X = np.vstack(x.to_list())
-                y = label.to_numpy(
-                    dtype=np.float64 if regression else np.int64
-                )
-                out = tabnet_full_row_grads(
-                    X, y, pc, num_layers, fc, ac, k, gamma, task=task
-                )
-                return pd.Series(
-                    [[_dec9_py(Decimal, v) for v in row] for row in out]
-                )
-
-            grad_fn.__annotations__ = {
-                "x": pd.Series, "label": pd.Series, "return": pd.Series,
-            }
-            udf = pandas_udf(grad_fn, f"array<{DECIMAL_TYPE}>")
-            flat = _fold_flat_grads(
-                tr.select(udf("x", "label").alias("g")), "g", glen, n
-            )
-            losses.append(flat[0] / n + 0.5 * l2 * l2_term(p, specs))
-            sgd_step(p, specs, flat, n, lr, l2)
-
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
+    losses: list[float] = []
+    for _ in range(epochs):
         pc = {kk: v.copy() for kk, v in p.items()}
 
-        def pred_fn(x):
+        def grad_kernel(x, label):
             X = np.vstack(x.to_list())
-            fw = tabnet_full_forward(X, pc, num_layers, fc, ac, gamma)
-            if regression:
-                return pd.Series(fw["logits"][:, 0])
-            return pd.Series(np.argmax(fw["logits"], axis=1).astype(np.int64))
+            y = label.to_numpy(dtype=np.float64 if regression else np.int64)
+            return tabnet_full_row_grads(
+                X, y, pc, num_layers, fc, ac, k, gamma, task=task
+            )
 
-        pred_fn.__annotations__ = {"x": pd.Series, "return": pd.Series}
-        pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
-        preds = full.select("split", "label", pudf("x").alias("pred"))
-        return TrainResult(
-            losses=losses, accuracy=split_metric(preds, task), params=p
+        flat, _, n = fold_dec9(
+            tr.select(dec9_udf(grad_kernel, "x", "label").alias("g")), glen
         )
+        losses.append(flat[0] / n + 0.5 * l2 * l2_term(p, specs))
+        sgd_step(p, specs, flat, n, lr, l2)
 
-    return train_relational_stack(
-        tables,
-        primary_keys,
-        foreign_keys,
-        layers=(ORDERS_LAYER_SPEC,),
-        target=target,
-        cat_col=cat_col,
-        num_cols=num_cols,
-        seed=seed,
-        neighbor_budget=neighbor_budget,
-        task=task,
-        fit_fn=fit,
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    pc = {kk: v.copy() for kk, v in p.items()}
+
+    def pred_fn(x):
+        X = np.vstack(x.to_list())
+        fw = tabnet_full_forward(X, pc, num_layers, fc, ac, gamma)
+        if regression:
+            return pd.Series(fw["logits"][:, 0])
+        return pd.Series(np.argmax(fw["logits"], axis=1).astype(np.int64))
+
+    pred_fn.__annotations__ = {"x": pd.Series, "return": pd.Series}
+    pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
+    preds = full.select("split", "label", pudf("x").alias("pred"))
+    return TrainResult(
+        losses=losses, accuracy=split_metric(preds, task), params=p
     )
 
 
@@ -547,105 +492,69 @@ def train_trompt_full(
     """Joint full-batch GD on EVERY Trompt parameter (the prompt bank,
     every layer's attention weight, the decision head; the N1/N2 column
     embeddings stay the frozen seeded shapes — they are the embedder's
-    contract, not the encoder's) through the stack trainer's ``fit_fn``
-    seam. ``task="regression"``: the k=1 half-squared-error head.
+    contract, not the encoder's), drawn once by
+    ``tabnet_head.trompt_column_embedder``. ``task="regression"``: the
+    k=1 half-squared-error head.
     Twin: ``train_oracle._trompt_full_losses``."""
-    from .stack import ORDERS_LAYER_SPEC, train_relational_stack
-    from .tabnet_head import trompt_column_embeddings
+    from .tabnet_head import trompt_column_embedder
 
     regression = task == "regression"
+    frame, meta = assemble_training_frame(
+        tables, primary_keys, foreign_keys, target, cat_col, num_cols,
+        seed=seed, neighbor_budget=neighbor_budget, task=task,
+    )
+    k = meta["n_classes"]
+    embed = trompt_column_embedder(meta["n_codes"], meta["n_num"], ch, seed)
+    full = cut_lineage(
+        frame.select("split", "label", "code", "nums"), eager=True
+    )
+    tr = full.filter(F.col("split") == "train").select("code", "nums", "label")
+    specs = trompt_param_specs(ch, num_prompts, num_layers, k)
+    p = trompt_seed_params(ch, num_prompts, num_layers, k, seed)
+    glen = 1 + sum(int(np.prod(s)) for _n, s, _b in specs)
 
-    def fit(frame, frames, meta):
-        card = meta["n_codes"]
-        k = meta["n_classes"]
-        full = cut_lineage(
-            frame.select("split", "label", "code", "nums"), eager=True
-        )
-        tr = full.filter(F.col("split") == "train").select(
-            "code", "nums", "label"
-        )
-        n = tr.count()
-        specs = trompt_param_specs(ch, num_prompts, num_layers, k)
-        p = trompt_seed_params(ch, num_prompts, num_layers, k, seed)
-        glen = 1 + sum(int(np.prod(s)) for _n, s, _b in specs)
-
-        losses: list[float] = []
-        for _ in range(epochs):
-            from decimal import Decimal
-
-            import pandas as pd
-            from pyspark.sql.functions import pandas_udf
-
-            pc = {kk: v.copy() for kk, v in p.items()}
-
-            def grad_fn(code, nums, label):
-                out = []
-                for c, xs, y in zip(
-                    code.to_numpy(dtype=np.int64),
-                    nums.to_list(),
-                    label.to_numpy(
-                        dtype=np.float64 if regression else np.int64
-                    ),
-                ):
-                    m = trompt_column_embeddings(int(c), xs, card, ch, seed)
-                    g = trompt_full_row_grads(
-                        m, y if regression else int(y), pc,
-                        num_layers, num_prompts, k, task=task,
-                    )
-                    out.append([_dec9_py(Decimal, v) for v in g])
-                return pd.Series(out)
-
-            grad_fn.__annotations__ = {
-                "code": pd.Series, "nums": pd.Series,
-                "label": pd.Series, "return": pd.Series,
-            }
-            udf = pandas_udf(grad_fn, f"array<{DECIMAL_TYPE}>")
-            flat = _fold_flat_grads(
-                tr.select(udf("code", "nums", "label").alias("g")),
-                "g", glen, n,
-            )
-            losses.append(flat[0] / n + 0.5 * l2 * l2_term(p, specs))
-            sgd_step(p, specs, flat, n, lr, l2)
-
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
+    losses: list[float] = []
+    for _ in range(epochs):
         pc = {kk: v.copy() for kk, v in p.items()}
 
-        def pred_fn(code, nums):
-            out = []
-            for c, xs in zip(code.to_numpy(dtype=np.int64), nums.to_list()):
-                m = trompt_column_embeddings(int(c), xs, card, ch, seed)
-                _c, _e, logits = trompt_full_forward(
-                    m, pc, num_layers, num_prompts
+        def grad_kernel(code, nums, label):
+            ys = label.to_numpy(dtype=np.float64 if regression else np.int64)
+            return np.vstack([
+                trompt_full_row_grads(
+                    embed(c, xs), y if regression else int(y), pc,
+                    num_layers, num_prompts, k, task=task,
                 )
-                out.append(
-                    float(logits[0]) if regression
-                    else int(np.argmax(logits))
-                )
-            return pd.Series(out)
+                for c, xs, y in zip(code.to_numpy(dtype=np.int64), nums.to_list(), ys)
+            ])
 
-        pred_fn.__annotations__ = {
-            "code": pd.Series, "nums": pd.Series, "return": pd.Series,
-        }
-        pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
-        preds = full.select(
-            "split", "label", pudf("code", "nums").alias("pred")
+        flat, _, n = fold_dec9(
+            tr.select(dec9_udf(grad_kernel, "code", "nums", "label").alias("g")),
+            glen,
         )
-        return TrainResult(
-            losses=losses, accuracy=split_metric(preds, task), params=p
-        )
+        losses.append(flat[0] / n + 0.5 * l2 * l2_term(p, specs))
+        sgd_step(p, specs, flat, n, lr, l2)
 
-    return train_relational_stack(
-        tables,
-        primary_keys,
-        foreign_keys,
-        layers=(ORDERS_LAYER_SPEC,),
-        target=target,
-        cat_col=cat_col,
-        num_cols=num_cols,
-        seed=seed,
-        neighbor_budget=neighbor_budget,
-        task=task,
-        fit_fn=fit,
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    pc = {kk: v.copy() for kk, v in p.items()}
+
+    def pred_fn(code, nums):
+        out = []
+        for c, xs in zip(code.to_numpy(dtype=np.int64), nums.to_list()):
+            _c, _e, logits = trompt_full_forward(
+                embed(c, xs), pc, num_layers, num_prompts
+            )
+            out.append(
+                float(logits[0]) if regression else int(np.argmax(logits))
+            )
+        return pd.Series(out)
+
+    pred_fn.__annotations__ = {
+        "code": pd.Series, "nums": pd.Series, "return": pd.Series,
+    }
+    pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
+    preds = full.select("split", "label", pudf("code", "nums").alias("pred"))
+    return TrainResult(
+        losses=losses, accuracy=split_metric(preds, task), params=p
     )

@@ -1,5 +1,5 @@
-"""TabNet decision-head training through the stack trainer's
-``fit_fn`` seam (VERDICT r5 #5).
+"""TabNet / Trompt decision-head training over frozen seeded
+encoders (VERDICT r5 #5).
 
 The reference trains the FULL TabNet (``nn/models/tabular/tabnet.py:
 15-308``); ``plans/tabnet_full`` does that in-engine. Here the
@@ -10,15 +10,14 @@ rank-1 accumulation, so the encoding is Arrow-batch-independent), and
 the DECISION HEAD — the linear map from aggregated decision features to
 class logits, the reference's final ``Linear`` — trains in-engine under
 the repo's bit-determinism contract: per-row gradients dec9-quantized
-in an Arrow kernel, folded with exact decimal sums (associative ⇒
-partitioning-independent), SGD on the driver. The loss trajectory is
-replayed bit-for-bit by the independent twin
-(``plans/train_oracle._tabnet_head_losses``).
+in an Arrow kernel (``training.dec9_udf``), folded with exact decimal
+sums (``training.fold_dec9`` — associative ⇒ partitioning-independent),
+SGD on the driver. The loss trajectory is replayed bit-for-bit by the
+independent twin (``plans/train_oracle._tabnet_head_losses``).
 
-Wiring: :func:`train_tabnet_head` delegates assembly to
-``train_relational_stack`` and injects itself as the ``fit_fn`` — the
-exact hand-off a TorchDistributor-based full-encoder trainer would use,
-now exercised end-to-end in-engine.
+Wiring: each head trainer assembles the root frame with
+``training.assemble_training_frame`` and fits on ``(frame, meta)``;
+no head reads the stack's per-layer child frames, so none are built.
 """
 
 from __future__ import annotations
@@ -27,9 +26,14 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from ..checkpoint import cut_lineage
-from ..functions.exact_agg import DECIMAL_TYPE
-from .stack import _require_nonnull_sums
-from .training import TrainResult, _dec9_py, row_logits, split_metric
+from .training import (
+    TrainResult,
+    assemble_training_frame,
+    dec9_udf,
+    fold_dec9,
+    row_logits,
+    split_metric,
+)
 
 # shared CONFIG with the oracle twin and the driver query (the
 # *_BENCH_CONFIG convention): hyperparameters can never diverge
@@ -60,20 +64,19 @@ def _fit_linear_head(
 ) -> TrainResult:
     """Shared decision-head GD over a frozen encoder column ``enc``
     (an ``array<double>`` of width ``d``): encode ONCE into a
-    materialized frame, then per epoch one Spark job folds the
-    dec9-quantized per-row gradients as exact decimals; SGD on the
-    driver. ``task="classification"`` (softmax CE, integer labels) or
-    ``"regression"`` (k=1 linear head, half-squared error on the
-    train-standardized double label — the stack trainer's regression
-    conventions); the per-split metric is :func:`~.training.split_metric`.
-    Used by both the TabNet and Trompt heads — and replayed by their
-    twins."""
+    materialized frame, then per epoch one :func:`~.training.fold_dec9`
+    job folds the dec9-quantized per-row gradients as exact decimals;
+    SGD on the driver. ``task="classification"`` (softmax CE, integer
+    labels) or ``"regression"`` (k=1 linear head, half-squared error on
+    the train-standardized double label — the stack trainer's
+    regression conventions); the per-split metric is
+    :func:`~.training.split_metric`. Used by both the TabNet and Trompt
+    heads — and replayed by their twins."""
     regression = task == "regression"
     full = cut_lineage(
         frame.select("split", "label", enc.alias("x")), eager=True
     )
     tr = full.filter(F.col("split") == "train").select("x", "label")
-    n = tr.count()
     rng = np.random.default_rng(seed)
     W = rng.uniform(-0.5, 0.5, size=(d, k)) * 0.1
     b = np.zeros(k)
@@ -81,14 +84,9 @@ def _fit_linear_head(
 
     losses: list[float] = []
     for _ in range(epochs):
-        from decimal import Decimal
-
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
         Wc, bc = W.copy(), b.copy()
 
-        def grad_fn(x, label):
+        def grad_kernel(x, label):
             X = np.vstack(x.to_list())
             if regression:
                 y = label.to_numpy(dtype=np.float64)
@@ -106,7 +104,7 @@ def _fit_linear_head(
                 loss = -np.log(P[rows_idx, y])
                 resid = P.copy()
                 resid[rows_idx, y] -= 1.0
-            out = np.concatenate(
+            return np.concatenate(
                 [
                     loss[:, None],
                     (X[:, :, None] * resid[:, None, :]).reshape(len(X), -1),
@@ -114,38 +112,13 @@ def _fit_linear_head(
                 ],
                 axis=1,
             )
-            return pd.Series(
-                [[_dec9_py(Decimal, v) for v in row] for row in out]
-            )
 
-        grad_fn.__annotations__ = {
-            "x": pd.Series,
-            "label": pd.Series,
-            "return": pd.Series,
-        }
-        udf = pandas_udf(grad_fn, f"array<{DECIMAL_TYPE}>")
-        tot = (
-            tr.select(udf("x", "label").alias("g"))
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                *[
-                    F.sum(F.element_at("g", i + 1)).alias(f"v{i}")
-                    for i in range(glen)
-                ]
-            )
-            .first()
+        tot, _, n = fold_dec9(
+            tr.select(dec9_udf(grad_kernel, "x", "label").alias("g")), glen
         )
-        # NULL sum over a non-empty frame = decimal overflow (the
-        # stack trainer's guard — a silent zero gradient otherwise)
-        _require_nonnull_sums(tot, glen)
-        loss_sum = float(tot["v0"] or 0)
-        GW = np.array(
-            [float(tot[f"v{1 + i}"] or 0) for i in range(d * k)]
-        ).reshape(d, k)
-        gb = np.array(
-            [float(tot[f"v{1 + d * k + i}"] or 0) for i in range(k)]
-        )
-        losses.append(loss_sum / n + 0.5 * l2 * float((W * W).sum()))
+        GW = tot[1 : 1 + d * k].reshape(d, k)
+        gb = tot[1 + d * k :]
+        losses.append(float(tot[0]) / n + 0.5 * l2 * float((W * W).sum()))
         W -= lr * (GW / n + l2 * W)
         b -= lr * (gb / n)
 
@@ -192,31 +165,18 @@ def train_tabnet_head(
     ``task="regression"`` swaps in the k=1 linear / half-squared-error
     head on the train-standardized double label."""
     from ..operators.kernels import tabnet_encode
-    from .stack import ORDERS_LAYER_SPEC, train_relational_stack
 
-    def fit(frame, frames, meta):
-        card = meta["n_codes"]
-        k = meta["n_classes"]
-        enc = tabnet_encode(
-            tabnet_feature_expr(card), out_channels, num_layers,
-            feat_channels, attn_channels, seed=seed, exact=True,
-        )
-        return _fit_linear_head(
-            frame, enc, out_channels, k, epochs, lr, l2, seed, task=task
-        )
-
-    return train_relational_stack(
-        tables,
-        primary_keys,
-        foreign_keys,
-        layers=(ORDERS_LAYER_SPEC,),
-        target=target,
-        cat_col=cat_col,
-        num_cols=num_cols,
-        seed=seed,
-        neighbor_budget=neighbor_budget,
+    frame, meta = assemble_training_frame(
+        tables, primary_keys, foreign_keys, target, cat_col, num_cols,
+        seed=seed, neighbor_budget=neighbor_budget, task=task,
+    )
+    enc = tabnet_encode(
+        tabnet_feature_expr(meta["n_codes"]), out_channels, num_layers,
+        feat_channels, attn_channels, seed=seed, exact=True,
+    )
+    return _fit_linear_head(
+        frame, enc, out_channels, meta["n_classes"], epochs, lr, l2, seed,
         task=task,
-        fit_fn=fit,
     )
 
 
@@ -244,6 +204,28 @@ TROMPT_HEAD_BENCH_CONFIG = {
 }
 
 
+def trompt_column_embedder(card: int, m_num: int, ch: int, seed: int):
+    """The frozen N1/N2 column embeddings of a Trompt row, drawn ONCE:
+    the seeded ``card × ch`` categorical table and the per-numeric
+    ``x·w+b`` weights. Returns ``embed(code, nums)`` → the row's
+    ``[1 + m_num, ch]`` column-embedding matrix — the one construction
+    behind the frozen-encoder head (:func:`trompt_root_encoding_rows`),
+    the full Trompt trainer (``tabnet_full.train_trompt_full``) and
+    their twins."""
+    from ..operators.kernels import _seeded_matrix
+
+    E = _seeded_matrix((seed, "cat"), card, ch, 0.5)
+    Wn = [_seeded_matrix((seed, "num", j), 1, ch, 0.5)[0] for j in range(m_num)]
+    Bn = [_seeded_matrix((seed, "numb", j), 1, ch, 0.5)[0] for j in range(m_num)]
+
+    def embed(code, nums):
+        return np.vstack(
+            [E[int(code)]] + [float(x) * Wn[j] + Bn[j] for j, x in enumerate(nums)]
+        )
+
+    return embed
+
+
 def trompt_root_encoding_rows(
     codes, nums, card: int, ch: int, num_prompts: int, num_layers: int, seed: int
 ):
@@ -251,36 +233,14 @@ def trompt_root_encoding_rows(
     Trompt encodings — the SHARED kernel (engine UDF and twin run this
     identical function). Every per-row op has batch-independent
     shapes, so the encoding never depends on the Arrow split."""
-    from ..operators.kernels import _seeded_matrix, trompt_forward
+    from ..operators.kernels import trompt_forward
 
-    E = _seeded_matrix((seed, "cat"), card, ch, 0.5)
-    m_num = nums.shape[1]
-    Wn = [_seeded_matrix((seed, "num", j), 1, ch, 0.5)[0] for j in range(m_num)]
-    Bn = [_seeded_matrix((seed, "numb", j), 1, ch, 0.5)[0] for j in range(m_num)]
+    embed = trompt_column_embedder(card, nums.shape[1], ch, seed)
     out = np.empty((len(codes), ch))
     for i in range(len(codes)):
-        cols = [E[int(codes[i])]] + [
-            nums[i, j] * Wn[j] + Bn[j] for j in range(m_num)
-        ]
-        st = trompt_forward(np.vstack(cols), num_prompts, num_layers, seed)
+        st = trompt_forward(embed(codes[i], nums[i]), num_prompts, num_layers, seed)
         out[i] = st.mean(axis=0)
     return out
-
-
-def trompt_column_embeddings(code: int, nums, card: int, ch: int, seed: int):
-    """One row's [n_cols, ch] column-embedding matrix — the identical
-    seeded construction ``trompt_root_encoding_rows`` uses (cat lookup
-    + per-numeric x·w+b); the frozen input of the full Trompt trainer
-    (``tabnet_full.train_trompt_full``) and its twin."""
-    from ..operators.kernels import _seeded_matrix
-
-    E = _seeded_matrix((seed, "cat"), card, ch, 0.5)
-    cols = [E[int(code)]]
-    for j, x in enumerate(nums):
-        Wn = _seeded_matrix((seed, "num", j), 1, ch, 0.5)[0]
-        Bn = _seeded_matrix((seed, "numb", j), 1, ch, 0.5)[0]
-        cols.append(float(x) * Wn + Bn)
-    return np.vstack(cols)
 
 
 def train_trompt_head(
@@ -300,46 +260,33 @@ def train_trompt_head(
     num_layers: int = 2,
     task: str = "classification",
 ) -> TrainResult:
-    """Decision-head GD over frozen seeded Trompt encodings, through
-    the stack trainer's fit_fn hand-off — see the section comment.
+    """Decision-head GD over frozen seeded Trompt encodings — see the
+    section comment.
     ``task="regression"``: the k=1 half-squared-error head."""
-    from .stack import ORDERS_LAYER_SPEC, train_relational_stack
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
 
-    def fit(frame, frames, meta):
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
+    frame, meta = assemble_training_frame(
+        tables, primary_keys, foreign_keys, target, cat_col, num_cols,
+        seed=seed, neighbor_budget=neighbor_budget, task=task,
+    )
+    card = meta["n_codes"]
 
-        card = meta["n_codes"]
-        k = meta["n_classes"]
-
-        def enc_fn(code, nums):
-            codes = code.to_numpy(dtype=np.int64)
-            M = np.vstack(nums.to_list()).astype(np.float64)
-            out = trompt_root_encoding_rows(
-                codes, M, card, ch, num_prompts, num_layers, seed
-            )
-            return pd.Series([row.tolist() for row in out])
-
-        enc_fn.__annotations__ = {
-            "code": pd.Series,
-            "nums": pd.Series,
-            "return": pd.Series,
-        }
-        udf = pandas_udf(enc_fn, "array<double>")
-        return _fit_linear_head(
-            frame, udf("code", "nums"), ch, k, epochs, lr, l2, seed, task=task
+    def enc_fn(code, nums):
+        codes = code.to_numpy(dtype=np.int64)
+        M = np.vstack(nums.to_list()).astype(np.float64)
+        out = trompt_root_encoding_rows(
+            codes, M, card, ch, num_prompts, num_layers, seed
         )
+        return pd.Series([row.tolist() for row in out])
 
-    return train_relational_stack(
-        tables,
-        primary_keys,
-        foreign_keys,
-        layers=(ORDERS_LAYER_SPEC,),
-        target=target,
-        cat_col=cat_col,
-        num_cols=num_cols,
-        seed=seed,
-        neighbor_budget=neighbor_budget,
-        task=task,
-        fit_fn=fit,
+    enc_fn.__annotations__ = {
+        "code": pd.Series,
+        "nums": pd.Series,
+        "return": pd.Series,
+    }
+    udf = pandas_udf(enc_fn, "array<double>")
+    return _fit_linear_head(
+        frame, udf("code", "nums"), ch, meta["n_classes"], epochs, lr, l2,
+        seed, task=task,
     )

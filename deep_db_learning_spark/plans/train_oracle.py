@@ -164,24 +164,18 @@ def _assemble(
     return node_ids, codes_a, y_a, X_num, train_mask
 
 
-def _grad_fold(g, tr_codes, glen, k, card):
-    """Per-code decimal folds, then exact driver accumulation — mirrors
-    ``groupBy(code).agg(sum(decimal))`` + the Decimal loop in
-    ``training._gradient_pass``. Returns ``(tot, resid_by_code)``."""
-    import numpy as np
-
+def _grad_fold(rows, glen: int) -> list[Decimal]:
+    """The twins' one decimal row fold — the replay of
+    ``training.fold_dec9``: sum each component of the per-row float
+    vectors as dec9 decimals, in row order (order-free: decimal
+    addition is exact and associative). Returns the ``glen`` exact
+    ``Decimal`` sums; a caller that needs per-code sums (the engine's
+    ``by="code"`` fold) folds each code's rows and adds the results."""
     tot = [Decimal(0)] * glen
-    resid_by_code = np.zeros((card, k))
-    for c in np.unique(tr_codes):
-        sel = g[tr_codes == c]
+    for row in rows:
         for i in range(glen):
-            v = Decimal(0)
-            for x in sel[:, i]:
-                v += _dec9(x)
-            tot[i] += v
-            if 1 <= i <= k:
-                resid_by_code[int(c), i - 1] = float(v)
-    return tot, resid_by_code
+            tot[i] += _dec9(row[i])
+    return tot
 
 
 def _sgd_losses(
@@ -270,7 +264,13 @@ def _step_gradients(tr_codes, tr_nums, tr_y, E, Wc, bc, glen, k, card, task):
         resid[rows_idx, tr_y] -= 1.0
     gw = (X[:, :, None] * resid[:, None, :]).reshape(nrows, -1)
     g = np.concatenate([loss_rows[:, None], resid, gw], axis=1)
-    return _grad_fold(g, tr_codes, glen, k, card)
+    tot = [Decimal(0)] * glen
+    resid_by_code = np.zeros((card, k))
+    for c in np.unique(tr_codes):
+        sums = _grad_fold(g[tr_codes == c], glen)
+        tot = [t + v for t, v in zip(tot, sums)]
+        resid_by_code[int(c)] = [float(v) for v in sums[1 : 1 + k]]
+    return tot, resid_by_code
 
 
 def _tabnet_head_losses(
@@ -352,10 +352,7 @@ def _head_gd_losses(X, y, k, epochs, lr, l2, seed, task="classification") -> lis
             ],
             axis=1,
         )
-        tot = [Decimal(0)] * glen
-        for row in out:
-            for i in range(glen):
-                tot[i] += _dec9(float(row[i]))
+        tot = _grad_fold(out, glen)
         loss_sum = float(tot[0])
         GW = np.array([float(tot[1 + i]) for i in range(d * k)]).reshape(d, k)
         gb = np.array([float(tot[1 + d * k + i]) for i in range(k)])
@@ -395,19 +392,6 @@ def _trompt_head_losses(
         codes_a[tr], X_num[tr], card, ch, num_prompts, num_layers, seed
     )
     return _head_gd_losses(X, y_a[tr], k, epochs, lr, l2, seed, task=task)
-
-
-def _fold_rows_decimal(rows, glen: int):
-    """Twin of ``tabnet_full._fold_flat_grads``: sum the per-row
-    float gradient vectors as dec9 decimals in row order (order-free —
-    decimal addition is exact and associative)."""
-    import numpy as np
-
-    tot = [Decimal(0)] * glen
-    for row in rows:
-        for i in range(glen):
-            tot[i] += _dec9(float(row[i]))
-    return np.array([float(t) for t in tot], dtype=np.float64)
 
 
 def _tabnet_full_losses(
@@ -460,7 +444,7 @@ def _tabnet_full_losses(
         rows = tabnet_full_row_grads(
             X, y, p, num_layers, fc, ac, k, task=task
         )
-        flat = _fold_rows_decimal(rows, glen)
+        flat = np.array([float(t) for t in _grad_fold(rows, glen)])
         losses.append(flat[0] / n + 0.5 * l2 * l2_term(p, specs))
         sgd_step(p, specs, flat, n, lr, l2)
     return losses
@@ -490,7 +474,7 @@ def _trompt_full_losses(
         trompt_param_specs,
         trompt_seed_params,
     )
-    from .tabnet_head import trompt_column_embeddings
+    from .tabnet_head import trompt_column_embedder
 
     node_ids, codes_a, y_a, X_num, train_mask = _assemble(
         sf_dir, seed, neighbor_budget=neighbor_budget, task=task
@@ -500,10 +484,8 @@ def _trompt_full_losses(
     tr = np.where(train_mask)[0]
     n = len(tr)
     # the frozen column embeddings are parameter-independent
-    ms = [
-        trompt_column_embeddings(int(codes_a[i]), X_num[i], card, ch, seed)
-        for i in tr
-    ]
+    embed = trompt_column_embedder(card, X_num.shape[1], ch, seed)
+    ms = [embed(codes_a[i], X_num[i]) for i in tr]
     ys = [
         float(y_a[i]) if task == "regression" else int(y_a[i]) for i in tr
     ]
@@ -518,7 +500,7 @@ def _trompt_full_losses(
             )
             for m, y in zip(ms, ys)
         ]
-        flat = _fold_rows_decimal(rows, glen)
+        flat = np.array([float(t) for t in _grad_fold(rows, glen)])
         losses.append(flat[0] / n + 0.5 * l2 * l2_term(p, specs))
         sgd_step(p, specs, flat, n, lr, l2)
     return losses
@@ -743,12 +725,7 @@ def _stack_losses(
     def emb_sq(i, E):
         if not frame_l2[i]:
             return float((E * E).sum())
-        t = Decimal(0)
-        for row in E:
-            for v in row:
-                fv = float(v)
-                t += _dec9(fv * fv)
-        return float(t)
+        return float(sum(_grad_fold(E * E, E.shape[1])))
 
     batch_of = np.array(
         [_knuth(int(i), seed + 7) % n_batches for i in ids], dtype=np.int64
@@ -802,10 +779,7 @@ def _stack_losses(
         keys, cvec, X = entry
         _, H = row_forward(i, keys, cvec, X)
         d = dims[i][2]
-        sums = [Decimal(0)] * d
-        for hrow in H:
-            for jj in range(d):
-                sums[jj] += _dec9(hrow[jj])
+        sums = _grad_fold(H, d)
         return np.array([float(sums[jj]) / len(keys) for jj in range(d)]), len(keys)
 
     losses: list[float] = []
@@ -839,7 +813,7 @@ def _stack_losses(
             for i in range(L):
                 d_e, nx, d, m_i = dims[i]
                 glen = m_i * d + d
-                code_tot: dict[int, list] = {}
+                code_rows: dict[int, list] = {}
                 next_g: dict[int, tuple] = {}
                 for pk, (gout, gdeg) in g_map.items():
                     entry = child[i].get(pk)
@@ -854,9 +828,7 @@ def _stack_losses(
                         axis=1,
                     )
                     for ri, row in enumerate(out):
-                        ct = code_tot.setdefault(int(cvec[ri]), [Decimal(0)] * glen)
-                        for ii in range(glen):
-                            ct[ii] += _dec9(row[ii])
+                        code_rows.setdefault(int(cvec[ri]), []).append(row)
                     if i + 1 < L:
                         WhT = l_W[i][d_e + nx :].T
                         gnext = row_logits(D, WhT, np.zeros(dims[i + 1][2]))
@@ -866,9 +838,9 @@ def _stack_losses(
                                 next_g[int(key_)] = (gnext[ri].copy(), hv[1])
                 tot = [Decimal(0)] * glen
                 demb_i = np.zeros((cards[i], d_e))
-                for c, ct in code_tot.items():
-                    for ii in range(glen):
-                        tot[ii] += ct[ii]
+                for c, rows_c in code_rows.items():
+                    ct = _grad_fold(rows_c, glen)
+                    tot = [t + v for t, v in zip(tot, ct)]
                     dsum = np.array([float(ct[m_i * d + jj]) for jj in range(d)])
                     demb_i[c] = dsum @ l_W[i][:d_e].T
                 dW = np.array([float(tot[ii]) for ii in range(m_i * d)]).reshape(m_i, d)

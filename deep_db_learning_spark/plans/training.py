@@ -14,9 +14,11 @@ is huge. So the split is:
 - **every data-parallel pass on Spark**: the design matrix is assembled
   once (graph build → neighbor aggregation → standardization — all
   DataFrame ops) and persisted; each SGD step is ONE Spark job over its
-  batch — a vectorized Arrow UDF computes per-row loss / residual /
-  flattened gradient outer-product, and a single ``groupBy(code)``
-  aggregates everything with exact decimal folds.
+  batch — a vectorized Arrow UDF (:func:`dec9_udf`) computes per-row
+  loss / residual / flattened gradient outer-product, and one exact
+  decimal fold (:func:`fold_dec9`, keyed by code) sums everything. The
+  stack levels, both decision heads and both full encoders fold through
+  the same two helpers.
 
 The full-batch classifier, the minibatch classifier and the regressor
 run ONE loop (:func:`_sgd_head`); full-batch is that loop with a single
@@ -73,6 +75,99 @@ def _dec9_py(Decimal, x):
     return Decimal(repr(float(x))).quantize(_DEC9_EXP, rounding=ROUND_HALF_UP)
 
 
+def dec9_udf(kernel, *cols):
+    """The per-row gradient column every trainer folds: an Arrow UDF
+    over ``cols`` (names or Columns) whose numpy ``kernel`` gets one
+    ``pd.Series`` per column and returns an ``(n, glen)`` float matrix;
+    each component is emitted as ``array<decimal(30,9)>`` through
+    :func:`_dec9_py`. The rounding happens HERE, in Python, not as a
+    JVM cast: the JVM's double→decimal cast goes through
+    ``Double.toString``, which (pre-Ryu JDKs) occasionally emits a
+    non-shortest string that quantizes differently from Python's
+    ``repr`` at a scale-9 tie — one rounding rule on the engine and the
+    oracle twin. The columns ride in one struct, so one closure serves
+    any argument count. ``kernel`` closes over the caller's parameter
+    copies (a fresh closure per step ships the current values)."""
+    import pandas as pd
+
+    from ..operators.kernels import _pandas_udf
+
+    n = len(cols)
+
+    def fn(v):
+        from decimal import Decimal
+
+        out = kernel(*[v[f"a{i}"] for i in range(n)])
+        return pd.Series([[_dec9_py(Decimal, x) for x in row] for row in out])
+
+    arg = F.struct(
+        *[
+            (F.col(c) if isinstance(c, str) else c).alias(f"a{i}")
+            for i, c in enumerate(cols)
+        ]
+    )
+    return _pandas_udf(fn, f"array<{DECIMAL_TYPE}>", struct_input=True)(arg)
+
+
+def fold_dec9(g: DataFrame, glen: int, by: str | None = None):
+    """ONE Spark job folding the dec9 vectors of column ``g`` (each of
+    length ``glen``) as exact decimals: ``posexplode → groupBy([by,]
+    pos) → sum, count``. Decimal addition is exact and associative, so
+    every sum is partitioning-independent. The shuffle is narrow
+    ``(pos, decimal)`` pairs and the driver collects ``glen`` rows (per
+    ``by`` key) — safe at any component count, where a wide one-row
+    aggregate of thousands of expressions is a plan-compilation hazard.
+
+    Returns ``(tot, per_key, n)``: the float64 totals, ``{key: float64
+    sums}`` when ``by`` is set (else ``{}``), and the folded row count.
+    With ``by`` the totals are the exact ``Decimal`` sums of the per-key
+    sums — the same values a global fold gives. An empty frame folds to
+    zeros with ``n == 0``. A NULL sum (decimal overflow: non-ANSI Spark
+    nulls instead of raising) or a missing position (a row shorter
+    than ``glen``) raises ``ArithmeticError`` — never a silent zero
+    gradient."""
+    import numpy as np
+    from decimal import Decimal
+
+    keys = [by] if by else []
+    rows = (
+        g.select(*keys, F.posexplode("g").alias("pos", "v"))
+        .groupBy(*keys, "pos")
+        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
+        .collect()
+    )
+    sums: dict = {}
+    counts: dict = {}
+    for r in rows:
+        key = r[by] if by else None
+        if r["s"] is None:
+            raise ArithmeticError(
+                f"decimal overflow in the dec9 fold: NULL sum at position "
+                f"{r['pos']} over {r['c']} rows"
+            )
+        sums.setdefault(key, {})[r["pos"]] = r["s"]
+        counts.setdefault(key, set()).add(r["c"])
+    for key, s in sums.items():
+        if len(s) != glen or max(s) != glen - 1 or len(counts[key]) != 1:
+            raise ArithmeticError(
+                f"dec9 fold expected positions 0..{glen - 1} with one row "
+                f"count (key {key!r}: {len(s)} positions, row counts "
+                f"{sorted(counts[key])})"
+            )
+    n = sum(c.pop() for c in counts.values())
+    if by is None:
+        tot = [sums[None][i] for i in range(glen)] if sums else [0] * glen
+    else:
+        tot = [Decimal(0)] * glen
+        for s in sums.values():
+            tot = [t + s[i] for i, t in enumerate(tot)]
+    per_key = {
+        key: np.array([float(s[i]) for i in range(glen)], dtype=np.float64)
+        for key, s in sums.items()
+    } if by else {}
+    return np.array([float(t) for t in tot], dtype=np.float64), per_key, n
+
+
 def row_logits(X, W, b):
     """``X @ W + b`` as a FIXED-ORDER accumulation: start from the bias
     and add one rank-1 term per input dimension. A BLAS GEMM may change
@@ -91,10 +186,10 @@ def row_logits(X, W, b):
 
 
 def _gradient_pass(df, E, Wc, bc, dim, m, k, card, task="classification"):
-    """ONE Spark job: per-row loss/residual/gradient via a vectorized
-    Arrow UDF over ``df(code, nums array<double>, label)``, folded with
-    exact decimal sums per code group and accumulated on the driver.
-    Returns ``(loss_sum, resid_tot, GW, resid_by_code)`` — the raw
+    """ONE Spark job: per-row loss/residual/gradient via a
+    :func:`dec9_udf` kernel over ``df(code, nums array<double>,
+    label)``, folded per code by :func:`fold_dec9`. Returns
+    ``(loss_sum, resid_tot, GW, resid_by_code)`` — the raw
     (unnormalized, unregularized) sums, bit-deterministic under any
     partitioning. The one gradient job of :func:`_sgd_head`.
 
@@ -109,14 +204,10 @@ def _gradient_pass(df, E, Wc, bc, dim, m, k, card, task="classification"):
     the same ``[loss, resid(k), grad_W(dim+m × k)]`` row layout, so the
     fold, accumulation, and update algebra are shared."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
     glen = 1 + k + (dim + m) * k
 
-    def grad_fn(code, nums, label):
-        # closure over THIS step's parameter copies (fresh function
-        # object per step — the udf ships the current values)
+    def grad_kernel(code, nums, label):
         codes = code.to_numpy(dtype=np.int64)
         X = np.concatenate([E[codes], np.vstack(nums.to_list())], axis=1)
         nrows = len(codes)
@@ -136,50 +227,15 @@ def _gradient_pass(df, E, Wc, bc, dim, m, k, card, task="classification"):
             resid = P.copy()
             resid[np.arange(nrows), y] -= 1.0
         gw = (X[:, :, None] * resid[:, None, :]).reshape(nrows, -1)
-        out = np.concatenate([loss[:, None], resid, gw], axis=1)
-        # round to the decimal fold's scale HERE, in Python — the
-        # JVM's double→decimal cast goes through Double.toString,
-        # which (pre-Ryu JDKs) occasionally emits a non-shortest
-        # string that quantizes differently from Python's repr at a
-        # scale-9 tie; emitting DECIMAL from the UDF keeps one
-        # rounding rule on both the engine and the oracle twin
-        from decimal import Decimal
+        return np.concatenate([loss[:, None], resid, gw], axis=1)
 
-        return pd.Series([[_dec9_py(Decimal, v) for v in row] for row in out])
-
-    grad_fn.__annotations__ = {
-        "code": pd.Series,
-        "nums": pd.Series,
-        "label": pd.Series,
-        "return": pd.Series,
-    }
-    udf = pandas_udf(grad_fn, f"array<{DECIMAL_TYPE}>")
-    g = df.select("code", udf("code", "nums", "label").alias("g"))
-    sums = g.groupBy("code").agg(
-        *[F.sum(F.element_at("g", i + 1)).alias(f"v{i}") for i in range(glen)]
-    )
-    rows = sums.collect()
-    # exact decimal accumulation across code groups on the driver
-    from decimal import Decimal
-
-    tot = [Decimal(0)] * glen
+    g = df.select("code", dec9_udf(grad_kernel, "code", "nums", "label").alias("g"))
+    tot, by_code, _n = fold_dec9(g, glen, by="code")
     resid_by_code = np.zeros((card, k))
-    for r in rows:
-        c = r["code"]
-        for i in range(glen):
-            v = r[f"v{i}"]
-            if v is not None:
-                tot[i] += v
-        for j in range(k):
-            v = r[f"v{1 + j}"]
-            if v is not None:
-                resid_by_code[c, j] = float(v)
-    loss_sum = float(tot[0])
-    resid_tot = np.array([float(tot[1 + j]) for j in range(k)])
-    GW = np.array(
-        [float(tot[1 + k + i]) for i in range((dim + m) * k)]
-    ).reshape(dim + m, k)
-    return loss_sum, resid_tot, GW, resid_by_code
+    for c, s in by_code.items():
+        resid_by_code[c] = s[1 : 1 + k]
+    GW = tot[1 + k :].reshape(dim + m, k)
+    return float(tot[0]), tot[1 : 1 + k], GW, resid_by_code
 
 
 # The minibatch/regression hyperparameters the driver query AND its

@@ -113,7 +113,7 @@ def run(spark, args) -> dict:
         lr_kw = {} if args.lr is None else {"lr": args.lr}
         if args.mode in ("tabnet", "trompt"):
             # frozen seeded encoder + in-engine decimal-fold head GD
-            # through the stack trainer's fit_fn hand-off (r6); both
+            # over the assembled root frame (r6); both
             # tasks — regression swaps in the k=1 half-squared-error
             # head on the train-standardized label
             from deep_db_learning_spark.plans.tabnet_head import (

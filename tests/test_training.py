@@ -904,22 +904,82 @@ def test_head_trainers_regression_task(db):
     assert tro.losses[-1] < tro.losses[0]
 
 
-def test_frame_fold_overflow_guard():
-    """r7 advice fix: a NULL decimal sum over a NON-EMPTY gradient
-    frame means accumulator overflow (non-ANSI Spark nulls instead of
-    raising) and must raise rather than silently become a zero
-    gradient; empty frames legitimately pass NULLs through."""
+def test_frame_fold_overflow_guard(spark, monkeypatch):
+    """The one exact gradient fold (``training.fold_dec9``) on real
+    frames: a legal dec9 frame folds to the Decimal totals (and per-key
+    sums) of a Python replay; an empty frame folds to zeros; a NULL
+    decimal sum — accumulator overflow, which non-ANSI Spark turns into
+    NULL instead of raising — raises in the global fold and in the
+    per-key fold, never a silent zero gradient; so does a missing
+    position. ``stack._emb_sq_norm`` (the frame-mode emb-L2 scalar)
+    folds through it and inherits the guard."""
+    from decimal import Decimal
+
+    import numpy as np
     import pytest
+    from pyspark.sql import functions as F
 
-    from deep_db_learning_spark.plans.stack import _require_nonnull_sums
+    from deep_db_learning_spark.plans import stack
+    from deep_db_learning_spark.plans.train_oracle import _dec9
+    from deep_db_learning_spark.plans.training import dec9_udf, fold_dec9
 
-    ok = {"__n": 3, "v0": 1, "v1": 2}
-    _require_nonnull_sums(ok, 2)  # no raise
-    empty = {"__n": 0, "v0": None, "v1": None}
-    _require_nonnull_sums(empty, 2)  # empty frame: NULL is legitimate
-    bad = {"__n": 3, "v0": 1, "v1": None}
-    with pytest.raises(ArithmeticError, match="overflow"):
-        _require_nonnull_sums(bad, 2)
+    rng = np.random.default_rng(3)
+    vals = rng.uniform(-2.0, 2.0, size=(40, 3))
+    keys = [i % 4 for i in range(40)]
+    df = spark.createDataFrame(
+        [(k, [float(v) for v in row]) for k, row in zip(keys, vals)],
+        "k bigint, x array<double>",
+    ).repartition(3)
+    g = df.select("k", dec9_udf(lambda x: np.vstack(x.to_list()), "x").alias("g"))
+
+    def replay(rows):
+        return [sum((_dec9(r[i]) for r in rows), Decimal(0)) for i in range(3)]
+
+    tot, per_key, n = fold_dec9(g, 3)
+    assert n == 40 and per_key == {}
+    assert tot.tolist() == [float(v) for v in replay(vals)]
+    tot_k, per_key, n_k = fold_dec9(g, 3, by="k")
+    assert n_k == 40 and tot_k.tolist() == tot.tolist()
+    for key in range(4):
+        want = replay([r for r, kk in zip(vals, keys) if kk == key])
+        assert per_key[key].tolist() == [float(v) for v in want]
+    tot0, _, n0 = fold_dec9(g.filter(F.col("k") < 0), 3)
+    assert n0 == 0 and tot0.tolist() == [0.0, 0.0, 0.0]
+    ragged = g.select(
+        "k",
+        F.when(F.col("k") == 0, F.slice("g", 1, 2)).otherwise(F.col("g")).alias("g"),
+    )
+    with pytest.raises(ArithmeticError, match="position"):
+        fold_dec9(ragged, 3, by="k")
+
+    # decimal(38,9) components: two rows past 5e28 overflow the sum
+    big = F.lit("60000000000000000000000000000").cast("decimal(38,9)")
+    over = spark.range(4).select(
+        (F.col("id") % 2).alias("k"),
+        F.array(big, F.lit(1).cast("decimal(38,9)")).alias("g"),
+    )
+    emb = stack._emb_to_frame(spark, rng.uniform(-0.5, 0.5, size=(6, 2)))
+    want_sq = float(
+        sum(_dec9(float(v) * float(v)) for r in emb.collect() for v in r["evec"])
+    )
+    assert stack._emb_sq_norm(emb) == want_sq
+    real_fold = stack.fold_dec9
+    monkeypatch.setattr(
+        stack,
+        "fold_dec9",
+        lambda g_, glen: real_fold(g_.unionByName(over.select("g")), glen),
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        with pytest.raises(ArithmeticError, match="overflow"):
+            fold_dec9(over, 2)
+        with pytest.raises(ArithmeticError, match="overflow"):
+            fold_dec9(over, 2, by="k")
+        with pytest.raises(ArithmeticError, match="overflow"):
+            stack._emb_sq_norm(emb)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def _jobs_in_group(spark, group, fn):
