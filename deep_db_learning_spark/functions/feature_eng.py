@@ -17,8 +17,7 @@ must never see a target statistic its own label contributed to.
   Cardinality limit: the grid is card × k rows and flows through one
   global window partition + a broadcast — fine to ~10⁶ grid rows;
   past that, swap the global window for a 1-row aggregate cross-join
-  and the broadcast for a shuffle join (the frame-resident pattern
-  ``plans/stack.py`` uses for high-cardinality embeddings).
+  and the broadcast for a shuffle join.
 - :func:`bin_by_quantiles` — equal-frequency binning: cut points from
   ``operators/sketch.exact_quantiles`` (exact order statistics, no
   global sort), bucket assignment row-local against the broadcast

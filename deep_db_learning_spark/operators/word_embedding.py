@@ -468,7 +468,7 @@ def fit_word_embedding_frames(
     :data:`FRAME_MAX_VOCAB` (the final ``O(V·dim)`` model collect,
     the only driver state).
 
-    Layout (the ``plans/stack.py`` frame-embedding recipe):
+    Layout:
 
     - ``pairs (a, b, y)`` — distinct in-vocab pairs with the
       1/d-weighted log1p target (:func:`_pair_target` in a vectorized

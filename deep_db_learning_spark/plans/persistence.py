@@ -2,23 +2,18 @@
 
 The reference checkpoints through Lightning/MLflow
 (``experiments/blueprint_mlflow.py``); this engine's model state is a
-plain params dict (``TrainResult.params``) whose members are numpy
-arrays — plus, in frame-resident high-cardinality mode, per-layer
-``(code, evec)`` DataFrames. Persistence keeps each in its native
-durable form:
+plain params dict (``TrainResult.params``) of numpy arrays. Persistence
+writes them to one ``arrays.npz`` (exact float64 bits, no text round
+trip) plus a ``manifest.json`` recording each layer's layout, so
+``load_stack_model`` can rebuild the params dict for
+:func:`~.stack.predict_relational_stack` (round-trip prediction
+equality is pytest-pinned).
 
-- ndarrays → one ``arrays.npz`` (exact float64 bits, no text round
-  trip);
-- frame embeddings → parquet under ``layer_<i>_emb/`` (stays
-  DISTRIBUTED: a 10⁸-row embedding table never touches the driver —
-  the same reason it trains as a frame);
-- a ``manifest.json`` recording the layout, so ``load_stack_model``
-  can rebuild the params dict for :func:`~.stack.predict_relational_stack`
-  (round-trip prediction equality is pytest-pinned).
-
-``path`` is a local/driver-visible directory for the npz+manifest and
-a Spark-writable URI for the parquet parts — on a cluster point it at
-shared storage.
+Models saved while the stack could keep a layer's embedding as a
+distributed ``(code, evec)`` frame mark that layer ``"emb": "frame"``
+and hold its table as parquet under ``layer_<i>_emb/``;
+``load_stack_model`` reads such a layer back into the array it
+indexes by code, after checking that the codes are exactly ``0..n-1``.
 """
 
 from __future__ import annotations
@@ -27,7 +22,7 @@ import json
 import os
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def save_stack_model(result, path: str) -> None:
@@ -40,22 +35,32 @@ def save_stack_model(result, path: str) -> None:
         "W_head": params["W_head"],
         "b_head": params["b_head"],
     }
-    layers_meta = []
     for i, layer in enumerate(params["layers"]):
         arrays[f"layer_{i}_W"] = layer["W"]
         arrays[f"layer_{i}_b"] = layer["b"]
-        emb = layer["emb"]
-        if isinstance(emb, DataFrame):
-            emb.write.mode("overwrite").parquet(
-                os.path.join(path, f"layer_{i}_emb")
-            )
-            layers_meta.append({"emb": "frame"})
-        else:
-            arrays[f"layer_{i}_emb"] = emb
-            layers_meta.append({"emb": "array"})
+        arrays[f"layer_{i}_emb"] = layer["emb"]
     np.savez(os.path.join(path, "arrays.npz"), **arrays)
+    layers_meta = [{"emb": "array"} for _ in params["layers"]]
     with open(os.path.join(path, "manifest.json"), "w") as f:
         json.dump({"format": 1, "layers": layers_meta}, f)
+
+
+def _read_frame_emb(spark: SparkSession, path: str) -> np.ndarray:
+    """A ``layer_<i>_emb/`` parquet table ``(code, evec)`` as the
+    ``(n, emb_dim)`` array in code order; any other layout (a missing
+    or repeated code, a NULL or ragged ``evec``) raises ``ValueError``."""
+    df = spark.read.parquet(path)
+    if not {"code", "evec"} <= set(df.columns):
+        raise ValueError(f"{path}: expected columns (code, evec), got {df.columns}")
+    rows = df.select("code", "evec").collect()
+    n = len(rows)
+    if sorted(r["code"] for r in rows if r["code"] is not None) != list(range(n)):
+        raise ValueError(f"{path}: embedding codes are not exactly 0..{n - 1}")
+    by_code = {r["code"]: r["evec"] for r in rows}
+    vecs = [by_code[c] for c in range(n)]
+    if not vecs or any(v is None or len(v) != len(vecs[0]) for v in vecs):
+        raise ValueError(f"{path}: embedding rows are missing, NULL or ragged")
+    return np.array(vecs, dtype=np.float64)
 
 
 def load_stack_model(spark: SparkSession, path: str) -> dict:
@@ -67,11 +72,12 @@ def load_stack_model(spark: SparkSession, path: str) -> dict:
     arrays = np.load(os.path.join(path, "arrays.npz"))
     layers = []
     for i, lm in enumerate(manifest["layers"]):
-        emb = (
-            spark.read.parquet(os.path.join(path, f"layer_{i}_emb"))
-            if lm["emb"] == "frame"
-            else arrays[f"layer_{i}_emb"]
-        )
+        if lm["emb"] == "array":
+            emb = arrays[f"layer_{i}_emb"]
+        elif lm["emb"] == "frame":
+            emb = _read_frame_emb(spark, os.path.join(path, f"layer_{i}_emb"))
+        else:
+            raise ValueError(f"layer {i}: unknown embedding layout {lm['emb']!r}")
         layers.append(
             {
                 "emb": emb,

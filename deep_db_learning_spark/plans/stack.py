@@ -35,10 +35,13 @@ pinned by the independent twin, not by a second engine path):
   ``(key, gout, deg)`` — level 1's comes from the driver head step
   (bounded by batch size), deeper levels are produced by a per-row
   Spark job; no driver dict ever holds a non-root level. Each level's
-  weight gradients are one ``training.fold_dec9`` job over the rows'
-  ``dec9_udf`` vectors — the exact decimal fold every in-engine
-  trainer shares (keyed by code in driver mode; global, plus a
-  distributed per-code ``demb`` frame, in frame mode).
+  weight and embedding gradients are one ``training.fold_dec9`` job,
+  keyed by code, over the rows' ``dec9_udf`` vectors — the exact
+  decimal fold every in-engine trainer shares.
+- **embeddings**: every layer's embedding table is a driver numpy
+  array (``card × emb_dim``) that each Arrow kernel indexes by code —
+  an in-kernel broadcast join, the one embedding source of every
+  level's forward, backward and gradient-frame kernel.
 - **eval**: one scoring path (``_score_roots``) joins the trained
   ``hbar`` onto the root frame and predicts in an Arrow UDF — the
   root frame is never collected. The trainer lineage-cuts the scored
@@ -63,7 +66,6 @@ from ..checkpoint import cut_lineage
 from ..functions.exact_agg import DECIMAL_TYPE
 from .training import (
     TrainResult,
-    _dec9_py,
     assemble_training_frame,
     dec9_udf,
     fold_dec9,
@@ -89,16 +91,6 @@ class EdgeLayerSpec:
     original two-layer trainer's ``li_qty_mean``); when the same edge
     is instead a deeper :class:`EdgeLayerSpec`, the feature is trained
     through — don't use both on one edge.
-
-    ``emb_storage`` picks where this layer's embedding table lives:
-    ``"driver"`` (a numpy array, indexed inside the Arrow kernels),
-    ``"frame"`` (a distributed ``(code, evec)`` DataFrame joined into
-    every pass — the high-cardinality posture, VERDICT r5 #2), or
-    ``"auto"`` (frame when the layer's cardinality reaches
-    :data:`FRAME_EMB_THRESHOLD`). Both modes walk identical elementwise
-    IEEE update sequences, so the parameter trajectories are bitwise
-    equal; only the loss's emb-L2 scalar is folded differently
-    (decimal fold in frame mode — the twin replays it).
     """
 
     table: str
@@ -110,7 +102,6 @@ class EdgeLayerSpec:
     emb_dim: int = 2
     hidden_dim: int = 4
     neighbor_budget: int | None = None
-    emb_storage: str = "auto"
 
     @property
     def n_feats(self) -> int:
@@ -150,120 +141,6 @@ THREE_LAYER_SPECS = (
 )
 
 THREE_LAYER_BENCH_CONFIG = {"epochs": 2, "n_batches": 2, "neighbor_budget": 5}
-
-# Past this cardinality an "auto" layer keeps its embedding table as a
-# distributed (code, evec) frame instead of a driver numpy array: the
-# driver then holds only W/b (card × emb_dim never materializes after
-# the pinned init draw).
-FRAME_EMB_THRESHOLD = 50_000
-
-
-def _resolve_frame_emb(spec: EdgeLayerSpec, card: int) -> bool:
-    """Shared CONFIG with the oracle twin (like the spec itself): does
-    this layer train its embedding as a frame?"""
-    storage = getattr(spec, "emb_storage", "auto")
-    if storage not in ("auto", "driver", "frame"):
-        raise ValueError(f"emb_storage must be auto|driver|frame, got {storage!r}")
-    return storage == "frame" or (storage == "auto" and card >= FRAME_EMB_THRESHOLD)
-
-
-def _is_frame_emb(e) -> bool:
-    return isinstance(e, DataFrame)
-
-
-def _emb_rows(Ec, first):
-    """Embedding block of a kernel's per-row input matrix: index the
-    driver-held table by code (``Ec`` set), or stack the pre-joined
-    ``__evec`` column (frame mode, ``Ec is None``)."""
-    if Ec is None:
-        return np.vstack(first.to_list())
-    return Ec[first.to_numpy(dtype=np.int64)]
-
-
-def _with_emb(frame: DataFrame, emb) -> DataFrame:
-    """Frame mode: join the layer's ``(code, evec)`` embedding frame
-    onto its rows; driver mode: no-op (the kernel indexes directly)."""
-    if not _is_frame_emb(emb):
-        return frame
-    return frame.join(
-        emb.select("code", F.col("evec").alias("__evec")), "code", "inner"
-    )
-
-
-def _emb_to_frame(spark, E: np.ndarray) -> DataFrame:
-    """Ship the pinned init draw to a distributed ``(code, evec)``
-    frame — the only O(card) driver touch of frame mode (the draw must
-    come from the shared rng stream; swap a counter-based per-code RNG
-    if cards ever outgrow a single driver array at init)."""
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in row]) for i, row in enumerate(E)],
-        "code bigint, evec array<double>",
-    )
-    return cut_lineage(df, eager=True)
-
-
-def _emb_sq_norm(e) -> float:
-    """This table's contribution to the loss's L2 scalar. Driver mode
-    keeps the original numpy float sum; frame mode folds dec9-quantized
-    squares as exact decimals through :func:`~.training.fold_dec9`
-    (partitioning-independent, overflow raises — replayed by the twin's
-    matching Decimal loop)."""
-    if not _is_frame_emb(e):
-        return float((e * e).sum())
-    from decimal import Decimal
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def sq_fn(evec):
-        out = []
-        for row in evec.to_list():
-            t = Decimal(0)
-            for v in row:
-                t += _dec9_py(Decimal, v * v)
-            out.append(t)
-        return pd.Series(out)
-
-    sq_fn.__annotations__ = {"evec": pd.Series, "return": pd.Series}
-    udf = pandas_udf(sq_fn, DECIMAL_TYPE)
-    tot, _, _n = fold_dec9(e.select(F.array(udf("evec")).alias("g")), 1)
-    return float(tot[0])
-
-
-def _update_emb_frame(
-    emb_f: DataFrame, demb_f: DataFrame | None, lr: float, l2: float, n_b: int
-) -> DataFrame:
-    """One SGD step on a frame-resident embedding table — the same
-    elementwise IEEE expression the driver path applies
-    (``e - lr*(demb/n_b + l2*e)``), one row per code, nothing
-    collected. Codes outside the batch's receptive field (left-join
-    null) decay exactly like the driver path's zero-gradient rows."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def upd_fn(evec, demb):
-        out = []
-        for e_row, d_row in zip(evec.to_list(), demb.to_list()):
-            e = np.asarray(e_row, dtype=np.float64)
-            dm = np.asarray(d_row, dtype=np.float64) if d_row is not None else 0.0
-            out.append([float(v) for v in e - lr * (dm / n_b + l2 * e)])
-        return pd.Series(out)
-
-    upd_fn.__annotations__ = {
-        "evec": pd.Series,
-        "demb": pd.Series,
-        "return": pd.Series,
-    }
-    udf = pandas_udf(upd_fn, "array<double>")
-    if demb_f is None:
-        joined = emb_f.withColumn("__demb", F.lit(None).cast("array<double>"))
-    else:
-        joined = emb_f.join(
-            demb_f.select("code", F.col("demb").alias("__demb")), "code", "left"
-        )
-    return cut_lineage(
-        joined.select("code", udf("evec", "__demb").alias("evec")), eager=True
-    )
 
 
 def _assemble_child_frame(
@@ -366,16 +243,17 @@ def _layer_forward_frame(
     dec9-quantized (one rounding rule on engine and twin), so
     ``cast(sum AS DOUBLE)/deg`` is partitioning-independent —
     bit-equal to the twin's ``float(Decimal)/deg``."""
-    Ec = None if _is_frame_emb(E) else E.copy()
-    Wc, bc = W.copy(), b.copy()
-    frame = _with_emb(_with_child_hbar(frame, child_hb, d_child), E)
-    cols = ["__evec" if Ec is None else "code", "x"]
+    Ec, Wc, bc = E.copy(), W.copy(), b.copy()
+    frame = _with_child_hbar(frame, child_hb, d_child)
+    cols = ["code", "x"]
     if child_hb is not None:
         cols.append("__child_hbar")
 
     def h_kernel(code, *xs):
         X = np.concatenate(
-            [_emb_rows(Ec, code)] + [np.vstack(x.to_list()) for x in xs], axis=1
+            [Ec[code.to_numpy(dtype=np.int64)]]
+            + [np.vstack(x.to_list()) for x in xs],
+            axis=1,
         )
         return np.tanh(row_logits(X, Wc, bc))
 
@@ -421,33 +299,22 @@ def _layer_backward_fold(
     dec9 vector ``[X (x) delta ++ delta]`` is folded by
     :func:`~.training.fold_dec9` into ``(dW, db, demb)`` exactly as in
     the original two-layer trainer (``demb[c] = (Σ_{code=c} delta) @
-    W[:d_e].T``). Bit-deterministic under any partitioning; a NULL
-    (overflowed) sum raises.
-
-    Driver mode: ONE Spark job, the fold keyed by code — the per-code
+    W[:d_e].T``). ONE Spark job, the fold keyed by code: the per-code
     delta sums give ``demb`` and their exact ``Decimal`` total gives
-    ``dW``/``db``. Frame-emb mode (``E`` a DataFrame — VERDICT r5 #2):
-    nothing O(card) ever reaches the driver. The per-row vectors are
-    materialized once; ``dW``/``db`` come from ONE global fold (exact
-    decimal addition is associative, so it bit-equals the per-code
-    total), and ``demb`` is returned as a distributed ``(code, demb)``
-    frame — each row the same ``dsum @ W[:d_e].T`` gemv the driver
-    path runs per code."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
+    ``dW``/``db``. Bit-deterministic under any partitioning; a NULL
+    (overflowed) sum raises."""
     glen = m * d + d
-    frame_mode = _is_frame_emb(E)
-    Ec = None if frame_mode else E.copy()
-    Wc, bc = W.copy(), b.copy()
-    cols = ["__evec" if frame_mode else "code", "x"]
+    Ec, Wc, bc = E.copy(), W.copy(), b.copy()
+    cols = ["code", "x"]
     if with_child:
         cols.append("__child_hbar")
 
     def g_kernel(code, *rest):
         *xs, gout, gdeg = rest
         X = np.concatenate(
-            [_emb_rows(Ec, code)] + [np.vstack(x.to_list()) for x in xs], axis=1
+            [Ec[code.to_numpy(dtype=np.int64)]]
+            + [np.vstack(x.to_list()) for x in xs],
+            axis=1,
         )
         G = np.vstack(gout.to_list()) / gdeg.to_numpy(dtype=np.float64)[:, None]
         H = np.tanh(row_logits(X, Wc, bc))
@@ -459,43 +326,11 @@ def _layer_backward_fold(
     g = joined.select(
         "code", dec9_udf(g_kernel, *cols, "__gout", "__gdeg").alias("g")
     )
-
-    if not frame_mode:
-        tot, by_code, _n = fold_dec9(g, glen, by="code")
-        demb = np.zeros((card, d_e))
-        for c, s in by_code.items():
-            demb[c] = np.array(s[m * d :]) @ Wc[:d_e].T
-        return tot[: m * d].reshape(m, d), tot[m * d :], demb
-
-    # frame mode: materialize the per-row gradient vectors once, then
-    # one bounded-global fold (m·d+d scalars to the driver) plus the
-    # distributed per-code delta fold → (code, demb) frame
-    g = cut_lineage(g, eager=True)
-    tot, _, _n = fold_dec9(g, glen)
-    dW, db = tot[: m * d].reshape(m, d), tot[m * d :]
-    dsums = g.groupBy("code").agg(
-        *[
-            F.sum(F.element_at("g", m * d + j + 1)).cast("double").alias(f"s{j}")
-            for j in range(d)
-        ]
-    )
-    # ship the C-contiguous base and take the .T view inside the UDF,
-    # so the per-code gemv sees the exact memory layout (and hence
-    # BLAS path) of the driver path's ``dsum @ Wc[:d_e].T``
-    Wde = Wc[:d_e].copy()
-
-    def demb_fn(s):
-        WT = Wde.T
-        A = np.vstack(s.to_list()).astype(np.float64)
-        return pd.Series([[float(v) for v in row @ WT] for row in A])
-
-    demb_fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    dudf = pandas_udf(demb_fn, "array<double>")
-    demb_frame = dsums.select(
-        "code",
-        dudf(F.array(*[F.col(f"s{j}") for j in range(d)])).alias("demb"),
-    )
-    return dW, db, demb_frame
+    tot, by_code, _n = fold_dec9(g, glen, by="code")
+    demb = np.zeros((card, d_e))
+    for c, s in by_code.items():
+        demb[c] = np.array(s[m * d :]) @ Wc[:d_e].T
+    return tot[: m * d].reshape(m, d), tot[m * d :], demb
 
 
 def _layer_g_next_frame(
@@ -517,15 +352,17 @@ def _layer_g_next_frame(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    Ec = None if _is_frame_emb(E) else E.copy()
-    Wc, bc = W.copy(), b.copy()
-    first = "__evec" if Ec is None else "code"
+    Ec, Wc, bc = E.copy(), W.copy(), b.copy()
     WhT = W[d_e + nx :].T.copy()  # (d, d_child)
     zeros = np.zeros(d_child)
 
     def gn_fn(code, x, chb, gout, gdeg):
         X = np.concatenate(
-            [_emb_rows(Ec, code), np.vstack(x.to_list()), np.vstack(chb.to_list())],
+            [
+                Ec[code.to_numpy(dtype=np.int64)],
+                np.vstack(x.to_list()),
+                np.vstack(chb.to_list()),
+            ],
             axis=1,
         )
         G = np.vstack(gout.to_list()) / gdeg.to_numpy(dtype=np.float64)[:, None]
@@ -545,7 +382,7 @@ def _layer_g_next_frame(
     udf = pandas_udf(gn_fn, "array<double>")
     return joined.select(
         F.col("child_key").alias("key"),
-        udf(first, "x", "__child_hbar", "__gout", "__gdeg").alias("gout"),
+        udf("code", "x", "__child_hbar", "__gout", "__gdeg").alias("gout"),
         F.col("__child_deg").alias("gdeg"),
     )
 
@@ -737,7 +574,6 @@ def train_relational_stack(
         f, card = _assemble_child_frame(tables, spec, seed)
         frames.append(cut_lineage(f, eager=True))
         cards.append(card)
-    use_frame = [_resolve_frame_emb(layers[i], cards[i]) for i in range(L)]
     if fit_fn is not None:
         return fit_fn(frame, frames, meta)
 
@@ -782,10 +618,10 @@ def train_relational_stack(
     # the original two-layer order (emb, emb1, W1, W2)
     rng = np.random.default_rng(seed)
     emb = rng.uniform(-0.5, 0.5, size=(card0, dim))
-    l_emb = []
-    for i in range(L):
-        E0 = rng.uniform(-0.5, 0.5, size=(cards[i], layers[i].emb_dim))
-        l_emb.append(_emb_to_frame(spark, E0) if use_frame[i] else E0)
+    l_emb = [
+        rng.uniform(-0.5, 0.5, size=(cards[i], layers[i].emb_dim))
+        for i in range(L)
+    ]
     dims = _layer_dims(layers)
     l_W = [
         rng.uniform(-0.5, 0.5, size=(dims[i][3], dims[i][2])) * 0.1 for i in range(L)
@@ -840,7 +676,7 @@ def train_relational_stack(
             for j, i in enumerate(bids):
                 if int(i) in hb_rows:
                     hbar[j], degs[j] = hb_rows[int(i)]
-            extra_l2 = float(sum(_emb_sq_norm(E) for E in l_emb)) + float(
+            extra_l2 = float(sum(float((E * E).sum()) for E in l_emb)) + float(
                 sum(float((W * W).sum()) for W in l_W[1:])
             )
             loss, GW2, gb2, demb0, gH = two_layer_head_step(
@@ -867,13 +703,10 @@ def train_relational_stack(
                     d_e, nx, d, m_i = dims[i]
                     with_child = i + 1 < L
                     joined = _join_gradient(
-                        _with_emb(
-                            _with_child_hbar(
-                                f_b[i],
-                                child_hb_for[i],
-                                dims[i + 1][2] if with_child else 0,
-                            ),
-                            l_emb[i],
+                        _with_child_hbar(
+                            f_b[i],
+                            child_hb_for[i],
+                            dims[i + 1][2] if with_child else 0,
                         ),
                         g_frame,
                     )
@@ -893,7 +726,7 @@ def train_relational_stack(
                     (
                         np.zeros_like(l_W[i]),
                         np.zeros_like(l_b[i]),
-                        None if use_frame[i] else np.zeros_like(l_emb[i]),
+                        np.zeros_like(l_emb[i]),
                     )
                     for i in range(L)
                 ]
@@ -904,10 +737,7 @@ def train_relational_stack(
             b_head -= lr * (gb2 / n_b)
             for i in range(L):
                 dW, db_i, demb_i = grads[i]
-                if use_frame[i]:
-                    l_emb[i] = _update_emb_frame(l_emb[i], demb_i, lr, l2, n_b)
-                else:
-                    l_emb[i] -= lr * (demb_i / n_b + l2 * l_emb[i])
+                l_emb[i] -= lr * (demb_i / n_b + l2 * l_emb[i])
                 l_W[i] -= lr * (dW / n_b + l2 * l_W[i])
                 l_b[i] -= lr * (db_i / n_b)
 

@@ -40,8 +40,15 @@ _Q9 = Decimal("1.000000000")
 
 def _dec9(x: float) -> Decimal:
     """Twin of Spark's ``cast(double AS DECIMAL(30,9))`` (HALF_UP on the
-    shortest decimal representation)."""
-    return Decimal(repr(float(x))).quantize(_Q9, rounding=ROUND_HALF_UP)
+    shortest decimal representation). Same domain as the engine's
+    ``training._dec9_py``: NaN, ±inf and ``|x| >= 1e19`` raise
+    ``ArithmeticError``."""
+    x = float(x)
+    if not -1e19 < x < 1e19:
+        raise ArithmeticError(
+            f"dec9 cannot quantize {x!r}: |x| must be finite and below 1e+19"
+        )
+    return Decimal(repr(x)).quantize(_Q9, rounding=ROUND_HALF_UP)
 
 
 def _knuth(key: int, seed: int = 42, p: int = 2147483647, k: int = 2654435761) -> int:
@@ -715,17 +722,6 @@ def _stack_losses(
         by_parent, card_i = _child_frame_twin(sf_dir, spec, seed)
         child.append(by_parent)
         cards.append(card_i)
-    # shared CONFIG with the engine (like the spec itself): which
-    # layers fold their emb-L2 loss term as exact decimals (the
-    # frame-resident storage mode) instead of a numpy float sum
-    from .stack import _resolve_frame_emb
-
-    frame_l2 = [_resolve_frame_emb(layers[i], cards[i]) for i in range(L)]
-
-    def emb_sq(i, E):
-        if not frame_l2[i]:
-            return float((E * E).sum())
-        return float(sum(_grad_fold(E * E, E.shape[1])))
 
     batch_of = np.array(
         [_knuth(int(i), seed + 7) % n_batches for i in ids], dtype=np.int64
@@ -794,9 +790,9 @@ def _stack_losses(
                 hv = fold_level(0, int(i_))
                 if hv is not None:
                     hbar[j], degs[j] = hv
-            extra_l2 = float(
-                sum(emb_sq(i_l, E) for i_l, E in enumerate(l_emb))
-            ) + float(sum(float((W * W).sum()) for W in l_W[1:]))
+            extra_l2 = float(sum(float((E * E).sum()) for E in l_emb)) + float(
+                sum(float((W * W).sum()) for W in l_W[1:])
+            )
             loss, GW2, gb2, demb0, gH = two_layer_head_step(
                 codes[sel], nums[sel], hbar, y[sel], emb, l_W[0], W_head,
                 b_head, l2, extra_l2=extra_l2, task=task,

@@ -63,16 +63,28 @@ from ..checkpoint import cut_lineage
 _DEC9_EXP = None
 
 
+# dec9 quantizes in Python's 28-digit decimal context: 9 fractional
+# digits leave 19 integer digits, so |x| must stay below 1e19
+_DEC9_BOUND = 1e19
+
+
 def _dec9_py(Decimal, x):
     """Round a float to the fold scale exactly like the oracle twin:
     ``Decimal(repr(x))`` (shortest round-trip string) quantized HALF_UP
-    to 9 fractional digits."""
+    to 9 fractional digits. NaN, ±inf and ``|x| >= 1e19`` (past the
+    28-digit context) raise ``ArithmeticError`` naming the value — a
+    diverging gradient fails loudly instead of folding as NaN."""
     global _DEC9_EXP
     from decimal import ROUND_HALF_UP
 
+    x = float(x)
+    if not -_DEC9_BOUND < x < _DEC9_BOUND:
+        raise ArithmeticError(
+            f"dec9 cannot quantize {x!r}: |x| must be finite and below {_DEC9_BOUND:g}"
+        )
     if _DEC9_EXP is None:
         _DEC9_EXP = Decimal("1.000000000")
-    return Decimal(repr(float(x))).quantize(_DEC9_EXP, rounding=ROUND_HALF_UP)
+    return Decimal(repr(x)).quantize(_DEC9_EXP, rounding=ROUND_HALF_UP)
 
 
 def dec9_udf(kernel, *cols):

@@ -63,7 +63,7 @@ def build_parser() -> argparse.ArgumentParser:
         "--save-model",
         default=None,
         help="stack mode: persist the trained parameters here "
-        "(plans/persistence.py: npz + parquet frame embeddings)",
+        "(plans/persistence.py: npz + manifest)",
     )
     return p
 

@@ -569,71 +569,21 @@ def test_stack_childless_roots_and_spec_validation(spark):
                                cat_col="cat", num_cols=("x",))
 
 
-def test_stack_frame_emb_matches_driver_and_twin(db):
-    """Ask r5 #2 — frame-resident embedding storage walks the exact
-    elementwise update sequence of the driver path: forced onto a
-    small layer, every parameter trajectory (including the embedding
-    table itself, collected back) is BITWISE equal to driver storage,
-    eval metrics match, and the twin replays the frame-mode losses
-    (whose emb-L2 loss scalar is a decimal fold) bit-for-bit."""
-    from dataclasses import replace
-
-    import numpy as np
-    from pyspark.sql import DataFrame
-
-    from deep_db_learning_spark.plans.stack import (
-        ORDERS_LAYER_SPEC,
-        train_relational_stack,
-    )
-    from deep_db_learning_spark.plans.train_oracle import _stack_losses
-
-    fspec = replace(ORDERS_LAYER_SPEC, neighbor_budget=5, emb_storage="frame")
-    dspec = replace(fspec, emb_storage="driver")
-    kw = dict(epochs=2, n_batches=2, seed=42, neighbor_budget=5)
-    fr = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys, layers=(fspec,), **kw,
-    )
-    dr = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys, layers=(dspec,), **kw,
-    )
-    # gradients never touch the L2 loss scalar, so parameters agree
-    # bitwise even though the loss fold differs by storage mode
-    assert np.array_equal(fr.params["emb"], dr.params["emb"])
-    assert np.array_equal(fr.params["W_head"], dr.params["W_head"])
-    assert np.array_equal(fr.params["layers"][0]["W"], dr.params["layers"][0]["W"])
-    assert np.array_equal(fr.params["layers"][0]["b"], dr.params["layers"][0]["b"])
-    emb_f = fr.params["layers"][0]["emb"]
-    assert isinstance(emb_f, DataFrame)
-    got = {int(r["code"]): list(r["evec"]) for r in emb_f.collect()}
-    want = {
-        i: [float(v) for v in row]
-        for i, row in enumerate(dr.params["layers"][0]["emb"])
-    }
-    assert got == want
-    assert fr.accuracy == dr.accuracy
-    assert len(fr.losses) == 4 and fr.losses[-1] < fr.losses[0]
-    twin = _stack_losses(SF_SMOKE, (fspec,), **kw)
-    assert fr.losses == twin
-
-
 def test_stack_high_card_frame_auto(spark):
-    """Ask r5 #2 at scale shape: a 60k-cardinality layer crosses
-    FRAME_EMB_THRESHOLD under "auto" storage, so its embedding table
-    trains as a distributed (code, evec) frame — in the steady state
-    the driver holds only this layer's W/b — and the step still
-    descends with finite losses."""
+    """A 60k-cardinality layer trains through the one embedding path:
+    its table is a driver array the Arrow kernels index by code, the
+    step has a finite loss, and an in-field code's row moves off its
+    init draw."""
     import numpy as np
-    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
     from deep_db_learning_spark.plans.stack import (
         EdgeLayerSpec,
-        FRAME_EMB_THRESHOLD,
         train_relational_stack,
     )
     from deep_db_learning_spark.schema import ForeignKey
 
-    n_cat = FRAME_EMB_THRESHOLD + 10_000
+    n_cat = 60_000
     roots = spark.range(200).select(
         F.col("id"),
         (F.col("id") % 3).cast("int").alias("cat"),
@@ -660,16 +610,15 @@ def test_stack_high_card_frame_auto(spark):
     )
     assert len(res.losses) == 1
     assert all(np.isfinite(l) for l in res.losses)
-    emb_f = res.params["layers"][0]["emb"]
-    assert isinstance(emb_f, DataFrame)  # never a driver array
-    assert emb_f.count() == n_cat + 1  # every code incl. NULL→0 kept
+    emb = res.params["layers"][0]["emb"]
+    assert isinstance(emb, np.ndarray)
+    assert emb.shape == (n_cat + 1, 2)  # every code incl. NULL→0 kept
     # codes outside the receptive field decayed, in-field codes moved
     # by their gradient — spot-check a trained row is off its init
     rng = np.random.default_rng(3)
     rng.uniform(-0.5, 0.5, size=res.params["emb"].shape)
     init = rng.uniform(-0.5, 0.5, size=(n_cat + 1, 2))
-    row1 = [r["evec"] for r in emb_f.filter(F.col("code") == 1).collect()][0]
-    assert not np.array_equal(np.array(row1), init[1])
+    assert not np.array_equal(emb[1], init[1])
 
 
 def test_trainer_root_generality_orders_target(db):
@@ -816,52 +765,6 @@ def test_trompt_head_trains_through_fit_fn(db):
     assert "train" in res.accuracy
 
 
-def test_stack_frame_emb_deep_matches_driver(db):
-    """Frame-resident embeddings at DEPTH: both layers of the
-    customer←orders←lineitem stack forced to frame storage — the
-    child-hbar forward join, the gradient chain through
-    `_layer_g_next_frame`, and both distributed demb folds all run in
-    frame mode, and every parameter still matches driver storage
-    bitwise."""
-    from dataclasses import replace
-
-    import numpy as np
-    from pyspark.sql import DataFrame
-
-    from deep_db_learning_spark.plans.stack import (
-        THREE_LAYER_SPECS,
-        train_relational_stack,
-    )
-
-    fr_specs = tuple(replace(s, emb_storage="frame") for s in THREE_LAYER_SPECS)
-    dr_specs = tuple(replace(s, emb_storage="driver") for s in THREE_LAYER_SPECS)
-    kw = dict(epochs=1, n_batches=2, seed=42, neighbor_budget=5)
-    fr = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys, layers=fr_specs, **kw,
-    )
-    dr = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys, layers=dr_specs, **kw,
-    )
-    assert np.array_equal(fr.params["emb"], dr.params["emb"])
-    assert np.array_equal(fr.params["W_head"], dr.params["W_head"])
-    for i in range(2):
-        assert np.array_equal(
-            fr.params["layers"][i]["W"], dr.params["layers"][i]["W"]
-        )
-        assert np.array_equal(
-            fr.params["layers"][i]["b"], dr.params["layers"][i]["b"]
-        )
-        emb_f = fr.params["layers"][i]["emb"]
-        assert isinstance(emb_f, DataFrame)
-        got = {int(r["code"]): list(r["evec"]) for r in emb_f.collect()}
-        want = {
-            j: [float(v) for v in row]
-            for j, row in enumerate(dr.params["layers"][i]["emb"])
-        }
-        assert got == want
-    assert fr.accuracy == dr.accuracy
-
-
 def test_head_trainers_regression_task(db):
     """Both encoder heads carry the regression branch (r6): k=1
     half-squared-error head on the train-standardized c_acctbal label,
@@ -904,24 +807,25 @@ def test_head_trainers_regression_task(db):
     assert tro.losses[-1] < tro.losses[0]
 
 
-def test_frame_fold_overflow_guard(spark, monkeypatch):
+def test_frame_fold_overflow_guard(spark):
     """The one exact gradient fold (``training.fold_dec9``) on real
     frames: a legal dec9 frame folds to the Decimal totals (and per-key
     sums) of a Python replay; an empty frame folds to zeros; a NULL
     decimal sum — accumulator overflow, which non-ANSI Spark turns into
     NULL instead of raising — raises in the global fold and in the
     per-key fold, never a silent zero gradient; so does a missing
-    position. ``stack._emb_sq_norm`` (the frame-mode emb-L2 scalar)
-    folds through it and inherits the guard."""
+    position. Before the fold, ``_dec9_py`` (and the twin's ``_dec9``)
+    raises on NaN, ±inf and ``|x| >= 1e19`` — also from inside the
+    Arrow worker of a ``dec9_udf`` frame."""
     from decimal import Decimal
 
     import numpy as np
     import pytest
+    from pyspark.errors import PythonException
     from pyspark.sql import functions as F
 
-    from deep_db_learning_spark.plans import stack
     from deep_db_learning_spark.plans.train_oracle import _dec9
-    from deep_db_learning_spark.plans.training import dec9_udf, fold_dec9
+    from deep_db_learning_spark.plans.training import _dec9_py, dec9_udf, fold_dec9
 
     rng = np.random.default_rng(3)
     vals = rng.uniform(-2.0, 2.0, size=(40, 3))
@@ -958,17 +862,6 @@ def test_frame_fold_overflow_guard(spark, monkeypatch):
         (F.col("id") % 2).alias("k"),
         F.array(big, F.lit(1).cast("decimal(38,9)")).alias("g"),
     )
-    emb = stack._emb_to_frame(spark, rng.uniform(-0.5, 0.5, size=(6, 2)))
-    want_sq = float(
-        sum(_dec9(float(v) * float(v)) for r in emb.collect() for v in r["evec"])
-    )
-    assert stack._emb_sq_norm(emb) == want_sq
-    real_fold = stack.fold_dec9
-    monkeypatch.setattr(
-        stack,
-        "fold_dec9",
-        lambda g_, glen: real_fold(g_.unionByName(over.select("g")), glen),
-    )
     prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
@@ -976,10 +869,21 @@ def test_frame_fold_overflow_guard(spark, monkeypatch):
             fold_dec9(over, 2)
         with pytest.raises(ArithmeticError, match="overflow"):
             fold_dec9(over, 2, by="k")
-        with pytest.raises(ArithmeticError, match="overflow"):
-            stack._emb_sq_norm(emb)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
+
+    # the quantizer's domain: the largest doubles below 1e19 keep their
+    # value; NaN, ±inf and |x| >= 1e19 raise, naming value and bound
+    for v in (9.9e18, -9.999999999999998e18):
+        assert _dec9_py(Decimal, v) == _dec9(v) == Decimal(repr(v))
+    for v in (float("nan"), float("inf"), float("-inf"), 1e19, -1e19, 1e22):
+        with pytest.raises(ArithmeticError, match="must be finite and below 1e"):
+            _dec9_py(Decimal, v)
+        with pytest.raises(ArithmeticError, match="must be finite and below 1e"):
+            _dec9(v)
+    wild = spark.createDataFrame([([1.0],), ([1e22],)], "x array<double>")
+    with pytest.raises(PythonException, match="dec9 cannot quantize 1e\\+22"):
+        wild.select(dec9_udf(lambda x: np.vstack(x.to_list()), "x")).collect()
 
 
 def _jobs_in_group(spark, group, fn):
@@ -1165,34 +1069,56 @@ def test_save_load_stack_model_round_trip(db, tmp_path):
     assert a == b
 
 
-def test_save_load_frame_embedding_layer(db, tmp_path):
-    """Frame-resident (high-cardinality) layer embeddings persist as
-    parquet and reload as DataFrames with identical contents."""
-    from dataclasses import replace
+def test_load_stack_model_reads_frame_layout(spark, tmp_path):
+    """A model saved with a layer in the former frame layout (manifest
+    ``"emb": "frame"``, the table as ``(code, evec)`` parquet under
+    ``layer_<i>_emb/``, no npz entry) loads back as the array in code
+    order; a gap in its codes raises."""
+    import json
+    import os
+
+    import numpy as np
+    import pytest
 
     from deep_db_learning_spark.plans.persistence import (
         load_stack_model,
         save_stack_model,
     )
-    from deep_db_learning_spark.plans.stack import (
-        ORDERS_LAYER_SPEC,
-        train_relational_stack,
-    )
 
-    spec = replace(ORDERS_LAYER_SPEC, emb_storage="frame")
-    res = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys,
-        layers=(spec,), epochs=1, n_batches=2, seed=42, neighbor_budget=5,
-    )
+    rng = np.random.default_rng(5)
+    emb1 = rng.uniform(-0.5, 0.5, size=(6, 2))
+    params = {
+        "emb": rng.uniform(-0.5, 0.5, size=(4, 4)),
+        "W_head": rng.uniform(-0.5, 0.5, size=(9, 3)),
+        "b_head": np.zeros(3),
+        "layers": [{"emb": emb1, "W": rng.uniform(size=(7, 4)), "b": np.ones(4)}],
+    }
     path = str(tmp_path / "model")
-    save_stack_model(res, path)
-    params = load_stack_model(db.spark, path)
-    from pyspark.sql import DataFrame
+    save_stack_model(params, path)
+    loaded = load_stack_model(spark, path)
+    assert np.array_equal(loaded["layers"][0]["emb"], emb1)
 
-    assert isinstance(params["layers"][0]["emb"], DataFrame)
-    want = sorted(map(tuple, res.params["layers"][0]["emb"].collect()))
-    got = sorted(map(tuple, params["layers"][0]["emb"].collect()))
-    assert got == want
+    def rewrite_as_frame(codes):
+        arrays = dict(np.load(os.path.join(path, "arrays.npz")))
+        arrays.pop("layer_0_emb", None)
+        np.savez(os.path.join(path, "arrays.npz"), **arrays)
+        spark.createDataFrame(
+            [(c, [float(v) for v in emb1[i]]) for i, c in enumerate(codes)],
+            "code bigint, evec array<double>",
+        ).repartition(3).write.mode("overwrite").parquet(
+            os.path.join(path, "layer_0_emb")
+        )
+        with open(os.path.join(path, "manifest.json"), "w") as f:
+            json.dump({"format": 1, "layers": [{"emb": "frame"}]}, f)
+
+    rewrite_as_frame(range(6))
+    loaded = load_stack_model(spark, path)
+    assert np.array_equal(loaded["layers"][0]["emb"], emb1)
+    assert np.array_equal(loaded["layers"][0]["W"], params["layers"][0]["W"])
+    assert np.array_equal(loaded["W_head"], params["W_head"])
+    rewrite_as_frame([0, 1, 2, 4, 5, 6])
+    with pytest.raises(ValueError, match="codes are not exactly 0..5"):
+        load_stack_model(spark, path)
 
 
 def test_tabnet_full_gradients_match_finite_differences():
