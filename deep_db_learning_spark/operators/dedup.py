@@ -1265,9 +1265,17 @@ def ngram_containment_pairs(
         return j.filter(F.col("containment") >= threshold).select(
             "id_a", "id_b", "containment"
         )
-    sh = shingle_hashes_pandas(
-        df.select(F.col(id_col).alias("doc"), text_col), text_col, shingle_k
-    ).select("doc", F.explode("sh").alias("g"), F.size("sh").alias("n_sh"))
+    # explode_outer + NOT NULL filter: the rows of a plain explode
+    # (hashes are never NULL), but one shingle-kernel evaluation — for
+    # a plain explode of the UDF's attribute Spark pushes an inferred
+    # size/isnotnull filter under the projection and runs it twice
+    sh = (
+        shingle_hashes_pandas(
+            df.select(F.col(id_col).alias("doc"), text_col), text_col, shingle_k
+        )
+        .select("doc", F.explode_outer("sh").alias("g"), F.size("sh").alias("n_sh"))
+        .filter(F.col("g").isNotNull())
+    )
     sh = cut_lineage(sh, eager=True)
     a = sh.select(
         F.col("doc").alias("id_a"), "g", F.col("n_sh").alias("n_a")

@@ -769,7 +769,10 @@ def pq_topk(
     )
     scored = (
         encoded.select(F.col(id_col), udf("codes").alias("__d"))
-        .select(id_col, F.posexplode("__d").alias("__qidx", "dist"))
+        # _outer: a plain posexplode of the UDF's attribute makes Spark
+        # push an inferred size/isnotnull filter under the projection,
+        # running the ADC kernel twice; a NULL __qidx joins nothing
+        .select(id_col, F.posexplode_outer("__d").alias("__qidx", "dist"))
         .join(broadcast(qmap), "__qidx")
     )
     shortlist_k = k * rerank_factor if rerank is not None else k
@@ -854,9 +857,12 @@ def ivf_pq_topk(
 
     probe_fn.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
     probe_udf = pandas_udf(probe_fn, "array<int>")
+    # explode_outer keeps the probe kernel to one evaluation (a plain
+    # explode of the UDF's attribute runs it twice, see pq_topk); a
+    # NULL list_id joins nothing below
     probed = queries.select(
         query_id, probe_udf(F.col(vec_col)).alias("__lists")
-    ).select(query_id, F.explode("__lists").alias("list_id"))
+    ).select(query_id, F.explode_outer("__lists").alias("list_id"))
 
     # restrict the code scan to the probed lists, then ADC-rank with
     # the per-query candidate set (the join key carries which queries

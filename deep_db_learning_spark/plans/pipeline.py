@@ -68,32 +68,36 @@ def build_node_features(
         num_cols[t] = cols
         feats[t] = nodes
 
-    def layer(target: str, feature_map: dict[str, DataFrame], col_map: dict[str, list[str]]) -> DataFrame:
-        out = graph.nodes[target].select("node_id")
+    def layer(base: DataFrame, target: str) -> tuple[DataFrame, list[str]]:
+        """Left-join every edge's 1-hop aggregates onto ``base`` (one
+        row per ``target`` node); returns the zero-filled frame and the
+        added columns."""
+        out, added = base, []
         for et, edges in graph.edges.items():
             src_t, dst_t = graph.edge_meta[et]
             if dst_t != target or et.startswith("self_"):
                 continue
-            cols = col_map.get(src_t, [])
+            cols = num_cols.get(src_t, [])
             if not cols:
                 continue
             agg = graph.aggregate_along_edge(
-                et, cols, list(aggs), prefix=f"{et}__", features=feature_map[src_t]
+                et, cols, list(aggs), prefix=f"{et}__", features=feats[src_t]
             ).withColumnRenamed("dst", "node_id")
             out = out.join(agg, "node_id", "left")
-        return out.na.fill(0.0)
+            added += [c for c in agg.columns if c != "node_id"]
+        return out.na.fill(0.0), added
 
     if depth >= 2:
-        # refresh neighbor tables with their own 1-hop aggregates first
+        # refresh neighbor tables with their own 1-hop aggregates first,
+        # joined straight onto the table's features
         for t in list(graph.nodes):
             if t == table:
                 continue
-            extra = layer(t, feats, num_cols)
-            agg_cols = [c for c in extra.columns if c != "node_id"]
+            refreshed, agg_cols = layer(feats[t], t)
             if agg_cols:
-                feats[t] = feats[t].join(extra, "node_id", "left").na.fill(0.0)
+                feats[t] = refreshed
                 num_cols[t] = num_cols[t] + agg_cols
-    return layer(table, feats, num_cols)
+    return layer(graph.nodes[table].select("node_id"), table)[0]
 
 
 def minimum_slice(

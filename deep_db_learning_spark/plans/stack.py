@@ -33,11 +33,13 @@ pinned by the independent twin, not by a second engine path):
   per batch (the portable-hash batches never change across epochs).
 - **gradients down the stack**: dL/dhbar flows as a JOINED frame
   ``(key, gout, deg)`` — level 1's comes from the driver head step
-  (bounded by batch size), deeper levels are produced by a per-row
-  Spark job; no driver dict ever holds a non-root level. Each level's
-  weight and embedding gradients are one ``training.fold_dec9`` job,
-  keyed by code, over the rows' ``dec9_udf`` vectors — the exact
-  decimal fold every in-engine trainer shares.
+  (bounded by batch size) as an Arrow table built on the driver (a
+  ``LocalTableScan``: no job, no Python worker), deeper levels are
+  produced by a per-row Spark job; no driver dict ever holds a
+  non-root level. Each level's weight and embedding gradients are one
+  ``training.fold_dec9`` job, keyed by code, over the rows'
+  ``dec9_udf`` vectors — the exact decimal fold every in-engine
+  trainer shares.
 - **embeddings**: every layer's embedding table is a driver numpy
   array (``card × emb_dim``) that each Arrow kernel indexes by code —
   an in-kernel broadcast join, the one embedding source of every
@@ -268,6 +270,29 @@ def _layer_forward_frame(
         F.array(
             *[F.col(f"s{j}").cast("double") / F.col("deg") for j in range(d)]
         ).alias("hbar"),
+    )
+
+
+def _level1_gradient_frame(spark, bids, gH, degs) -> DataFrame | None:
+    """Level 1's gradient frame ``(key, gout, gdeg)`` from the driver
+    head step: one row per batch root with children (``None`` when
+    every root is childless). Built from a ``pyarrow.Table`` on the
+    driver, so the frame is a ``LocalTableScan`` — no Python-RDD job
+    and no Python worker per step, whatever the Arrow conf — and the
+    ``gout`` doubles are the head's values unchanged."""
+    import pyarrow as pa
+
+    keep = degs > 0
+    if not keep.any():
+        return None
+    g = gH[keep]
+    gout = pa.ListArray.from_arrays(
+        pa.array(np.arange(0, g.size + 1, g.shape[1], dtype=np.int32)),
+        pa.array(g.ravel()),
+    )
+    table = pa.table({"key": bids[keep], "gout": gout, "gdeg": degs[keep]})
+    return spark.createDataFrame(
+        table, "key bigint, gout array<double>, gdeg bigint"
     )
 
 
@@ -687,18 +712,10 @@ def train_relational_stack(
 
             # level-1 gradient frame from the head (bounded by batch
             # size; broadcast into the join), then fold level by level
-            g_rows = [
-                (int(i), [float(v) for v in gH[j]], int(degs[j]))
-                for j, i in enumerate(bids)
-                if degs[j] > 0
-            ]
+            g1 = _level1_gradient_frame(spark, bids, gH, degs)
             grads = []
-            if g_rows:
-                g_frame = F.broadcast(
-                    spark.createDataFrame(
-                        g_rows, "key bigint, gout array<double>, gdeg bigint"
-                    )
-                )
+            if g1 is not None:
+                g_frame = F.broadcast(g1)
                 for i in range(L):
                     d_e, nx, d, m_i = dims[i]
                     with_child = i + 1 < L

@@ -38,8 +38,8 @@ replay every epoch's loss bit-for-bit from DuckDB-read parquet.
 
 The gradient fold is the one every in-engine trainer runs:
 ``training.dec9_udf`` emits each row's dec9 vector and
-``training.fold_dec9`` sums it with ``posexplode → groupBy(pos) →
-sum``. The full parameter vector here is ~4k components: four thousand
+``training.fold_dec9`` sums it with ``posexplode_outer → groupBy(pos)
+→ sum``. The full parameter vector here is ~4k components: four thousand
 aggregate expressions in one projection is a plan-compilation hazard,
 while one narrow shuffle of (pos, decimal) pairs is the same exact
 arithmetic at any parameter count (and is how a 100×-wider model would

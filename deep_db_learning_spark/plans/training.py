@@ -121,37 +121,54 @@ def dec9_udf(kernel, *cols):
     return _pandas_udf(fn, f"array<{DECIMAL_TYPE}>", struct_input=True)(arg)
 
 
+def _fold_query(g: DataFrame, by: str | None = None) -> DataFrame:
+    """The plan :func:`fold_dec9` collects: ``posexplode_outer(g) →
+    groupBy([by,] pos) → sum, count``. The ``_outer`` form keeps the
+    ``dec9_udf`` kernel to ONE evaluation per row: for a plain
+    ``posexplode`` Spark infers ``size(g) > 0 AND isnotnull(g)`` and
+    pushes that filter below the projection that computes ``g``, so the
+    plan runs the kernel twice (two ``ArrowEvalPython`` nodes, two
+    Python workers). ``dec9_udf`` vectors are never NULL or empty, so
+    the rows are the same; an illegal NULL/empty vector surfaces as a
+    NULL ``pos`` that :func:`fold_dec9` rejects."""
+    keys = [by] if by else []
+    return (
+        g.select(*keys, F.posexplode_outer("g").alias("pos", "v"))
+        .groupBy(*keys, "pos")
+        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
+    )
+
+
 def fold_dec9(g: DataFrame, glen: int, by: str | None = None):
     """ONE Spark job folding the dec9 vectors of column ``g`` (each of
-    length ``glen``) as exact decimals: ``posexplode → groupBy([by,]
-    pos) → sum, count``. Decimal addition is exact and associative, so
-    every sum is partitioning-independent. The shuffle is narrow
-    ``(pos, decimal)`` pairs and the driver collects ``glen`` rows (per
-    ``by`` key) — safe at any component count, where a wide one-row
-    aggregate of thousands of expressions is a plan-compilation hazard.
+    length ``glen``) as exact decimals: :func:`_fold_query`'s
+    ``posexplode_outer → groupBy([by,] pos) → sum, count``, one
+    ``dec9_udf`` evaluation per row. Decimal addition is exact and
+    associative, so every sum is partitioning-independent. The shuffle
+    is narrow ``(pos, decimal)`` pairs and the driver collects ``glen``
+    rows (per ``by`` key) — safe at any component count, where a wide
+    one-row aggregate of thousands of expressions is a plan-compilation
+    hazard.
 
     Returns ``(tot, per_key, n)``: the float64 totals, ``{key: float64
     sums}`` when ``by`` is set (else ``{}``), and the folded row count.
     With ``by`` the totals are the exact ``Decimal`` sums of the per-key
     sums — the same values a global fold gives. An empty frame folds to
     zeros with ``n == 0``. A NULL sum (decimal overflow: non-ANSI Spark
-    nulls instead of raising) or a missing position (a row shorter
-    than ``glen``) raises ``ArithmeticError`` — never a silent zero
-    gradient."""
+    nulls instead of raising), a missing position (a row shorter than
+    ``glen``) or a NULL/empty vector raises ``ArithmeticError`` — never
+    a silent zero gradient."""
     import numpy as np
     from decimal import Decimal
 
-    keys = [by] if by else []
-    rows = (
-        g.select(*keys, F.posexplode("g").alias("pos", "v"))
-        .groupBy(*keys, "pos")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
-        .collect()
-    )
     sums: dict = {}
     counts: dict = {}
-    for r in rows:
+    for r in _fold_query(g, by).collect():
         key = r[by] if by else None
+        if r["pos"] is None:
+            raise ArithmeticError(
+                f"dec9 fold got {r['c']} NULL or empty vector(s) (key {key!r})"
+            )
         if r["s"] is None:
             raise ArithmeticError(
                 f"decimal overflow in the dec9 fold: NULL sum at position "

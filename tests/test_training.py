@@ -886,6 +886,73 @@ def test_frame_fold_overflow_guard(spark):
         wild.select(dec9_udf(lambda x: np.vstack(x.to_list()), "x")).collect()
 
 
+def test_fold_query_runs_the_kernel_once(spark):
+    """The fold's plan evaluates its ``dec9_udf`` kernel in ONE
+    ``ArrowEvalPython`` node, global and per key: a plain ``posexplode``
+    lets Spark push an inferred ``size(g) > 0`` filter below the
+    projection and run the kernel twice. The ``_outer`` form would emit
+    a NULL position for an empty vector; the fold rejects it."""
+    import numpy as np
+
+    from deep_db_learning_spark.functions.exact_agg import DECIMAL_TYPE
+    from deep_db_learning_spark.plans.training import _fold_query, dec9_udf, fold_dec9
+
+    df = spark.range(4).select(
+        (F.col("id") % 2).alias("k"), F.col("id").cast("double").alias("x")
+    )
+    g = df.select(
+        "k",
+        dec9_udf(lambda x: np.vstack([x.to_numpy(), -x.to_numpy()]).T, "x").alias(
+            "g"
+        ),
+    )
+    for by in (None, "k"):
+        plan = _fold_query(g, by)._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, plan
+    one = F.array(F.lit(1).cast(DECIMAL_TYPE))
+    empty = spark.range(2).select(
+        F.when(F.col("id") == 0, F.array().cast(f"array<{DECIMAL_TYPE}>"))
+        .otherwise(one)
+        .alias("g")
+    )
+    with pytest.raises(ArithmeticError, match="NULL or empty"):
+        fold_dec9(empty, 1)
+
+
+def test_level1_gradient_frame_is_a_local_table(spark):
+    """The stack's level-1 gradient frame is built from an Arrow table
+    on the driver: its executed plan is a ``LocalTableScan`` (no
+    Python-RDD job, no worker) with Arrow conversion off, its schema is
+    the join's, and it holds the childless-filtered head gradients
+    bit for bit; a batch of childless roots has no frame."""
+    import numpy as np
+
+    from deep_db_learning_spark.plans.stack import _level1_gradient_frame
+
+    prev = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled")
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    try:
+        bids = np.array([3, 8, 11, 40], dtype=np.int64)
+        gH = np.random.default_rng(0).normal(size=(4, 3)) * 1e-7
+        degs = np.array([2, 0, 1, 5], dtype=np.int64)
+        f = _level1_gradient_frame(spark, bids, gH, degs)
+        plan = f._jdf.queryExecution().executedPlan()
+        assert plan.nodeName() == "LocalTableScan"
+        assert f.schema.simpleString() == (
+            "struct<key:bigint,gout:array<double>,gdeg:bigint>"
+        )
+        got = [
+            (r["key"], [v.hex() for v in r["gout"]], r["gdeg"]) for r in f.collect()
+        ]
+        assert got == [
+            (int(bids[j]), [float(v).hex() for v in gH[j]], int(degs[j]))
+            for j in (0, 2, 3)
+        ]
+        assert _level1_gradient_frame(spark, bids, gH, np.zeros(4, np.int64)) is None
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", prev)
+
+
 def _jobs_in_group(spark, group, fn):
     """Run ``fn`` under a Spark job group; return its result and the
     number of jobs the group fired."""
