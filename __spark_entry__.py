@@ -1288,7 +1288,7 @@ def q_train_relational(spark, sf_dir):
         **THREE_LAYER_BENCH_CONFIG,
     )
     # TabNet decision head over the assembled root frame (r6): frozen
-    # seeded encoder (exact-mode kernel, batch-independent), in-engine
+    # seeded encoder (fixed-order kernel, batch-independent), in-engine
     # decimal-fold GD on the head; twin plans/train_oracle.py
     from deep_db_learning_spark.plans.tabnet_head import (
         TABNET_HEAD_BENCH_CONFIG,

@@ -213,28 +213,18 @@ def tabnet_forward(
     attn_channels: int = 8,
     gamma: float = 1.2,
     seed: int = 42,
-    exact: bool = False,
 ):
     """The TabNet encoder forward over a [batch, in_ch] float matrix —
     the SHARED kernel (the ``row_logits`` precedent: engine UDF and
     oracle twin run this identical function; independence lives in the
-    data path). ``exact=True`` replaces every GEMM with the
-    fixed-order rank-1 accumulation, making results independent of the
-    Arrow batch split — required whenever the encoding feeds a
+    data path). Every linear map is the fixed-order rank-1
+    accumulation ``plans.training.row_logits``, so results are
+    independent of the Arrow batch split — the encoding feeds a
     bit-pinned trajectory (the frozen-encoder head trainer,
     ``plans/tabnet_head.train_tabnet_head``, and its twin)."""
     import numpy as np
 
-    if exact:
-        from ..plans.training import row_logits
-
-        def lin(x, w, b):
-            return row_logits(x, w, b)
-
-    else:
-
-        def lin(x, w, b):
-            return x @ w + b
+    from ..plans.training import row_logits as lin
 
     def glu_block(x, w, b):
         h = lin(x, w, b)
@@ -280,7 +270,6 @@ def tabnet_encode(
     attn_channels: int = 8,
     gamma: float = 1.2,
     seed: int = 42,
-    exact: bool = False,
 ) -> Column:
     """N22 TabNet encoder dataflow (``nn/models/tabular/tabnet.py:76-110``)
     over a flat ``array<float>`` feature row: per step, an attentive
@@ -288,14 +277,14 @@ def tabnet_encode(
     running prior, the masked input passes a GLU feature transformer,
     ReLU'd splits accumulate, and the prior decays by (γ − mask).
     BatchNorm/GhostBN are training-time statistics and live with the
-    trainer. ``exact``: see :func:`tabnet_forward`."""
+    trainer. Batch-split independent: see :func:`tabnet_forward`."""
 
     def fn(v):
         import pandas as pd
 
         res = tabnet_forward(
             _stack(v), out_channels, num_layers, feat_channels, attn_channels,
-            gamma, seed, exact,
+            gamma, seed,
         )
         return pd.Series([r.tolist() for r in res])
 

@@ -58,13 +58,14 @@ def agg_expressions(
     feature_cols: list[str],
     aggs: list[str],
     prefix: str = "",
-    exact: bool = True,
 ) -> list:
     """The shared agg-expression list for message aggregation: one
-    ``{prefix}{agg}_{col}`` per (agg, col) + ``{prefix}degree``."""
+    ``{prefix}{agg}_{col}`` per (agg, col) + ``{prefix}degree``. Sum
+    and mean over float/double columns are the decimal folds of
+    :mod:`..functions.exact_agg`."""
 
     def agg_expr(a: str, c: str):
-        if exact and a in _EXACT_FNS and dtypes.get(c) in _FLOATING:
+        if a in _EXACT_FNS and dtypes.get(c) in _FLOATING:
             return _EXACT_FNS[a](c).alias(f"{prefix}{a}_{c}")
         return AGG_FNS[a](F.col(c)).alias(f"{prefix}{a}_{c}")
 
@@ -82,7 +83,6 @@ def aggregate_neighbors(
     dst: str = "dst",
     src_id: str = "node_id",
     prefix: str = "",
-    exact: bool = True,
 ) -> DataFrame:
     """A6/N11: aggregate src-node features onto each dst node.
 
@@ -91,10 +91,10 @@ def aggregate_neighbors(
     by default (both can be huge); Spark/AQE picks the strategy, and
     callers co-partitioned on node_id reuse the shuffle.
 
-    With ``exact`` (default), sum/mean over float/double columns use
-    the decimal fold from :mod:`..functions.exact_agg` so the result is
-    identical for every partitioning — reproducibility you want on a
-    1000-executor run, at a small JVM decimal-add cost.
+    Sum/mean over float/double columns use the decimal fold from
+    :mod:`..functions.exact_agg`, so the result is identical for every
+    partitioning — reproducibility you want on a 1000-executor run, at
+    a small JVM decimal-add cost.
     """
     dtypes = dict(src_features.dtypes)
     feats = src_features.select(
@@ -102,7 +102,7 @@ def aggregate_neighbors(
     )
     joined = edges.join(feats, src, "inner")
     return joined.groupBy(dst).agg(
-        *agg_expressions(dtypes, feature_cols, list(aggs), prefix, exact)
+        *agg_expressions(dtypes, feature_cols, list(aggs), prefix)
     )
 
 

@@ -19,6 +19,13 @@ decimal fold of dec9-quantized components — so the whole trajectory is
 bit-reproducible under any partitioning and recomputed by the
 independent twin (``plans/train_oracle.py:_stack_losses``).
 
+The head is the one decision head of ``plans/training.py``:
+``two_layer_head_step`` runs ``training.head_loss`` on the driver and
+``_score_roots`` predicts through ``training.head_pred_udf``. Every
+level kernel builds its rows with ``training.design_rows`` through one
+stack-local pair — :func:`_level_hidden` (``H = tanh(X·W + b)``) and
+:func:`_level_delta` (``D = G·(1 − H²)``).
+
 Scale posture (each capability has one path; the trajectory is
 pinned by the independent twin, not by a second engine path):
 
@@ -70,7 +77,10 @@ from .training import (
     TrainResult,
     assemble_training_frame,
     dec9_udf,
+    design_rows,
     fold_dec9,
+    head_pred_udf,
+    kernel_udf,
     row_logits,
     split_metric,
     two_layer_head_step,
@@ -229,6 +239,23 @@ def _with_child_hbar(frame: DataFrame, child_hb: DataFrame | None, d_child: int)
     )
 
 
+def _level_hidden(E, W, b, code, xs):
+    """One Arrow batch of a level's rows: the design ``X = [E[code] ++
+    xs…]`` (:func:`~.training.design_rows`) and its activation ``H =
+    tanh(X·W + b)`` — the forward every level kernel starts from."""
+    X = design_rows(E, code, *xs)
+    return X, np.tanh(row_logits(X, W, b))
+
+
+def _level_delta(E, W, b, code, xs, gout, gdeg):
+    """``X`` and the pre-activation gradient ``D = G·(1 − H²)`` of a
+    level's rows, where ``G = gout/gdeg`` is each row's dL/dh (the
+    parent's gradient split over its children)."""
+    X, H = _level_hidden(E, W, b, code, xs)
+    G = np.vstack(gout.to_list()) / gdeg.to_numpy(dtype=np.float64)[:, None]
+    return X, G * (1.0 - H * H)
+
+
 def _layer_forward_frame(
     frame: DataFrame,
     E: np.ndarray,
@@ -252,12 +279,7 @@ def _layer_forward_frame(
         cols.append("__child_hbar")
 
     def h_kernel(code, *xs):
-        X = np.concatenate(
-            [Ec[code.to_numpy(dtype=np.int64)]]
-            + [np.vstack(x.to_list()) for x in xs],
-            axis=1,
-        )
-        return np.tanh(row_logits(X, Wc, bc))
+        return _level_hidden(Ec, Wc, bc, code, xs)[1]
 
     h = frame.select("parent_key", dec9_udf(h_kernel, *cols).alias("h"))
     sums = h.groupBy("parent_key").agg(
@@ -336,14 +358,7 @@ def _layer_backward_fold(
 
     def g_kernel(code, *rest):
         *xs, gout, gdeg = rest
-        X = np.concatenate(
-            [Ec[code.to_numpy(dtype=np.int64)]]
-            + [np.vstack(x.to_list()) for x in xs],
-            axis=1,
-        )
-        G = np.vstack(gout.to_list()) / gdeg.to_numpy(dtype=np.float64)[:, None]
-        H = np.tanh(row_logits(X, Wc, bc))
-        D = G * (1.0 - H * H)
+        X, D = _level_delta(Ec, Wc, bc, code, xs, gout, gdeg)
         return np.concatenate(
             [(X[:, :, None] * D[:, None, :]).reshape(len(X), -1), D], axis=1
         )
@@ -375,39 +390,22 @@ def _layer_g_next_frame(
     children carry gdeg 0 and are dropped by the child's inner
     gradient join before any division happens."""
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
     Ec, Wc, bc = E.copy(), W.copy(), b.copy()
     WhT = W[d_e + nx :].T.copy()  # (d, d_child)
     zeros = np.zeros(d_child)
 
-    def gn_fn(code, x, chb, gout, gdeg):
-        X = np.concatenate(
-            [
-                Ec[code.to_numpy(dtype=np.int64)],
-                np.vstack(x.to_list()),
-                np.vstack(chb.to_list()),
-            ],
-            axis=1,
-        )
-        G = np.vstack(gout.to_list()) / gdeg.to_numpy(dtype=np.float64)[:, None]
-        H = np.tanh(row_logits(X, Wc, bc))
-        D = G * (1.0 - H * H)
+    def gn_kernel(code, x, chb, gout, gdeg):
+        _X, D = _level_delta(Ec, Wc, bc, code, (x, chb), gout, gdeg)
         out = row_logits(D, WhT, zeros)
         return pd.Series([list(map(float, row)) for row in out])
 
-    gn_fn.__annotations__ = {
-        "code": pd.Series,
-        "x": pd.Series,
-        "chb": pd.Series,
-        "gout": pd.Series,
-        "gdeg": pd.Series,
-        "return": pd.Series,
-    }
-    udf = pandas_udf(gn_fn, "array<double>")
+    gout = kernel_udf(
+        gn_kernel, "array<double>", "code", "x", "__child_hbar", "__gout", "__gdeg"
+    )
     return joined.select(
         F.col("child_key").alias("key"),
-        udf("code", "x", "__child_hbar", "__gout", "__gdeg").alias("gout"),
+        gout.alias("gout"),
         F.col("__child_deg").alias("gdeg"),
     )
 
@@ -450,34 +448,17 @@ def _score_roots(frame, frames, params, dims, task) -> DataFrame:
     Returns the lazy ``(node_id, label, split, pred)`` frame; the same
     fixed-order ``row_logits`` accumulation as training, nothing
     root-sized on the driver."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     lay = params["layers"]
     hb, _ = _forward_chain(
         frames, [p["emb"] for p in lay], [p["W"] for p in lay],
         [p["b"] for p in lay], dims,
     )
-    regression = task == "regression"
     Ec = params["emb"].copy()
     Wc, bc = params["W_head"].copy(), params["b_head"].copy()
-
-    def pred_fn(code, nums, hbar):
-        codes = code.to_numpy(dtype=np.int64)
-        X = np.concatenate(
-            [Ec[codes], np.vstack(nums.to_list()), np.vstack(hbar.to_list())],
-            axis=1,
-        )
-        out = row_logits(X, Wc, bc)
-        if regression:
-            return pd.Series(out[:, 0])
-        return pd.Series(np.argmax(out, axis=1).astype(np.int64))
-
-    pred_fn.__annotations__ = {
-        "code": pd.Series, "nums": pd.Series, "hbar": pd.Series,
-        "return": pd.Series,
-    }
-    pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
+    pred = head_pred_udf(
+        lambda code, nums, hbar: row_logits(design_rows(Ec, code, nums, hbar), Wc, bc),
+        task, "code", "nums", "hbar",
+    )
     zeros = F.array(*[F.lit(0.0)] * dims[0][2])
     return (
         frame.join(
@@ -486,10 +467,7 @@ def _score_roots(frame, frames, params, dims, task) -> DataFrame:
             "left",
         )
         .withColumn("hbar", F.coalesce("hbar", zeros))
-        .select(
-            "node_id", "label", "split",
-            pudf("code", "nums", "hbar").alias("pred"),
-        )
+        .select("node_id", "label", "split", pred.alias("pred"))
     )
 
 
@@ -536,7 +514,6 @@ def train_relational_stack(
     seed: int = 42,
     neighbor_budget: int | None = 5,
     task: str = "classification",
-    fit_fn=None,
 ) -> TrainResult:
     """Minibatch SGD through a depth-(L+1) stack declared by
     ``layers`` — see the module docstring for the model, the
@@ -550,13 +527,6 @@ def train_relational_stack(
     ``nn/lightning/lightning_wrapper.py:40,50-55``); the deep layers
     are unchanged, and ``TrainResult.accuracy`` carries per-split MSE
     in standardized-label space.
-
-    ``fit_fn`` is the TorchDistributor hand-off seam the 1-layer
-    trainer also carries: when set, it receives ``(frame, frames,
-    meta)`` — the assembled (and lineage-cut) root frame, the per-layer
-    child frames, and the root metadata — and takes over training
-    entirely (e.g. materialize to Parquet shards and run DDP); the
-    assembly plans are identical either way.
 
     The per-split metric is aggregated from the lineage-cut scored
     root frame (:func:`_score_roots`), which the result carries for
@@ -599,8 +569,6 @@ def train_relational_stack(
         f, card = _assemble_child_frame(tables, spec, seed)
         frames.append(cut_lineage(f, eager=True))
         cards.append(card)
-    if fit_fn is not None:
-        return fit_fn(frame, frames, meta)
 
     # the seed-node set: the batch assignment is the portable knuth
     # hash computed in Spark; each step collects only its own batch's

@@ -36,8 +36,10 @@ partitioning-independent); SGD runs on the driver; the independent
 twins (``train_oracle._tabnet_full_losses`` / ``_trompt_full_losses``)
 replay every epoch's loss bit-for-bit from DuckDB-read parquet.
 
-The gradient fold is the one every in-engine trainer runs:
-``training.dec9_udf`` emits each row's dec9 vector and
+The decision head is the one every in-engine trainer runs:
+``training.head_loss`` gives each row's loss and residual and
+``training.head_pred_udf`` the prediction column. So is the gradient
+fold: ``training.dec9_udf`` emits each row's dec9 vector and
 ``training.fold_dec9`` sums it with ``posexplode_outer → groupBy(pos)
 → sum``. The full parameter vector here is ~4k components: four thousand
 aggregate expressions in one projection is a plan-compilation hazard,
@@ -66,6 +68,8 @@ from .training import (
     assemble_training_frame,
     dec9_udf,
     fold_dec9,
+    head_loss,
+    head_pred_udf,
     row_logits,
     split_metric,
 )
@@ -139,7 +143,7 @@ def tabnet_full_forward(X, p: dict, num_layers: int, fc: int, ac: int,
                         gamma: float = 1.2) -> dict:
     """Forward over a [batch, in_ch] float matrix with EXPLICIT
     parameters — op-for-op the same float64 expressions as
-    ``kernels.tabnet_forward(exact=True)`` (fixed-order ``row_logits``
+    ``kernels.tabnet_forward`` (fixed-order ``row_logits``
     GEMMs, the same GLU/sigmoid/relu/prior order), so at the seeded
     init the two produce identical bits. Returns the caches the
     backward consumes. SHARED by the engine UDF and the twin (the
@@ -181,12 +185,13 @@ def tabnet_full_row_grads(X, y, p: dict, num_layers: int, fc: int, ac: int,
                           k: int, gamma: float = 1.2,
                           task: str = "classification"):
     """[batch] per-row ``[loss] ++ flat gradients`` (pre-quantization)
-    for EVERY parameter in :func:`tabnet_param_specs` order — softmax
-    CE (or the k=1 half-squared-error regression head on the
-    train-standardized label, the ``_fit_linear_head`` convention) at
-    the top, then reverse accumulation through the output projection,
-    the accumulator sum, each GLU block, each sparsemax (support-set
-    projection backward), and the prior recurrence. All batch-dim maps
+    for EVERY parameter in :func:`tabnet_param_specs` order — the
+    engine's one decision head (``training.head_loss``: softmax CE, or
+    the k=1 half-squared-error regression head on the
+    train-standardized label) at the top, then reverse accumulation
+    through the output projection, the accumulator sum, each GLU
+    block, each sparsemax (support-set projection backward), and the
+    prior recurrence. All batch-dim maps
     are fixed-order ``row_logits``; everything else is elementwise or
     a fixed-width per-row reduction, so each row's gradient is
     independent of the Arrow batch it rides in. SHARED by the engine
@@ -196,19 +201,7 @@ def tabnet_full_row_grads(X, y, p: dict, num_layers: int, fc: int, ac: int,
     in_ch = X.shape[1]
     zer_in = np.zeros(in_ch)
     fw = tabnet_full_forward(X, p, num_layers, fc, ac, gamma)
-    if task == "regression":
-        yf = np.asarray(y, dtype=np.float64)
-        r = fw["logits"][:, 0] - yf
-        loss = 0.5 * r * r
-        resid = r[:, None]
-    else:
-        logits = fw["logits"] - fw["logits"].max(axis=1, keepdims=True)
-        ex = np.exp(logits)
-        P = ex / ex.sum(axis=1, keepdims=True)
-        ridx = np.arange(B)
-        loss = -np.log(P[ridx, y])
-        resid = P.copy()
-        resid[ridx, y] -= 1.0
+    loss, resid = head_loss(fw["logits"], y, task)
 
     grads: dict = {}
     grads["Wh"] = fw["enc"][:, :, None] * resid[:, None, :]
@@ -318,7 +311,6 @@ def train_tabnet_full(
     ``train_oracle._tabnet_full_losses``."""
     from .tabnet_head import tabnet_feature_expr
 
-    regression = task == "regression"
     frame, meta = assemble_training_frame(
         tables, primary_keys, foreign_keys, target, cat_col, num_cols,
         seed=seed, neighbor_budget=neighbor_budget, task=task,
@@ -344,10 +336,9 @@ def train_tabnet_full(
         pc = {kk: v.copy() for kk, v in p.items()}
 
         def grad_kernel(x, label):
-            X = np.vstack(x.to_list())
-            y = label.to_numpy(dtype=np.float64 if regression else np.int64)
             return tabnet_full_row_grads(
-                X, y, pc, num_layers, fc, ac, k, gamma, task=task
+                np.vstack(x.to_list()), label, pc, num_layers, fc, ac, k,
+                gamma, task=task,
             )
 
         flat, _, n = fold_dec9(
@@ -356,21 +347,13 @@ def train_tabnet_full(
         losses.append(flat[0] / n + 0.5 * l2 * l2_term(p, specs))
         sgd_step(p, specs, flat, n, lr, l2)
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    pc = {kk: v.copy() for kk, v in p.items()}
-
-    def pred_fn(x):
-        X = np.vstack(x.to_list())
-        fw = tabnet_full_forward(X, pc, num_layers, fc, ac, gamma)
-        if regression:
-            return pd.Series(fw["logits"][:, 0])
-        return pd.Series(np.argmax(fw["logits"], axis=1).astype(np.int64))
-
-    pred_fn.__annotations__ = {"x": pd.Series, "return": pd.Series}
-    pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
-    preds = full.select("split", "label", pudf("x").alias("pred"))
+    pred = head_pred_udf(
+        lambda x: tabnet_full_forward(
+            np.vstack(x.to_list()), p, num_layers, fc, ac, gamma
+        )["logits"],
+        task, "x",
+    )
+    preds = full.select("split", "label", pred.alias("pred"))
     return TrainResult(
         losses=losses, accuracy=split_metric(preds, task), params=p
     )
@@ -433,25 +416,16 @@ def trompt_full_row_grads(m, y, p: dict, num_layers: int,
                           num_prompts: int, k: int,
                           task: str = "classification"):
     """One row's ``[loss] ++ flat gradients`` in
-    :func:`trompt_param_specs` order — softmax CE (or the k=1
-    half-squared-error regression head), then reverse accumulation
-    through the mean-pool and the stacked residual attention layers
-    down to the prompt bank itself. SHARED by the engine UDF and the
-    twin."""
+    :func:`trompt_param_specs` order — ``training.head_loss`` on the
+    row's logits (softmax CE, or the k=1 half-squared-error regression
+    head), then reverse accumulation through the mean-pool and the
+    stacked residual attention layers down to the prompt bank itself.
+    SHARED by the engine UDF and the twin."""
     ch = m.shape[1]
     L, P = num_layers, num_prompts
     caches, enc, logits = trompt_full_forward(m, p, L, P)
-    if task == "regression":
-        r = logits[0] - float(y)
-        loss = 0.5 * r * r
-        resid = np.array([r])
-    else:
-        logits = logits - logits.max()
-        ex = np.exp(logits)
-        Pr = ex / ex.sum()
-        loss = -np.log(Pr[y])
-        resid = Pr.copy()
-        resid[y] -= 1.0
+    loss, resid = head_loss(logits[None, :], [y], task)
+    resid = resid[0]
     dWh = np.outer(enc, resid)
     d_enc = p["Wh"] @ resid
     # every stacked prompt row contributes 1/(L·P) of itself to enc
@@ -466,7 +440,7 @@ def trompt_full_row_grads(m, y, p: dict, num_layers: int,
         d_u = d_scores @ m / math.sqrt(ch)
         dWs[i] = prompt_i.T @ d_u
         d_p = d_p + d_u @ p[f"W{i}"].T         # residual + attention paths
-    flat = [np.array([loss]), d_p.ravel()]
+    flat = [loss, d_p.ravel()]
     flat += [dW.ravel() for dW in dWs]
     flat += [dWh.ravel(), resid]
     return np.concatenate(flat)
@@ -498,7 +472,6 @@ def train_trompt_full(
     Twin: ``train_oracle._trompt_full_losses``."""
     from .tabnet_head import trompt_column_embedder
 
-    regression = task == "regression"
     frame, meta = assemble_training_frame(
         tables, primary_keys, foreign_keys, target, cat_col, num_cols,
         seed=seed, neighbor_budget=neighbor_budget, task=task,
@@ -518,13 +491,13 @@ def train_trompt_full(
         pc = {kk: v.copy() for kk, v in p.items()}
 
         def grad_kernel(code, nums, label):
-            ys = label.to_numpy(dtype=np.float64 if regression else np.int64)
             return np.vstack([
                 trompt_full_row_grads(
-                    embed(c, xs), y if regression else int(y), pc,
-                    num_layers, num_prompts, k, task=task,
+                    embed(c, xs), y, pc, num_layers, num_prompts, k, task=task
                 )
-                for c, xs, y in zip(code.to_numpy(dtype=np.int64), nums.to_list(), ys)
+                for c, xs, y in zip(
+                    code.to_numpy(dtype=np.int64), nums.to_list(), label.to_numpy()
+                )
             ])
 
         flat, _, n = fold_dec9(
@@ -534,27 +507,14 @@ def train_trompt_full(
         losses.append(flat[0] / n + 0.5 * l2 * l2_term(p, specs))
         sgd_step(p, specs, flat, n, lr, l2)
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    def logits_kernel(code, nums):
+        return np.vstack([
+            trompt_full_forward(embed(c, xs), p, num_layers, num_prompts)[2]
+            for c, xs in zip(code.to_numpy(dtype=np.int64), nums.to_list())
+        ])
 
-    pc = {kk: v.copy() for kk, v in p.items()}
-
-    def pred_fn(code, nums):
-        out = []
-        for c, xs in zip(code.to_numpy(dtype=np.int64), nums.to_list()):
-            _c, _e, logits = trompt_full_forward(
-                embed(c, xs), pc, num_layers, num_prompts
-            )
-            out.append(
-                float(logits[0]) if regression else int(np.argmax(logits))
-            )
-        return pd.Series(out)
-
-    pred_fn.__annotations__ = {
-        "code": pd.Series, "nums": pd.Series, "return": pd.Series,
-    }
-    pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
-    preds = full.select("split", "label", pudf("code", "nums").alias("pred"))
+    pred = head_pred_udf(logits_kernel, task, "code", "nums")
+    preds = full.select("split", "label", pred.alias("pred"))
     return TrainResult(
         losses=losses, accuracy=split_metric(preds, task), params=p
     )

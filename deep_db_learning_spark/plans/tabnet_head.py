@@ -5,15 +5,18 @@ The reference trains the FULL TabNet (``nn/models/tabular/tabnet.py:
 15-308``); ``plans/tabnet_full`` does that in-engine. Here the
 encoder dataflow (``operators/kernels.tabnet_encode`` — attentive
 sparsemax masks, GLU feature transformers, prior decay) runs FROZEN at
-its seeded initialization, in ``exact`` mode (every GEMM a fixed-order
-rank-1 accumulation, so the encoding is Arrow-batch-independent), and
-the DECISION HEAD — the linear map from aggregated decision features to
+its seeded initialization (every GEMM a fixed-order rank-1
+accumulation, so the encoding is Arrow-batch-independent), and the
+DECISION HEAD — the linear map from aggregated decision features to
 class logits, the reference's final ``Linear`` — trains in-engine under
 the repo's bit-determinism contract: per-row gradients dec9-quantized
 in an Arrow kernel (``training.dec9_udf``), folded with exact decimal
 sums (``training.fold_dec9`` — associative ⇒ partitioning-independent),
-SGD on the driver. The loss trajectory is replayed bit-for-bit by the
-independent twin (``plans/train_oracle._tabnet_head_losses``).
+SGD on the driver. The head is the engine's one decision head: the
+per-row loss and residual are ``training.head_loss``, the prediction
+column is ``training.head_pred_udf``, and the Trompt encoder column is
+a ``training.kernel_udf``. The loss trajectory is replayed bit-for-bit
+by the independent twin (``plans/train_oracle._tabnet_head_losses``).
 
 Wiring: each head trainer assembles the root frame with
 ``training.assemble_training_frame`` and fits on ``(frame, meta)``;
@@ -31,6 +34,9 @@ from .training import (
     assemble_training_frame,
     dec9_udf,
     fold_dec9,
+    head_loss,
+    head_pred_udf,
+    kernel_udf,
     row_logits,
     split_metric,
 )
@@ -72,7 +78,6 @@ def _fit_linear_head(
     regression conventions); the per-split metric is
     :func:`~.training.split_metric`. Used by both the TabNet and Trompt
     heads — and replayed by their twins."""
-    regression = task == "regression"
     full = cut_lineage(
         frame.select("split", "label", enc.alias("x")), eager=True
     )
@@ -88,22 +93,7 @@ def _fit_linear_head(
 
         def grad_kernel(x, label):
             X = np.vstack(x.to_list())
-            if regression:
-                y = label.to_numpy(dtype=np.float64)
-                pred = row_logits(X, Wc, bc)[:, 0]
-                r = pred - y
-                loss = 0.5 * r * r
-                resid = r[:, None]
-            else:
-                y = label.to_numpy(dtype=np.int64)
-                logits = row_logits(X, Wc, bc)
-                logits = logits - logits.max(axis=1, keepdims=True)
-                ex = np.exp(logits)
-                P = ex / ex.sum(axis=1, keepdims=True)
-                rows_idx = np.arange(len(y))
-                loss = -np.log(P[rows_idx, y])
-                resid = P.copy()
-                resid[rows_idx, y] -= 1.0
+            loss, resid = head_loss(row_logits(X, Wc, bc), label, task)
             return np.concatenate(
                 [
                     loss[:, None],
@@ -122,21 +112,10 @@ def _fit_linear_head(
         W -= lr * (GW / n + l2 * W)
         b -= lr * (gb / n)
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    Wc, bc = W.copy(), b.copy()
-
-    def pred_fn(x):
-        X = np.vstack(x.to_list())
-        out = row_logits(X, Wc, bc)
-        if regression:
-            return pd.Series(out[:, 0])
-        return pd.Series(np.argmax(out, axis=1).astype(np.int64))
-
-    pred_fn.__annotations__ = {"x": pd.Series, "return": pd.Series}
-    pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
-    preds = full.select("split", "label", pudf("x").alias("pred"))
+    pred = head_pred_udf(
+        lambda x: row_logits(np.vstack(x.to_list()), W, b), task, "x"
+    )
+    preds = full.select("split", "label", pred.alias("pred"))
     return TrainResult(
         losses=losses, accuracy=split_metric(preds, task), params={"W": W, "b": b}
     )
@@ -172,7 +151,7 @@ def train_tabnet_head(
     )
     enc = tabnet_encode(
         tabnet_feature_expr(meta["n_codes"]), out_channels, num_layers,
-        feat_channels, attn_channels, seed=seed, exact=True,
+        feat_channels, attn_channels, seed=seed,
     )
     return _fit_linear_head(
         frame, enc, out_channels, meta["n_classes"], epochs, lr, l2, seed,
@@ -264,7 +243,6 @@ def train_trompt_head(
     section comment.
     ``task="regression"``: the k=1 half-squared-error head."""
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
     frame, meta = assemble_training_frame(
         tables, primary_keys, foreign_keys, target, cat_col, num_cols,
@@ -272,7 +250,7 @@ def train_trompt_head(
     )
     card = meta["n_codes"]
 
-    def enc_fn(code, nums):
+    def enc_kernel(code, nums):
         codes = code.to_numpy(dtype=np.int64)
         M = np.vstack(nums.to_list()).astype(np.float64)
         out = trompt_root_encoding_rows(
@@ -280,13 +258,7 @@ def train_trompt_head(
         )
         return pd.Series([row.tolist() for row in out])
 
-    enc_fn.__annotations__ = {
-        "code": pd.Series,
-        "nums": pd.Series,
-        "return": pd.Series,
-    }
-    udf = pandas_udf(enc_fn, "array<double>")
     return _fit_linear_head(
-        frame, udf("code", "nums"), ch, meta["n_classes"], epochs, lr, l2,
+        frame, kernel_udf(enc_kernel, "array<double>", "code", "nums"), ch, meta["n_classes"], epochs, lr, l2,
         seed, task=task,
     )

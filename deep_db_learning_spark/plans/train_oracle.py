@@ -294,7 +294,7 @@ def _tabnet_head_losses(
     task: str = "classification",
 ) -> list[float]:
     """Twin of ``plans.tabnet_head.train_tabnet_head``: DuckDB-assembled
-    root frame (:func:`_assemble`), the SHARED exact-mode
+    root frame (:func:`_assemble`), the SHARED fixed-order
     ``tabnet_forward`` kernel (frozen seeded encoder — the
     ``row_logits`` precedent), then an independent numpy/decimal replay
     of the decision-head GD: per-row dec9-quantized gradients summed as
@@ -315,7 +315,7 @@ def _tabnet_head_losses(
     tr = np.where(train_mask)[0]
     X = tabnet_forward(
         feats[tr], out_channels, num_layers, feat_channels, attn_channels,
-        seed=seed, exact=True,
+        seed=seed,
     )
     return _head_gd_losses(X, y_a[tr], k, epochs, lr, l2, seed, task=task)
 

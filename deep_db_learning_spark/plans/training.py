@@ -19,6 +19,14 @@ is huge. So the split is:
   decimal fold (:func:`fold_dec9`, keyed by code) sums everything. The
   stack levels, both decision heads and both full encoders fold through
   the same two helpers.
+- **one decision head**: every trainer ends in the reference's decoder
+  head (logits, then softmax cross-entropy, or half-squared error for
+  regression — ``nn/lightning/lightning_wrapper.py:40,50-55``).
+  :func:`head_loss` is its one per-row loss and residual,
+  :func:`head_pred_udf` its one Arrow prediction column (argmax class
+  or the k=1 output), and :func:`design_rows` the one in-kernel row
+  design ``[E[code] ++ arrays…]``; every Arrow kernel is built by
+  :func:`kernel_udf`.
 
 The full-batch classifier, the minibatch classifier and the regressor
 run ONE loop (:func:`_sgd_head`); full-batch is that loop with a single
@@ -37,13 +45,12 @@ column indexes the driver-side table inside the kernel — an in-memory
 broadcast join), *apply* the forward/backward math batch-vectorized,
 *update* the small parameter tables on the driver.
 
-Scale seam (documented, not stubbed): at cluster scale with LARGE
-parameter state (deep message passing, text encoders), replace the
-driver update with a data-parallel trainer — materialize the assembled
-feature frame to Parquet (``HeteroGraph.save`` checkpoint), then hand
-off to ``pyspark.ml.torch.distributor.TorchDistributor`` running DDP
-over those shards; the assembly plan here is unchanged. The
-``fit_fn`` hook receives ``(frame, meta)`` for exactly that hand-off.
+Scale note: at cluster scale with LARGE parameter state (deep message
+passing, text encoders), the driver update would give way to a
+data-parallel trainer over the materialized feature frame (e.g.
+``pyspark.ml.torch.distributor.TorchDistributor`` running DDP over its
+Parquet shards); :func:`assemble_training_frame` is the plan such a
+trainer would consume unchanged.
 """
 
 from __future__ import annotations
@@ -87,30 +94,18 @@ def _dec9_py(Decimal, x):
     return Decimal(repr(x)).quantize(_DEC9_EXP, rounding=ROUND_HALF_UP)
 
 
-def dec9_udf(kernel, *cols):
-    """The per-row gradient column every trainer folds: an Arrow UDF
-    over ``cols`` (names or Columns) whose numpy ``kernel`` gets one
-    ``pd.Series`` per column and returns an ``(n, glen)`` float matrix;
-    each component is emitted as ``array<decimal(30,9)>`` through
-    :func:`_dec9_py`. The rounding happens HERE, in Python, not as a
-    JVM cast: the JVM's double→decimal cast goes through
-    ``Double.toString``, which (pre-Ryu JDKs) occasionally emits a
-    non-shortest string that quantizes differently from Python's
-    ``repr`` at a scale-9 tie — one rounding rule on the engine and the
-    oracle twin. The columns ride in one struct, so one closure serves
-    any argument count. ``kernel`` closes over the caller's parameter
-    copies (a fresh closure per step ships the current values)."""
-    import pandas as pd
-
+def kernel_udf(kernel, returns: str, *cols):
+    """An Arrow UDF over ``cols`` (names or Columns) whose numpy
+    ``kernel`` gets one ``pd.Series`` per column and returns the
+    ``pd.Series`` result of type ``returns``. The columns ride in one
+    struct, so one closure serves any argument count — the one way the
+    trainers build an Arrow kernel."""
     from ..operators.kernels import _pandas_udf
 
     n = len(cols)
 
     def fn(v):
-        from decimal import Decimal
-
-        out = kernel(*[v[f"a{i}"] for i in range(n)])
-        return pd.Series([[_dec9_py(Decimal, x) for x in row] for row in out])
+        return kernel(*[v[f"a{i}"] for i in range(n)])
 
     arg = F.struct(
         *[
@@ -118,7 +113,30 @@ def dec9_udf(kernel, *cols):
             for i, c in enumerate(cols)
         ]
     )
-    return _pandas_udf(fn, f"array<{DECIMAL_TYPE}>", struct_input=True)(arg)
+    return _pandas_udf(fn, returns, struct_input=True)(arg)
+
+
+def dec9_udf(kernel, *cols):
+    """The per-row gradient column every trainer folds: a
+    :func:`kernel_udf` whose numpy ``kernel`` returns an ``(n, glen)``
+    float matrix; each component is emitted as
+    ``array<decimal(30,9)>`` through :func:`_dec9_py`. The rounding
+    happens HERE, in Python, not as a JVM cast: the JVM's
+    double→decimal cast goes through ``Double.toString``, which
+    (pre-Ryu JDKs) occasionally emits a non-shortest string that
+    quantizes differently from Python's ``repr`` at a scale-9 tie — one
+    rounding rule on the engine and the oracle twin. ``kernel`` closes
+    over the caller's parameter copies (a fresh closure per step ships
+    the current values)."""
+    import pandas as pd
+
+    def dec9_kernel(*series):
+        from decimal import Decimal
+
+        out = kernel(*series)
+        return pd.Series([[_dec9_py(Decimal, x) for x in row] for row in out])
+
+    return kernel_udf(dec9_kernel, f"array<{DECIMAL_TYPE}>", *cols)
 
 
 def _fold_query(g: DataFrame, by: str | None = None) -> DataFrame:
@@ -214,6 +232,62 @@ def row_logits(X, W, b):
     return logits
 
 
+def design_rows(E, code, *arrays):
+    """One Arrow batch's design rows ``X = [E[code] ++ arrays…]``: the
+    in-kernel embedding lookup (the driver table ``E`` indexed by the
+    ``code`` Series — an in-memory broadcast join) followed by each
+    ``array<double>`` Series stacked as a matrix."""
+    import numpy as np
+
+    return np.concatenate(
+        [E[code.to_numpy(dtype=np.int64)]] + [np.vstack(a.to_list()) for a in arrays],
+        axis=1,
+    )
+
+
+def head_loss(logits, y, task: str):
+    """The decision head's per-row loss and residual over ``(n, k)``
+    ``logits`` — the one copy every trainer runs. Classification:
+    max-shifted softmax cross-entropy against integer labels ``y``,
+    residual ``P − onehot(y)``. Regression (k=1): half-squared error
+    ``0.5·r²`` with ``r = logits[:, 0] − y`` and residual ``r``; torch's
+    ``MSELoss`` is mean ``r²``, so losses and gradients are exactly half
+    the reference's (absorbed into the learning rate). Returns
+    ``(loss_rows (n,), resid (n, k))``; the residual is dL/dlogits."""
+    import numpy as np
+
+    if task == "regression":
+        r = logits[:, 0] - np.asarray(y, dtype=np.float64)
+        return 0.5 * r * r, r[:, None]
+    y = np.asarray(y, dtype=np.int64)
+    shifted = logits - logits.max(axis=1, keepdims=True)
+    ex = np.exp(shifted)
+    P = ex / ex.sum(axis=1, keepdims=True)
+    rows = np.arange(len(y))
+    loss = -np.log(P[rows, y])
+    P[rows, y] -= 1.0
+    return loss, P
+
+
+def head_pred_udf(kernel, task: str, *cols):
+    """The decision head's prediction column: a :func:`kernel_udf`
+    whose ``kernel`` returns one Arrow batch's ``(n, k)`` logits. Emits
+    the argmax class as ``bigint`` (classification) or the k=1 output
+    as ``double`` (regression, standardized-label space)."""
+    import numpy as np
+    import pandas as pd
+
+    regression = task == "regression"
+
+    def pred_kernel(*series):
+        logits = kernel(*series)
+        if regression:
+            return pd.Series(logits[:, 0])
+        return pd.Series(np.argmax(logits, axis=1).astype(np.int64))
+
+    return kernel_udf(pred_kernel, "double" if regression else "bigint", *cols)
+
+
 def _gradient_pass(df, E, Wc, bc, dim, m, k, card, task="classification"):
     """ONE Spark job: per-row loss/residual/gradient via a
     :func:`dec9_udf` kernel over ``df(code, nums array<double>,
@@ -224,12 +298,7 @@ def _gradient_pass(df, E, Wc, bc, dim, m, k, card, task="classification"):
 
     ``task``: ``"classification"`` (softmax cross-entropy over k
     classes, int labels) or ``"regression"`` (k=1 linear output,
-    half-squared error ``0.5·r²``, double labels — the task of the
-    reference's ``MSELoss`` branch,
-    ``nn/lightning/lightning_wrapper.py:40,50-55``; note torch MSELoss
-    is mean ``r²``, so loss values and gradient scale here are exactly
-    HALF the reference's — absorbed into the learning rate, but the
-    trajectories are not numerically comparable at equal lr). Both emit
+    half-squared error, double labels) — :func:`head_loss`. Both emit
     the same ``[loss, resid(k), grad_W(dim+m × k)]`` row layout, so the
     fold, accumulation, and update algebra are shared."""
     import numpy as np
@@ -237,25 +306,9 @@ def _gradient_pass(df, E, Wc, bc, dim, m, k, card, task="classification"):
     glen = 1 + k + (dim + m) * k
 
     def grad_kernel(code, nums, label):
-        codes = code.to_numpy(dtype=np.int64)
-        X = np.concatenate([E[codes], np.vstack(nums.to_list())], axis=1)
-        nrows = len(codes)
-        if task == "regression":
-            y = label.to_numpy(dtype=np.float64)
-            pred = row_logits(X, Wc, bc)[:, 0]
-            r = pred - y
-            loss = 0.5 * r * r
-            resid = r[:, None]
-        else:
-            y = label.to_numpy(dtype=np.int64)
-            logits = row_logits(X, Wc, bc)
-            logits -= logits.max(axis=1, keepdims=True)
-            ex = np.exp(logits)
-            P = ex / ex.sum(axis=1, keepdims=True)
-            loss = -np.log(P[np.arange(nrows), y])
-            resid = P.copy()
-            resid[np.arange(nrows), y] -= 1.0
-        gw = (X[:, :, None] * resid[:, None, :]).reshape(nrows, -1)
+        X = design_rows(E, code, nums)
+        loss, resid = head_loss(row_logits(X, Wc, bc), label, task)
+        gw = (X[:, :, None] * resid[:, None, :]).reshape(len(X), -1)
         return np.concatenate([loss[:, None], resid, gw], axis=1)
 
     g = df.select("code", dec9_udf(grad_kernel, "code", "nums", "label").alias("g"))
@@ -344,7 +397,9 @@ def assemble_training_frame(
 
     Standardization stats come from exact decimal folds over the TRAIN
     split only (no test leakage) — deterministic under partitioning, so
-    the whole downstream trajectory is too.
+    the whole downstream trajectory is too. The same pass checks the
+    root code: ``cat_col`` cast to int indexes the embedding table, so
+    a NULL or negative code raises ``ValueError``.
 
     ``neighbor_budget``: cap each root's receptive field at ≤k sampled
     src rows per edge type — the reference ``HGTLoader`` fan-out budget
@@ -404,11 +459,13 @@ def assemble_training_frame(
     frame = cut_lineage(frame, eager=True)
 
     # ONE driver action: train-split standardization sums (exact
-    # decimal) + the code/label cardinalities
+    # decimal) + the code/label cardinalities + the code range check
     train_only = F.col("split") == "train"
     aggs = [
         F.count(F.when(train_only, 1)).alias("n"),
+        F.min("code").alias("min_code"),
         F.max("code").alias("max_code"),
+        F.count(F.when(F.col("code").isNull(), 1)).alias("null_codes"),
         F.max("label").alias("max_label"),
     ]
     if task == "regression":
@@ -430,6 +487,15 @@ def assemble_training_frame(
             )
         )
     st = frame.agg(*aggs).first()
+    # the code indexes the embedding table inside the Arrow kernels: a
+    # negative code would silently wrap to the table's last rows, and a
+    # NULL one fails there as an opaque IndexError
+    if st["null_codes"] or (st["min_code"] is not None and st["min_code"] < 0):
+        raise ValueError(
+            f"assemble_training_frame: cat_col {cat_col!r} must be a "
+            f"non-negative integer code on every root row ("
+            f"{st['null_codes']} NULL, min {st['min_code']})"
+        )
     n = st["n"]
     if not n:
         raise ValueError(
@@ -555,7 +621,13 @@ def _sgd_head(
                 W -= lr * (GW / n_b + l2 * W)
                 b -= lr * resid_tot / n_b
 
-        metric = _split_eval(frame, emb, W, b, task)
+        pred = head_pred_udf(
+            lambda code, nums: row_logits(design_rows(emb, code, nums), W, b),
+            task, "code", "nums",
+        )
+        metric = split_metric(
+            frame.select("split", "label", pred.alias("pred")), task
+        )
     finally:
         # a failed step must not leak the pinned frame
         train.unpersist()
@@ -578,16 +650,12 @@ def train_relational_classifier(
     lr: float = 0.5,
     l2: float = 1e-4,
     seed: int = 42,
-    fit_fn=None,
 ) -> TrainResult:
     """N20/N21/N24 trainable path: full-batch gradient descent on
     softmax cross-entropy over [cat-embedding ++ standardized numeric
     aggregates], with the embedding table AND the linear decoder both
     learned — :func:`_sgd_head` with one batch. See the module
-    docstring for the driver/Spark split and the
-    :class:`~pyspark.ml.torch.distributor.TorchDistributor` seam
-    (``fit_fn`` receives ``(frame, meta)`` and may take over training
-    entirely — e.g. DDP over the materialized Parquet shards).
+    docstring for the driver/Spark split.
 
     Determinism contract: parameter init is seeded numpy; per-epoch
     gradient sums are exact decimal folds (partitioning-independent);
@@ -598,36 +666,8 @@ def train_relational_classifier(
     frame, meta = assemble_training_frame(
         tables, primary_keys, foreign_keys, target, cat_col, num_cols, seed=seed
     )
-    if fit_fn is not None:
-        return fit_fn(frame, meta)
     return _sgd_head(
         frame, meta, dim, epochs, 1, lr, l2, seed, task="classification"
-    )
-
-
-def _split_eval(frame, emb, W, b, task: str) -> dict[str, float]:
-    """Per-split metric (:func:`split_metric`) of the 1-layer head with
-    the trained parameters: argmax prediction (classification) or the
-    linear-head prediction in standardized-label space (regression)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    regression = task == "regression"
-    Ef, Wf, bf = emb.copy(), W.copy(), b.copy()
-
-    def pred_fn(code, nums):
-        codes = code.to_numpy(dtype=np.int64)
-        X = np.concatenate([Ef[codes], np.vstack(nums.to_list())], axis=1)
-        out = row_logits(X, Wf, bf)
-        if regression:
-            return pd.Series(out[:, 0])
-        return pd.Series(np.argmax(out, axis=1).astype(np.int64))
-
-    pred_fn.__annotations__ = {"code": pd.Series, "nums": pd.Series, "return": pd.Series}
-    pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
-    return split_metric(
-        frame.select("split", "label", pudf("code", "nums").alias("pred")), task
     )
 
 
@@ -775,27 +815,14 @@ def two_layer_head_step(
     dim = emb.shape[1]
     m = nums.shape[1]
     X = np.concatenate([emb[codes], nums, hbar], axis=1)
-    nrows = len(codes)
     l2_term = 0.5 * l2 * (
         float((emb * emb).sum())
         + float((W1 * W1).sum())
         + float((W2 * W2).sum())
         + float(extra_l2)
     )
-    if task == "regression":
-        pred = (X @ W2 + b2)[:, 0]
-        r = pred - y
-        loss = float((0.5 * r * r).sum()) / nrows + l2_term
-        resid = r[:, None]
-    else:
-        logits = X @ W2 + b2
-        logits = logits - logits.max(axis=1, keepdims=True)
-        ex = np.exp(logits)
-        P = ex / ex.sum(axis=1, keepdims=True)
-        rows_idx = np.arange(nrows)
-        loss = float(-np.log(P[rows_idx, y]).sum()) / nrows + l2_term
-        resid = P.copy()
-        resid[rows_idx, y] -= 1.0
+    loss_rows, resid = head_loss(X @ W2 + b2, y, task)
+    loss = float(loss_rows.sum()) / len(codes) + l2_term
     GW2 = X.T @ resid
     gb2 = resid.sum(axis=0)
     demb = np.zeros_like(emb)

@@ -119,6 +119,26 @@ def test_embeddings_beat_static_baseline_on_cat_signal(signal_db):
     assert all(b < a for a, b in zip(trained.losses, trained.losses[1:]))
 
 
+def test_assemble_training_frame_rejects_bad_root_codes(spark):
+    """The root code indexes the embedding table inside the Arrow
+    kernels: a negative code would silently wrap to the table's last
+    rows and a NULL one would fail there as an opaque IndexError, so
+    the assembly's stats pass rejects either, naming ``cat_col``."""
+    for bad in (-1, None):
+        rows = [
+            (i, bad if i == 5 else i % 3, f"seg_{i % 2}", float(i))
+            for i in range(40)
+        ]
+        df = spark.createDataFrame(
+            rows, "id bigint, code_col int, seg string, x double"
+        )
+        with pytest.raises(ValueError, match="'code_col'"):
+            assemble_training_frame(
+                {"t": df}, {"t": ["id"]}, {"t": []},
+                target=("t", "seg"), cat_col="code_col", num_cols=("x",),
+            )
+
+
 def test_assemble_training_frame_shape(db):
     frame, meta = assemble_training_frame(
         db.tables, db.primary_keys, db.foreign_keys
@@ -299,17 +319,23 @@ def test_two_layer_descending_trend(db):
         assert seq[-1] < seq[0]
 
 
-def test_child_frame_cardinality_is_distinct_count_plus_one(spark):
+def test_child_frame_cardinality_is_distinct_count_plus_one(spark, db):
     """The layer cardinality comes from the stats pass as
     countDistinct(cat) + 1; dict_encode's code contract (NULL→0, sorted
     non-null values→1..n) makes that max(code) + 1, with NULLs present
-    and on an all-NULL column alike."""
+    and on an all-NULL column alike. Every keyed layer frame carries
+    ``(parent_key, child_key, code, x)``."""
     from pyspark.sql import functions as F
 
     from deep_db_learning_spark.plans.stack import (
+        THREE_LAYER_SPECS,
         EdgeLayerSpec,
         _assemble_child_frame,
     )
+
+    for spec in THREE_LAYER_SPECS:
+        of, _card = _assemble_child_frame(db.tables, spec, seed=42)
+        assert set(of.columns) == {"parent_key", "child_key", "code", "x"}
 
     spec = EdgeLayerSpec(
         table="kids", fk="pid", cat_col="cat", num_cols=("x",), key="id"
@@ -648,44 +674,12 @@ def test_trainer_root_generality_orders_target(db):
     assert "train" in res.accuracy and "test" in res.accuracy
 
 
-def test_stack_fit_fn_handoff(db):
-    """The stack's TorchDistributor seam (the 1-layer trainer's
-    contract, now at depth): fit_fn receives the assembled root frame,
-    the per-layer child frames, and the metadata, and takes over
-    training entirely."""
-    from deep_db_learning_spark.plans.stack import (
-        THREE_LAYER_SPECS,
-        train_relational_stack,
-    )
-
-    seen = {}
-
-    def fake_fit(frame, frames, meta):
-        seen["root_cols"] = set(frame.columns)
-        seen["n_layers"] = len(frames)
-        seen["layer_cols"] = [set(f.columns) for f in frames]
-        seen["n_classes"] = meta["n_classes"]
-        return "handed-off"
-
-    out = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys,
-        layers=THREE_LAYER_SPECS, seed=42, neighbor_budget=5,
-        fit_fn=fake_fit,
-    )
-    assert out == "handed-off"
-    assert seen["root_cols"] == {"node_id", "code", "nums", "label", "split"}
-    assert seen["n_layers"] == 2
-    for cols in seen["layer_cols"]:
-        assert {"parent_key", "child_key", "code", "x"} <= cols
-    assert seen["n_classes"] == 5
-
-
 def test_tabnet_head_trains_through_fit_fn(db):
-    """Ask r5 #5 — the TabNet decision head trains IN-ENGINE through
-    the stack trainer's fit_fn hand-off: frozen exact-mode encoder
-    (batch-independent fixed-order GEMMs), decimal-fold head GD. The
-    independent twin replays every epoch's loss bit-for-bit, the loss
-    descends, and the returned head parameters moved off their init."""
+    """Ask r5 #5 — the TabNet decision head trains IN-ENGINE on the
+    assembled root frame: frozen seeded encoder (batch-independent
+    fixed-order GEMMs), decimal-fold head GD. The independent twin
+    replays every epoch's loss bit-for-bit, the loss descends, and the
+    returned head parameters moved off their init."""
     import numpy as np
 
     from deep_db_learning_spark.plans.tabnet_head import (
@@ -711,14 +705,15 @@ def test_tabnet_head_trains_through_fit_fn(db):
     assert np.any(res.params["b"] != 0.0)
     assert "train" in res.accuracy and "test" in res.accuracy
     assert res.accuracy["train"] > 1.0 / k  # better than uniform guessing
-    # a fit_fn head scores its own way: no stack scored frame to reuse
+    # a head trainer scores its own way: no stack scored frame to reuse
     assert res.scored is None and res.scored_from is None
 
 
 def test_tabnet_exact_mode_batch_independent(spark):
-    """The exact-mode encoder is invariant to the Arrow batch split:
-    one partition vs eight give bitwise-identical encodings (the
-    property the head trainer's bit-pinned trajectory rests on)."""
+    """The encoder (every linear map a fixed-order accumulation) is
+    invariant to the Arrow batch split: one partition vs eight give
+    bitwise-identical encodings (the property the head trainer's
+    bit-pinned trajectory rests on)."""
     from pyspark.sql import functions as F
 
     from deep_db_learning_spark.operators.kernels import tabnet_encode
@@ -729,7 +724,7 @@ def test_tabnet_exact_mode_batch_independent(spark):
             "feat"
         ),
     )
-    enc = tabnet_encode(F.col("feat"), 6, num_layers=2, seed=7, exact=True)
+    enc = tabnet_encode(F.col("feat"), 6, num_layers=2, seed=7)
     one = {
         r["id"]: tuple(r["e"])
         for r in df.repartition(1).select("id", enc.alias("e")).collect()
@@ -742,8 +737,8 @@ def test_tabnet_exact_mode_batch_independent(spark):
 
 
 def test_trompt_head_trains_through_fit_fn(db):
-    """N23 upgrade (r6): the Trompt decision head trains IN-ENGINE
-    through the same fit_fn hand-off — frozen seeded prompt-bank
+    """N23 upgrade (r6): the Trompt decision head trains IN-ENGINE on
+    the same assembled root frame — frozen seeded prompt-bank
     encoder over per-column embeddings (per-row matmuls, shapes
     batch-independent), mean-pooled, decimal-fold head GD; the twin
     replays every epoch's loss bit-for-bit and the loss descends."""
