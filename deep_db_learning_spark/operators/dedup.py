@@ -32,7 +32,7 @@ needed. Signatures are fixed-width arrays → Tungsten-packed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import KNUTH, MERSENNE_31
@@ -246,6 +246,31 @@ def _banded_buckets(
     )
 
 
+def _bucket_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+    pair: tuple[str, str],
+    where: Column | None = None,
+) -> DataFrame:
+    """The one shape of an LSH candidate pair: the distinct id pairs
+    ``pair`` (left id, right id) of two banded frames ``(id_col, band,
+    bucket)`` whose rows share a ``(band, bucket)`` — one shuffle on
+    the bucket key, never a cross join. Any further columns of
+    ``right`` ride along into the pairs (the streaming crawl tags its
+    probe rows with their source); ``where`` filters the joined pairs
+    by the output names (``id_a < id_b``: a self-join's pairs, each
+    once)."""
+    extra = [c for c in right.columns if c not in (id_col, "band", "bucket")]
+    joined = left.select(F.col(id_col).alias(pair[0]), "band", "bucket").join(
+        right.select(F.col(id_col).alias(pair[1]), "band", "bucket", *extra),
+        ["band", "bucket"],
+    )
+    if where is not None:
+        joined = joined.filter(where)
+    return joined.select(*pair, *extra).distinct()
+
+
 def lsh_candidate_pairs(
     signed: DataFrame,
     id_col: str,
@@ -277,17 +302,9 @@ def lsh_candidate_pairs(
     # by the ContextCleaner at frame GC (cluster posture: reliable
     # checkpoint files need cleanCheckpoints on — see checkpoint.py)
     banded = cut_lineage(banded, eager=True)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .distinct()
+    return _bucket_pairs(
+        banded, banded, "doc", ("id_a", "id_b"),
+        where=F.col("id_a") < F.col("id_b"),
     )
 
 
@@ -312,28 +329,29 @@ def ngram_jaccard_pairs(
     6 decimals for cross-engine comparability.
     """
     if candidates is not None:
-        # shingle ONLY docs that appear in a candidate pair (semi-join
-        # first): after LSH pruning that's a tiny fraction of the corpus
-        # — the decisive reduction at scale — and materialize so both
-        # join sides share one computation. The candidate frame itself
-        # is consumed three times (two id projections + the verify
-        # join); without the lineage cut the LSH join chain runs three
-        # times — and since the result is lazy there is never a moment
-        # to unpersist, so a bare persist() would pin executor memory
-        # for the session (ContextCleaner reclaims checkpoint blocks
-        # instead).
+        # verify ONLY the candidate pairs, shingling each candidate doc
+        # ONCE: the union of the pair ids semi-joins ``df`` (a
+        # semi-join ignores repeats, so no id distinct), and the
+        # shingle frame is cut once for both verify join sides. The
+        # candidate frame feeds the id union and the verify join, so
+        # it is cut too (free on a frame already cut or mark_cut).
+        # Shingling inside the row joined to each pair instead
+        # shingles a doc in k pairs k times, reads ``df`` once per pair
+        # side and runs the shingle UDF on the candidate frame's
+        # partitioning: lsh_verify_pairs_t07 ran 15-20% slower that way
+        # at sf0.1 (851 candidate docs in 567 pairs, k ≤ 7). The cuts
+        # are checkpoints, not a bare persist(): the result is lazy,
+        # so there is never a moment to unpersist (ContextCleaner
+        # reclaims checkpoint blocks instead).
         candidates = cut_lineage(candidates, eager=True)
-        ids = (
-            candidates.select(F.col("id_a").alias("doc"))
-            .union(candidates.select(F.col("id_b").alias("doc")))
-            .distinct()
+        ids = candidates.select(F.col("id_a").alias("doc")).union(
+            candidates.select(F.col("id_b").alias("doc"))
         )
         needed = df.select(F.col(id_col).alias("doc"), text_col).join(
             ids, "doc", "leftsemi"
         )
-        sh = (
-            shingle_hashes_pandas(needed, text_col, shingle_k)
-            .select("doc", "sh", F.size("sh").alias("n_sh"))
+        sh = shingle_hashes_pandas(needed, text_col, shingle_k).select(
+            "doc", "sh", F.size("sh").alias("n_sh")
         )
         sh = cut_lineage(sh, eager=True)
         a = sh.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a"), F.col("n_sh").alias("n_a"))
@@ -495,10 +513,14 @@ def minhash_lsh_dedup(
     ``df`` (same ``num_perm``/``shingle_k``) — sign once, reuse across
     the intra-batch dedup and the store dedup
     (:func:`minhash_dedup_against`), the incremental-crawl shape.
-    ``candidates``: a precomputed :func:`lsh_candidate_pairs` frame of
-    ``signed`` (same ``bands``) — band once, reuse across consumers
-    (r14: the cross-corpus candidate set is a parity slice of this
-    same frame, see ``q_minhash_dedup``).
+    ``candidates``: a precomputed ``(id_a, id_b)`` frame with
+    ``id_a < id_b``, as :func:`lsh_candidate_pairs` returns (same
+    ``bands``) — band once, reuse across consumers (r14: the
+    cross-corpus candidate set is a parity slice of this same frame,
+    see ``q_minhash_dedup``). It may cover a superset of ``df``'s docs
+    (the crawl's within-batch slice covers the whole batch): a pair
+    with a side outside ``df`` is ignored. With ``candidates``,
+    ``df`` is neither signed nor probed and ``signed`` is unused.
 
     The result is lazy and not cut: a caller that feeds it to more
     than one action cuts it once (``cut_lineage`` or ``cut_count``),
@@ -509,30 +531,30 @@ def minhash_lsh_dedup(
     ~1% of ALL pairs as candidates (O(n²) verify — the scale killer);
     9-grams drop baseline similarity to ~0.03 while true near-dups stay
     ≥0.8, cutting candidates by ~100× for the same recall curve."""
-    if signed is None:
-        # a single input file = a single partition = one core doing all
-        # the signature math; spread it (at scale the scan is already
-        # split). Probed only on THIS branch, as in
-        # minhash_dedup_against: with precomputed signatures the
-        # per-row work is done, and under AQE the .rdd partition probe
-        # runs every exchange of a lazy input as hidden jobs.
-        par = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
-            df = df.repartition(par)
-        signed = minhash_signature(df, text_col, num_perm, shingle_k)
-    cand = (
-        candidates
-        if candidates is not None
-        else lsh_candidate_pairs(signed, id_col, bands=bands)
-    )
+    if candidates is None:
+        if signed is None:
+            # a single input file = a single partition = one core doing
+            # all the signature math; spread it (at scale the scan is
+            # already split). Probed only when signing HERE: with
+            # precomputed signatures or candidates the per-row work is
+            # done, and under AQE the .rdd partition probe runs every
+            # exchange of a lazy input as hidden jobs.
+            par = df.sparkSession.sparkContext.defaultParallelism
+            if df.rdd.getNumPartitions() < par:
+                df = df.repartition(par)
+            signed = minhash_signature(df, text_col, num_perm, shingle_k)
+        candidates = lsh_candidate_pairs(signed, id_col, bands=bands)
+    # the verify inner-joins both sides of each pair to the shingles
+    # of ``df``'s docs, so a pair with a side outside ``df`` (a doc an
+    # earlier pass removed) removes nothing. No cut on losers and no distinct: the anti-join
+    # is their only consumer and ignores repeats; a caller that fans the
+    # result out cuts it
     verified = ngram_jaccard_pairs(
-        df, text_col, id_col, shingle_k, threshold, candidates=cand
+        df, text_col, id_col, shingle_k, threshold, candidates=candidates
     )
-    # no cut on losers: the anti-join is its only consumer, and the
-    # candidate and shingle frames the verify join reads are already
-    # materialized above; a caller that fans the result out cuts it
-    losers = verified.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
+    return df.join(
+        verified.select(F.col("id_b").alias(id_col)), id_col, "left_anti"
+    )
 
 
 # ------------------------------------------------------------- simhash
@@ -896,7 +918,6 @@ def minhash_dedup_against(
     threshold: float = 0.7,
     new_signed: DataFrame | None = None,
     ref_signed: DataFrame | None = None,
-    ref_banded: DataFrame | None = None,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Cross-corpus dedup (r5): drop rows of ``new`` that near-duplicate
@@ -904,29 +925,27 @@ def minhash_dedup_against(
     shape (same contract as :func:`minhash_lsh_dedup`, but the kept set
     is decided against an external corpus instead of within one).
     ``new_signed``/``ref_signed``: precomputed signature frames
-    carrying ``(id, signature)``. ``ref_banded``: the store side's
-    PERSISTED dedup index — the :func:`minhash_band_index` frame
-    ``(id, band, bucket)`` — so each incoming batch computes only its
-    own signatures and joins the standing index (the store's TEXTS are
-    still read, but only for the candidate rows the verify semi-join
-    keeps).
+    carrying ``(id, signature)``.
 
     Same scale pipeline: both sides get MinHash signatures, the banded
     buckets join ACROSS corpora (one shuffle on the band key — never a
     cross join), candidate pairs verify with exact distinct-shingle
     Jaccard, and matched ``new`` ids anti-join away. The reference side
     is typically the big side: its banded projection is a narrow
-    (id, band, bucket) frame, so at 100 TB it can be precomputed once
-    and persisted as the store's dedup index while each incoming batch
-    computes only its own signatures.
+    (id, band, bucket) frame, so at 100 TB it is precomputed once and
+    persisted as the store's dedup index (:func:`minhash_band_index`)
+    while each incoming batch computes only its own signatures.
 
     ``candidates``: a precomputed ``(__new_id, __ref_id)`` candidate
-    frame — skips the banding + bucket join entirely. Pass this when
-    the caller already holds a candidate set over a superset corpus
-    (e.g. the intra-corpus :func:`lsh_candidate_pairs` frame sliced to
-    cross-corpus pairs: identical signatures band to identical buckets,
-    so the slice IS the cross-corpus candidate set — pinned in
-    tests/test_r14_opt.py)."""
+    frame — skips the signing, banding and bucket join entirely. Pass
+    this when the caller already holds a candidate set: the bucket
+    join of the batch's band rows against the persisted index (the
+    streaming crawl, ``streaming/crawl.py``), or the intra-corpus
+    :func:`lsh_candidate_pairs` frame sliced to cross-corpus pairs
+    (identical signatures band to identical buckets, so the slice IS
+    the cross-corpus candidate set — pinned in tests/test_r14_opt.py).
+    Either way the store's TEXTS are read only for the candidate rows
+    the verify join keeps."""
     from ..functions.text import char_shingles
 
     ref_id_col = ref_id_col or id_col
@@ -938,15 +957,13 @@ def minhash_dedup_against(
         # materialized candidate set pays nothing here
         cands = cut_lineage(candidates, eager=True)
     else:
-        # spread single-file scans (the minhash_lsh_dedup posture) and
-        # materialize each banding ONCE: the signature kernels would
-        # otherwise re-run on every consumer of the candidate frame
-        # (the two semi-joins, the verify join, and the final
-        # anti-join) — at sf0.1 that turned one signature pass into
-        # five. Probed only on THIS branch (r15): with precomputed
-        # candidates the heavy per-row work is gone, and under AQE the
-        # .rdd partition probe itself materializes any exchange in the
-        # input plan — a hidden job per probe.
+        # spread single-file scans (the minhash_lsh_dedup posture).
+        # Probed only on THIS branch (r15): with precomputed candidates
+        # the heavy per-row work is gone, and under AQE the .rdd
+        # partition probe itself materializes any exchange in the input
+        # plan — a hidden job per probe. No cut: the candidate frame
+        # has one consumer, the verify join, so the signature kernels
+        # run once.
         par = new.sparkSession.sparkContext.defaultParallelism
         if new.rdd.getNumPartitions() < par:
             new = new.repartition(par)
@@ -958,51 +975,51 @@ def minhash_dedup_against(
             )
         else:
             sig_new = new_signed.select(F.col(id_col), F.col("signature"))
-        b_new = _banded_buckets(sig_new, id_col, "signature", bands).withColumnRenamed(
-            "doc", "__new_id"
-        )
-        if ref_banded is not None:
-            b_ref = ref_banded.select(
-                F.col(ref_id_col).alias("__ref_id"), "band", "bucket"
+        if ref_signed is None:
+            sig_ref = minhash_signature(
+                reference.select(
+                    F.col(ref_id_col).alias("__ref_id"), F.col(text_col)
+                ),
+                text_col,
+                num_perm,
+                shingle_k,
             )
         else:
-            if ref_signed is None:
-                sig_ref = minhash_signature(
-                    reference.select(
-                        F.col(ref_id_col).alias("__ref_id"), F.col(text_col)
-                    ),
-                    text_col,
-                    num_perm,
-                    shingle_k,
-                )
-            else:
-                sig_ref = ref_signed.select(
-                    F.col(ref_id_col).alias("__ref_id"), F.col("signature")
-                )
-            b_ref = _banded_buckets(
-                sig_ref, "__ref_id", "signature", bands
-            ).withColumnRenamed("doc", "__ref_id")
-        # one cut at the fan-out point: the candidate frame feeds two
-        # semi-joins, the verify join, and (via matched) the anti-join —
-        # without it the whole signature+banding chain re-runs per consumer
-        cands = cut_lineage(
-            b_new.join(b_ref, ["band", "bucket"])
-            .select("__new_id", "__ref_id")
-            .distinct(),
-            eager=True,
+            sig_ref = ref_signed.select(
+                F.col(ref_id_col).alias("__ref_id"), F.col("signature")
+            )
+        cands = _bucket_pairs(
+            _banded_buckets(sig_new, id_col, "signature", bands),
+            _banded_buckets(sig_ref, "__ref_id", "signature", bands),
+            "doc",
+            ("__new_id", "__ref_id"),
         )
-    # verify only the candidates' texts: distinct-shingle Jaccard
-    new_sh = new.select(
-        F.col(id_col).alias("__new_id"),
-        char_shingles(text_col, shingle_k).alias("__sh_a"),
-    ).join(cands.select("__new_id").distinct(), "__new_id", "leftsemi")
-    ref_sh = reference.select(
-        F.col(ref_id_col).alias("__ref_id"),
-        char_shingles(text_col, shingle_k).alias("__sh_b"),
-    ).join(cands.select("__ref_id").distinct(), "__ref_id", "leftsemi")
+    # verify only the candidate pairs: join each pair to the texts of
+    # both sides and shingle inside the joined row (unrounded
+    # distinct-shingle Jaccard), so neither corpus is shingled outside
+    # the candidates and no id distinct, semi-join or shingle cut runs
+    # first. Each corpus is read once per pair side and a doc in k
+    # pairs is shingled k times (k <= 7 on the sf0.1 documents):
+    # char_shingles is a native expression, cheaper than the jobs the
+    # shingle-once shape of ngram_jaccard_pairs(candidates=) spends
     matched = (
-        cands.join(new_sh, "__new_id")
-        .join(ref_sh, "__ref_id")
+        cands.join(
+            new.select(
+                F.col(id_col).alias("__new_id"), F.col(text_col).alias("__t_a")
+            ),
+            "__new_id",
+        )
+        .join(
+            reference.select(
+                F.col(ref_id_col).alias("__ref_id"), F.col(text_col).alias("__t_b")
+            ),
+            "__ref_id",
+        )
+        .select(
+            "__new_id",
+            char_shingles("__t_a", shingle_k).alias("__sh_a"),
+            char_shingles("__t_b", shingle_k).alias("__sh_b"),
+        )
         .select(
             "__new_id",
             (
@@ -1012,11 +1029,11 @@ def minhash_dedup_against(
         )
         .filter(F.col("__j") >= threshold)
         .select(F.col("__new_id").alias(id_col))
-        .distinct()
     )
-    # no broadcast hint: matched is bounded by the BATCH size, which a
-    # big crawl batch can blow past the broadcast limit — AQE picks the
-    # strategy from the materialized candidate stats at runtime
+    # no distinct and no broadcast hint: the anti-join ignores repeats,
+    # and matched is bounded by the BATCH size, which a big crawl batch
+    # can blow past the broadcast limit — AQE picks the strategy from
+    # the materialized candidate stats at runtime
     return new.join(matched, id_col, "left_anti")
 
 
@@ -1027,26 +1044,20 @@ def minhash_band_index(
     num_perm: int = 64,
     bands: int = 16,
     shingle_k: int = 9,
-    signed: DataFrame | None = None,
 ) -> DataFrame:
     """The PERSISTABLE cross-corpus dedup index: the corpus's banded
     projection ``(id_col, band, bucket)`` — write it to parquet
-    (partitioned by ``band`` if liked) and hand it to
-    ``minhash_dedup_against(ref_banded=...)`` so each arriving crawl
-    batch signs only ITSELF and joins the standing index. At 100 TB
-    the index is ``bands`` rows of three scalars per document — a
-    narrow fraction of the corpus — and appends to it are the kept
-    batch's own banded rows (the same frame this returns for the
-    batch). ``signed``: a precomputed :func:`minhash_signature` frame
-    (sign once, band here AND dedup with the same signatures — the
-    streaming crawl shape)."""
-    if signed is not None:
-        sig = signed.select(F.col(id_col), F.col("signature"))
-    else:
-        sig = minhash_signature(
-            df.select(F.col(id_col), F.col(text_col)), text_col, num_perm,
-            shingle_k,
-        )
+    (partitioned by ``band`` if liked); each arriving crawl batch signs
+    and bands only ITSELF and joins its band rows to the standing index
+    on ``(band, bucket)``, and the joined id pairs are the
+    ``candidates`` of :func:`minhash_dedup_against` (the streaming
+    crawl, ``streaming/crawl.py``). At 100 TB the index is ``bands``
+    rows of three scalars per document — a narrow fraction of the
+    corpus — and appends to it are the kept batch's own banded rows
+    (the same frame this returns for the batch)."""
+    sig = minhash_signature(
+        df.select(F.col(id_col), F.col(text_col)), text_col, num_perm, shingle_k
+    )
     return _banded_buckets(sig, id_col, "signature", bands).withColumnRenamed(
         "doc", id_col
     )

@@ -26,6 +26,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.exact_agg import exact_sum
 from ..checkpoint import cut_lineage
@@ -116,11 +117,18 @@ class SnapshotStore:
                 out.append(int(name[1:]))
         return sorted(out)
 
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
+    def read(
+        self,
+        spark: SparkSession,
+        version: int | None = None,
+        schema: StructType | None = None,
+    ) -> DataFrame | None:
         """The latest snapshot, or — Delta-style time travel — a
         specific retained ``version``. Reading a vacuumed or
         never-committed version raises (silently returning the latest
-        would corrupt a replay-style consumer)."""
+        would corrupt a replay-style consumer). ``schema``: the
+        snapshot's schema when the caller knows it — skips Parquet
+        schema inference, a Spark job per read; default infers."""
         v = self.latest_version()
         if v is None:
             return None
@@ -131,7 +139,8 @@ class SnapshotStore:
                     f"{self.versions()}, latest committed: {v})"
                 )
             v = version
-        return spark.read.parquet(os.path.join(self.path, f"v{v}"))
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(os.path.join(self.path, f"v{v}"))
 
     def _claim(self, v: int, cur: int | None) -> None:
         """Conditional put of the ``_claim_v{v}`` token: succeed only if

@@ -30,6 +30,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _manifest_path(part_dir: str) -> str:
@@ -62,11 +63,18 @@ def live_parts(part_dir: str) -> list[str]:
     return parts
 
 
-def read_parts(spark: SparkSession, part_dir: str) -> DataFrame | None:
+def read_parts(
+    spark: SparkSession, part_dir: str, schema: StructType | None = None
+) -> DataFrame | None:
+    """The live directories as one frame (``None`` when there are
+    none). ``schema``: the parts' schema when the caller knows it —
+    skips Parquet schema inference, a Spark job per read; default
+    infers."""
     parts = live_parts(part_dir)
     if not parts:
         return None
-    return spark.read.parquet(*[os.path.join(part_dir, d) for d in parts])
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*[os.path.join(part_dir, d) for d in parts])
 
 
 def compact_parts(

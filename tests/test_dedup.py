@@ -245,11 +245,11 @@ def test_dedup_paragraphs_boilerplate_removal(spark, duck):
 
 
 def test_minhash_lsh_dedup_signed_runs_no_input_plan(spark, monkeypatch):
-    """With precomputed signatures, building minhash_lsh_dedup's result
-    runs none of the input's plan before the caller's action. The .rdd
-    partition probe, which under AQE executes every exchange of a lazy
-    input as hidden jobs, is taken only when the function signs the
-    input itself. The operator's own lineage cuts are stubbed out, so
+    """With precomputed signatures or candidates, building
+    minhash_lsh_dedup's result runs none of the input's plan before the
+    caller's action. The .rdd partition probe, which under AQE executes
+    every exchange of a lazy input as hidden jobs, is taken only when
+    the function signs the input itself. The operator's own lineage cuts are stubbed out, so
     any job fired while building is a hidden one."""
     from deep_db_learning_spark.checkpoint import cut_lineage
 
@@ -264,6 +264,7 @@ def test_minhash_lsh_dedup_signed_runs_no_input_plan(spark, monkeypatch):
         2, "doc_id"
     )
     signed = cut_lineage(dedup.minhash_signature(df, "text", num_perm=64))
+    cands = cut_lineage(dedup.lsh_candidate_pairs(signed, "doc_id"))
     monkeypatch.setattr(dedup, "cut_lineage", lambda frame, eager=True: frame)
     sc = spark.sparkContext
 
@@ -276,6 +277,10 @@ def test_minhash_lsh_dedup_signed_runs_no_input_plan(spark, monkeypatch):
         return kept, len(sc.statusTracker().getJobIdsForGroup(group))
 
     kept, n_jobs = build("lsh_dedup_signed_build", signed=signed)
+    assert n_jobs == 0
+    assert {r["doc_id"] for r in kept.collect()} == {1, 3}
+    # with candidates alone, df is neither signed nor probed
+    kept, n_jobs = build("lsh_dedup_cands_build", candidates=cands)
     assert n_jobs == 0
     assert {r["doc_id"] for r in kept.collect()} == {1, 3}
     # the input does carry an exchange that the probe would run
@@ -332,12 +337,13 @@ def test_minhash_dedup_against_reference(spark):
 
 
 def test_minhash_band_index_reuse(spark, tmp_path):
-    """The persisted dedup index (r6): minhash_dedup_against with a
-    parquet-round-tripped ref_banded index keeps exactly the same set
-    as the from-scratch run — the store is never re-signed."""
-    from pyspark.sql import functions as F
-
+    """The persisted dedup index (r6): the candidate pairs of a
+    bucket join of the new docs' band rows against a
+    parquet-round-tripped index, passed as minhash_dedup_against's
+    ``candidates``, keep exactly the same set as the from-scratch run —
+    the store is never re-signed."""
     from deep_db_learning_spark.operators.dedup import (
+        _bucket_pairs,
         minhash_band_index,
         minhash_dedup_against,
     )
@@ -367,10 +373,16 @@ def test_minhash_band_index_reuse(spark, tmp_path):
     )
     idx_path = str(tmp_path / "dedup_index")
     minhash_band_index(ref, "text", "doc_id").write.parquet(idx_path)
+    cands = _bucket_pairs(
+        minhash_band_index(new, "text", "doc_id"),
+        spark.read.parquet(idx_path),
+        "doc_id",
+        ("__new_id", "__ref_id"),
+    )
+    assert {tuple(r) for r in cands.collect()} >= {(1, 100), (2, 100)}
     via_index = sorted(
         r["doc_id"] for r in minhash_dedup_against(
-            new, ref, "text", "doc_id", threshold=0.7,
-            ref_banded=spark.read.parquet(idx_path),
+            new, ref, "text", "doc_id", threshold=0.7, candidates=cands,
         ).collect()
     )
     assert via_index == direct == [3]

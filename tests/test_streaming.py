@@ -769,19 +769,24 @@ def test_stream_dedup_into_band_index(spark, db, tmp_path):
 
 
 # jobs the third batch of test_stream_dedup_three_batches_jobs fires,
-# the stream's own included: 36 or 37 on local[4] (AQE plans the
-# survivors' verify chain as 13 or 14 jobs, run to run); re-running
-# that chain for each of its four consumers fires 73
-CRAWL_BATCH_MAX_JOBS = 37
+# the stream's own included: 22 on local[4], split as at perfbench's
+# bench scale (band rows 1, the one bucket join 3, the against-store
+# survivors 6, the within-batch shingle cut 4 and survivors 5, the kept
+# write and the index commit 3). Banding the batch three times and
+# verifying against the store through id distincts, semi-joins and a
+# shingle cut fired 36 or 37; re-running the against-store verify for
+# each of its consumers fired 73
+CRAWL_BATCH_MAX_JOBS = 22
 
 
 def test_stream_dedup_three_batches_jobs(spark, db, tmp_path):
     """Three micro-batches, one stream run each (the crawl's
     arrival shape): the third batch, which dedups against a non-empty
     index and then within itself, fires at most CRAWL_BATCH_MAX_JOBS
-    Spark jobs, because the survivors of the against-store pass are
-    materialized once for their four consumers; the kept corpus and
-    index equal the batch-mode composition."""
+    Spark jobs, because the batch is banded once, one bucket join
+    yields both candidate sets, and each frame with more than one
+    consumer is materialized once; the kept corpus and index equal the
+    batch-mode composition."""
     from pyspark.sql import functions as F
 
     from deep_db_learning_spark.checkpoint import cut_lineage
@@ -851,6 +856,120 @@ def test_stream_dedup_three_batches_jobs(spark, db, tmp_path):
     )
     got_idx = sorted(map(tuple, SnapshotStore(idx_dir).read(spark).collect()))
     assert got_idx == want_idx
+
+
+def _shingles_above_joins(df, marker: str) -> bool:
+    """True when ``df``'s optimized plan computes ``marker`` (a shingle
+    expression) somewhere, and every node that computes it has a join
+    below it: the shingles are taken from joined rows, never from a
+    side before the join."""
+    lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    depth = [len(line) - len(line.lstrip(" :+-")) for line in lines]
+    hits = [i for i, line in enumerate(lines) if marker in line]
+    for i in hits:
+        below = []
+        for k in range(i + 1, len(lines)):
+            if depth[k] <= depth[i]:
+                break
+            below.append(lines[k])
+        if not any("Join " in line for line in below):
+            return False
+    return bool(hits)
+
+
+def test_crawl_within_pair_of_a_store_loser_keeps_partner(
+    spark, tmp_path, monkeypatch
+):
+    """Two batches, six planted texts. Doc 2 near-duplicates the stored
+    doc 1 and doc 3 near-duplicates doc 2 but not doc 1, so the store
+    removes doc 2 and keeps doc 3; the within-batch pair (2, 3) then
+    must not remove doc 3, because its lower-id side is already gone.
+    Neither candidate verify shingles a doc outside the candidate
+    pairs: every shingle node has a join with the candidates below it
+    (the against-store verify shingles the rows joined to each pair,
+    the within verify the docs semi-joined to the pair ids)."""
+    from deep_db_learning_spark.operators import dedup
+    from deep_db_learning_spark.operators.dedup import (
+        minhash_dedup_against,
+        minhash_lsh_dedup,
+    )
+    from deep_db_learning_spark.streaming import (
+        SnapshotStore,
+        stream_dedup_into_band_index,
+    )
+    from deep_db_learning_spark.streaming.crawl import read_parts
+
+    words = (
+        "amber basil cedar delta ember fjord grove harbor island jasper "
+        "kettle lantern meadow nectar orchid pepper quartz river saddle "
+        "timber umbra velvet walnut xenon yarrow zephyr anchor beacon "
+        "canyon dune estuary falcon glacier heron inlet juniper kelp "
+        "lagoon marsh nimbus oasis pebble quill reef summit tundra upland "
+        "valley willow yonder zenith alder birch cobalt drift elm fern "
+        "granite hollow iris"
+    ).split()
+
+    def swap(text, lo, new):
+        w = text.split()
+        w[lo:lo + len(new)] = new
+        return " ".join(w)
+
+    # 9-char shingle Jaccard: (1, 2) 0.80, (2, 3) 0.81, (1, 3) 0.64
+    t1 = " ".join(words)
+    t2 = swap(t1, 8, ["copper", "lumen", "sparrow", "thistle", "bramble"])
+    t3 = swap(t2, 44, ["garnet", "osprey", "mallow", "tarn", "wicker"])
+    u4 = (
+        "columnar storage engines compress each column separately and "
+        "skip whole row groups using the min and max statistics"
+    )
+    u5 = (
+        "the night train crossed the frozen plateau while the passengers "
+        "slept under heavy wool blankets until the border station"
+    )
+    schema = "doc_id bigint, text string"
+    b1 = spark.createDataFrame([(1, t1), (4, u4)], schema)
+    b2 = spark.createDataFrame([(2, t2), (3, t3), (5, u5), (6, u4)], schema)
+
+    # the planted case is live: alone, the within-batch pass removes
+    # doc 3, and the store removes docs 2 and 6 but not doc 3
+    ids = lambda df: sorted(r["doc_id"] for r in df.collect())  # noqa: E731
+    assert ids(minhash_lsh_dedup(b2, "text", "doc_id")) == [2, 5, 6]
+    assert ids(minhash_dedup_against(b2, b1, "text", "doc_id")) == [3, 5]
+
+    in_dir = str(tmp_path / "in")
+    kept_dir = str(tmp_path / "kept")
+    idx_dir = str(tmp_path / "idx")
+    for b in (b1, b2):
+        b.coalesce(1).write.mode("append").parquet(in_dir)
+        q = stream_dedup_into_band_index(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir),
+            idx_dir, str(tmp_path / "ck"), kept_dir,
+        )
+        q.awaitTermination(180)
+        assert q.exception() is None
+    assert ids(read_parts(spark, kept_dir)) == [1, 3, 4, 5]
+    assert SnapshotStore(idx_dir).read(spark).count() == 16 * 4
+
+    # shingles sit above the join with the candidates in both verifies
+    cross = spark.createDataFrame(
+        [(2, 1), (3, 1), (6, 4)], "__new_id bigint, __ref_id bigint"
+    )
+    against = minhash_dedup_against(
+        b2, b1, "text", "doc_id", candidates=cross
+    )
+    assert ids(against) == [3, 5]
+    assert _shingles_above_joins(against, "array_distinct(CASE WHEN")
+    # the within verify shingles each candidate doc once, behind a
+    # cut: with the cuts stubbed out its whole plan is visible
+    within = spark.createDataFrame([(2, 3)], "id_a bigint, id_b bigint")
+    monkeypatch.setattr(dedup, "cut_lineage", lambda frame, eager=True: frame)
+    survivors = minhash_lsh_dedup(
+        against, "text", "doc_id", candidates=within
+    )
+    assert ids(survivors) == [3, 5]
+    assert _shingles_above_joins(survivors, "sh_fn(")
 
 
 def test_doc_index_stats_survive_crash_window(spark, db, tmp_path):
